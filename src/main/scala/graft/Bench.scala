@@ -49,13 +49,21 @@ object Bench {
     // were (sweep totals honest); `queries_self_median` below is the
     // like-for-like clock (raw − builds paid), and `artifact_builds`
     // names who paid for what.
+    //
+    // An entry that throws is REPORTED, not read as a fast success: its
+    // exception goes to stderr and its name to `failed_entries`. Its
+    // seconds stay in the maps so their keys match across rounds.
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     def sweep(): (Seq[(String, Double)], Map[String, Seq[(String, Double)]]) = {
       val builds = scala.collection.mutable.Map
         .empty[String, Seq[(String, Double)]]
       val times = names.map { case (name, fn) =>
         Caches.drainBuildLog() // drop strays (warmup, prior failures)
         val t0 = System.nanoTime()
-        try { exec(fn(spark, sfDir)) } catch { case _: Throwable => }
+        try exec(fn(spark, sfDir)) catch { case e: Throwable =>
+          System.err.println(s"bench: $name failed: $e")
+          failed += name
+        }
         val sec = (System.nanoTime() - t0) / 1e9
         val b = Caches.drainBuildLog()
         if (b.nonEmpty) builds(name) = b
@@ -174,7 +182,9 @@ object Bench {
       s""""artifact_builds":${artifactRows.map { case (a, (e, v)) =>
         s"\"" + a + "\":[\"" + e + "\"," + v + "]"
       }.mkString("{", ",", "}")},""" +
-      s""""queries_cold":${jmap(cold)},"sf":"$sfDir"}"""
+      s""""queries_cold":${jmap(cold)},""" +
+      s""""failed_entries":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+      s""""sf":"$sfDir"}"""
     // The driver records only a ~2000-char stdout TAIL, and the full
     // per-query line (131 entries × 4 maps) overflows it — four rounds
     // of BENCH_r{N}.json "parsed": null. So emit a COMPACT summary

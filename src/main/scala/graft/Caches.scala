@@ -74,7 +74,8 @@ object Caches {
 
   /** Memoized cached frame for (op key, dataset dir). `build` runs at
     * most once per key; its result is cached and materialized before
-    * `cleanup` runs (safe point to unpersist intermediates). */
+    * `cleanup` runs (safe point to unpersist intermediates); a build
+    * that throws runs `cleanup` before rethrowing. */
   def memo(key: String, dir: String)(build: => DataFrame)(
       cleanup: => Unit = ()): DataFrame =
     frames.getOrElseUpdate((key, dir), {
@@ -101,6 +102,7 @@ object Caches {
           val wall = (System.nanoTime() - t0) / 1e9
           stack.pop()
           if (!stack.isEmpty) stack.push(stack.pop() + wall)
+          try cleanup catch { case c: Throwable => e.addSuppressed(c) }
           throw e
       }
     })

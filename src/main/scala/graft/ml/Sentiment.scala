@@ -27,8 +27,6 @@ object Sentiment {
   val Negative = Seq("slow", "small", "filter")
 
   /** Marker-count polarity: +1 / 0(neutral) / -1. */
-  private[graft] def polarityCol(c: org.apache.spark.sql.Column) = polarity(c)
-
   private def polarity(c: org.apache.spark.sql.Column) = {
     def hits(words: Seq[String]) =
       size(filter(split(lower(c), " "), t => t.isInCollection(words)))

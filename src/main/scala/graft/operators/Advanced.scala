@@ -185,8 +185,7 @@ object Advanced {
     * user_id. A bot user with 10⁵ views and 10⁵ clicks would fan out
     * 10¹⁰ rows inside one join group, which is why the production
     * path is `q61FunnelFold` below: the same answer as a LINEAR
-    * per-user state-machine fold (SkewProbe drives it through the
-    * 30%-one-user regime). This ladder stays as the oracle-shaped
+    * per-user state-machine fold. This ladder stays as the oracle-shaped
     * formulation; both entries hash-check against the same SQL. */
   def q61WindowFunnel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -227,7 +226,7 @@ object Advanced {
     * latest view anchor + the Pareto frontier of open (view, click)
     * chains — see graft.streaming.FunnelLogic for the dominance
     * argument. A 30%-one-user stream costs that user's event count,
-    * not its views×clicks square (SkewProbe pins it). Deterministic
+    * not its views×clicks square. Deterministic
     * and exact: hash-checks against the SAME oracle SQL as q61, and
     * the streaming twin (FunnelStream.funnelUpgrades) folds the
     * identical step function per micro-batch. */

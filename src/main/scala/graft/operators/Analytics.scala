@@ -438,10 +438,12 @@ object Analytics {
     * exactly SQL ntile (boundary ranks are the cumulative tile sizes
     * c_j = j·floor(N/k) + min(j, N mod k); duplicates when N < k keep
     * their multiplicity). Returns the boundary rows in `ranks` order,
-    * with the columns of `df`. */
+    * with the columns of `df`; k = 1 has no boundaries. */
   private[graft] def ntileBoundaries(df: DataFrame, k: Int,
       scaffolding: scala.collection.mutable.ListBuffer[DataFrame],
       sort: org.apache.spark.sql.Column*): Seq[org.apache.spark.sql.Row] = {
+    require(k >= 1, s"ntileBoundaries: k must be >= 1, got $k")
+    if (k == 1) return Seq.empty
     val s = df.sparkSession
     import s.implicits._
     val outCols = df.columns
@@ -555,7 +557,14 @@ object Analytics {
               rfm.select($"monetary", $"o_custkey"), 4,
               scaffolding, $"monetary".desc, $"o_custkey")))),
           scala.concurrent.duration.Duration.Inf)
-        finally pool.shutdown()
+        finally {
+          // stop and wait out every axis before the scaffolding
+          // unpersist: after one axis fails, another still running
+          // would cache its range-partitioned frame after the cleanup
+          pool.shutdownNow()
+          pool.awaitTermination(Long.MaxValue,
+            java.util.concurrent.TimeUnit.NANOSECONDS)
+        }
       // tile = 1 + #{boundaries strictly before the row} under each
       // axis's total order (asc: v > bv; desc: v < bv; ties on key)
       def tile(v: org.apache.spark.sql.Column, desc: Boolean,

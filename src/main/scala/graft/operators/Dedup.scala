@@ -582,7 +582,7 @@ object Dedup {
       // plus a collect job — a too-big graph comes back truncated
       // (gate+1 rows) and falls through having collected only the
       // bounded prefix.
-      val gate = GraphLocal.maxEdges
+      val gate = GraphLocal.gates.graph
       if (gate > 0) {
         val lim = math.min(gate + 1, Int.MaxValue.toLong - 1).toInt
         val probe = edges

@@ -86,15 +86,8 @@ object Graph {
     * q53_pagerank's (same computation, forced through the distributed
     * regime; the loop materializes eagerly through its
     * localCheckpoints, so the gate override covers the whole build). */
-  def q53PagerankDist(s: SparkSession, dir: String): DataFrame = {
-    val prev = sys.props.get("graft.graphLocalMaxEdges")
-    sys.props("graft.graphLocalMaxEdges") = "0"
-    try q53Pagerank(s, dir)
-    finally prev match {
-      case Some(v) => sys.props("graft.graphLocalMaxEdges") = v
-      case None => sys.props.remove("graft.graphLocalMaxEdges")
-    }
-  }
+  def q53PagerankDist(s: SparkSession, dir: String): DataFrame =
+    GraphLocal.withGates(GraphLocal.Distributed)(q53Pagerank(s, dir))
 
   /** Q54: triangle census + global clustering coefficient over the
     * same threshold-2 co-purchase graph — the graph-health summary
@@ -1471,8 +1464,8 @@ object Graph {
     * sf0.001/0.01/0.1 and 14 at 20× vs the replaced Luby-MIS greedy
     * schedule's 29/9/4 and 134 (§6.15; per-round Spark job scheduling
     * is the 20× wall-clock, so rounds ARE the cost). Returns (colored
-    * nodes, rounds used) — separated from the sweeps so LpaProbe can
-    * time/count it.
+    * nodes, rounds used) — separated from the sweeps so specs can
+    * drive it (Round12Spec).
     *
     * Per-round history kept from the Luby-era experiments (§6.15):
     * frontier semi-joins restricting the edge joins to active sets
@@ -1628,7 +1621,7 @@ object Graph {
 
   /** Executed (non-skipped) sweep steps across all semiSyncLabels
     * runs — observability for the pending-class skip (Round12Spec
-    * asserts skipping actually happens; LpaProbe reports it). */
+    * asserts skipping actually happens). */
   private[graft] val lpaSweepSteps = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** q84's engine over a symmetric edge list: returns (node, lbl)
@@ -2036,11 +2029,8 @@ object Graph {
     * jobs. */
   private[graft] def louvainMoves(edges: DataFrame, labeled: DataFrame,
       rounds: Int = LouvainRounds,
-      stepProbe: (Int, Int, DataFrame) => Unit = null,
-      gainProbe: (Int, Int, DataFrame) => Unit = null,
       colorBudget: Int = 0,
       earlyExit: Boolean = true,
-      movedProbe: (Int, Int, Long) => Unit = null,
       freshTot: Boolean = true): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
@@ -2048,16 +2038,15 @@ object Graph {
       .agg(count(lit(1)).as("s")).cache()
     val m2 = edges.count() // |e| = 2m: one scalar, the only driver value
     val out = louvainMovesW(edges.withColumn("w", lit(1L)), deg, m2,
-      labeled, rounds, freshTot, stepProbe, gainProbe,
-      colorBudget, earlyExit, movedProbe)
+      labeled, rounds, freshTot, colorBudget, earlyExit)
     deg.unpersist()
     out
   }
 
   /** Executed (non-skipped) Louvain class steps across all
     * louvainMovesW runs — observability for the zero-move early exit
-    * (Round13Spec asserts exiting actually happens; probes report
-    * it), the lpaSweepSteps pattern. */
+    * (Round13Spec asserts exiting actually happens), the
+    * lpaSweepSteps pattern. */
   private[graft] val louvainMoveSteps = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** GRAPH-SIZED LOOP WIDTH (round 13 — the d6 discipline, one place
@@ -2099,23 +2088,15 @@ object Graph {
     * whose coloring exceeds the budget would make the engine run
     * steps the oracle never replays, a silent divergence anywhere the
     * oracle is EVALUATED (the driver's sf0.01 gate; the spec SFs).
-    * Default is STRICT: raise. Engine-only runs beyond oracle
-    * coverage — the 20× scale probes, a production corpus — are
-    * legitimate (sweeping every class IS the operator's semantics;
-    * the oracle simply isn't replayed there) and opt out with
-    * -Dgraft.oracleBudgetStrict=0, which demotes the raise to a loud
-    * stderr warning. The check costs nothing: max(color) was already
-    * computed for the sweep schedule. */
+    * It always raises. The check costs nothing: max(color) was
+    * already computed for the sweep schedule. */
   private[graft] def checkColorBudget(op: String, nColors: Int,
       colorBudget: Int): Unit =
     if (colorBudget > 0 && nColors > colorBudget) {
       val msg = s"$op: coloring used $nColors classes > the oracle's " +
         s"unroll budget $colorBudget — raise the budget (and the " +
         "unrolled oracle with it) rather than diverge silently"
-      if (sys.props.get("graft.oracleBudgetStrict").contains("0"))
-        System.err.println(s"[graft] WARNING: $msg (non-strict: " +
-          "engine-only run beyond oracle coverage, proceeding)")
-      else throw new IllegalArgumentException(msg)
+      throw new IllegalArgumentException(msg)
     }
 
   /** The weighted move core (one recipe for both phases — the bandsOf
@@ -2130,11 +2111,8 @@ object Graph {
   private[graft] def louvainMovesW(edges: DataFrame, strength: DataFrame,
       m2w: Long, labeled: DataFrame, rounds: Int,
       freshTot: Boolean = false,
-      stepProbe: (Int, Int, DataFrame) => Unit = null,
-      gainProbe: (Int, Int, DataFrame) => Unit = null,
       colorBudget: Int = 0,
-      earlyExit: Boolean = true,
-      movedProbe: (Int, Int, Long) => Unit = null): DataFrame = {
+      earlyExit: Boolean = true): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
     val nColors = labeled.agg(coalesce(max($"color"), lit(0))).as[Int].head()
@@ -2194,7 +2172,6 @@ object Graph {
           .join(strength.select($"node".as("src"), $"s"), "src")
           .join(tot.select($"c_lbl".as("nl"), $"tot".as("totC")), "nl")
           .join(tot.select($"c_lbl".as("cur"), $"tot".as("totA")), "cur")
-        if (gainProbe != null) gainProbe(round, c, gains)
         val mv = gains
           .select($"src", $"nl", loud(gain).as("gain"))
           .filter($"gain" > 0)
@@ -2215,8 +2192,6 @@ object Graph {
         val stepMoved =
           Option(obs.get("moved")).map(_.asInstanceOf[Long]).getOrElse(0L)
         movedInRound += stepMoved
-        if (movedProbe != null) movedProbe(round, c, stepMoved)
-        if (stepProbe != null) stepProbe(round, c, lbl)
       }
       tot.unpersist()
       round += 1
@@ -2282,23 +2257,6 @@ object Graph {
     * independent of phase 1's. */
   val LouvainP2Rounds = 3
 
-  /** Driver gate for the phase-2 LOCAL ENDGAME (see LouvainLocal):
-    * the coarse level finishes locally when its CROSS-EDGE count — the
-    * collected payload, 24 B/edge ≈ 100 MB at the default 2²² — is at
-    * most this; beyond it the distributed weighted-move path runs
-    * (the 100 TB shape: a corpus whose phase-1 community graph is
-    * itself data-scale never collects). The default is sized to the
-    * published "coarse level fits on one node" bar (Grappolo switches
-    * at gigabytes; 100 MB is conservative for any driver this engine
-    * targets) — the r14 20× probe measured the cost of an undersized
-    * gate: 1.12M cross edges fell 7% past 2²⁰ and the distributed
-    * schedule billed 571.9 s where the local replay runs in seconds.
-    * `-Dgraft.louvainLocalMaxEdges=0` forces the distributed path
-    * (the spec equivalence harness). */
-  def LouvainLocalMaxEdges: Long =
-    sys.props.get("graft.louvainLocalMaxEdges").map(_.toLong)
-      .getOrElse(1L << 22)
-
   /** Q102: LOUVAIN PHASE 2 (coarsening) — the step that makes Louvain
     * MULTI-LEVEL (Blondel et al. 2008 §2): contract each phase-1
     * community to one supernode (cross-community directed weights
@@ -2347,9 +2305,17 @@ object Graph {
     // so finish the level locally — the SAME schedule, BigInt-exact,
     // spec-pinned bit-identical to the distributed path, which a
     // corpus beyond the gate still takes.
+    // Driver gate: the coarse level finishes locally when its cross-
+    // edge count — the collected payload, 24 B/edge ≈ 100 MB at 2²²,
+    // the published "coarse level fits on one node" bar — is under
+    // `gates.louvain`; beyond it (a corpus whose phase-1 community
+    // graph is itself data-scale) the distributed weighted moves run.
+    // Measured at 20× sf0.1, an undersized 2²⁰ gate sent 1.12M cross
+    // edges distributed for 571.9 s where the local replay takes
+    // seconds.
     val nCross = cross.count()
     val l2 =
-      if (nCross <= LouvainLocalMaxEdges) {
+      if (nCross <= GraphLocal.gates.louvain) {
         val ce = cross.select($"src", $"dst", $"w")
           .as[(Long, Long, Long)].collect()
         val st = strength.select($"node", $"s")
@@ -3126,7 +3092,7 @@ object Graph {
   /** Thinning probability (per mille) for `q98_truss_thinned`'s
     * support screen — p = 1/2 at the gate SFs (sparse supports: the
     * screen must not starve; recall measured by the spec). The 20×
-    * recall/time-vs-p curve (TrussThinProbe, §6.15) sets the scale
+    * recall/time-vs-p curve (SURVEY §6.15) sets the scale
     * expectations: lower p buys 2–8× wall-clock at sharply falling
     * recall — backbone extraction, not truss recovery. */
   val TrussThinP1000 = 500L
@@ -3313,8 +3279,8 @@ object Graph {
       val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
       // NOT locally gated (round 15, recorded negative result): a
       // DataSketches HLL union's estimate is FOLD-STRUCTURE- and
-      // ORDER-sensitive (graft.HllProbe: flat=592, two-level=585,
-      // reversed=586 for the same 600-item set), so no driver replay
+      // ORDER-sensitive (GraphLocalSpec: flat=592, two-level=585,
+      // reversed=586 for the same 600 singletons), so no driver replay
       // can be bit-identical to the distributed partial-agg tree —
       // the q86/q88/q94 local-endgame bar is unattainable here. The
       // loop instead sheds one job per round (the observe-metric
@@ -3356,7 +3322,7 @@ object Graph {
 
   /** The ANF sketch loop itself, returning the FINAL per-node state
     * alongside the per-hop totals — separated so the lgK wire/error
-    * accounting (spec + AnfWireProbe) can measure the serialized
+    * accounting (Round10Spec) can measure the serialized
     * sketch sizes the per-round shuffle actually carries. */
   private[graft] def anfLoop(edges: DataFrame, rounds: Int,
       lgK: Int): (DataFrame, Seq[Long]) = {
@@ -3765,34 +3731,6 @@ object Graph {
     hitsTop(e, HitsIters)
   }
 
-  /** The q99 kernel over an arbitrary bipartite (cust, part) edge
-    * list — iters exposed for the rounds+1 spec, edges for the
-    * constructed-graph replay spec. */
-  /** Node-count gate for the HITS broadcast regime: below this many
-    * nodes PER SIDE, the per-round score frames (cust or part keyed,
-    * two longs each) broadcast instead of shuffle-joining against the
-    * data-scale edge fact. 2²² nodes ≈ 100 MB collected — the same
-    * conservative fits-on-one-node bar as the Louvain local gate;
-    * beyond it the original shuffle path runs unchanged (the 100 TB
-    * shape: a billion-customer graph must never collect its rank
-    * vector). Override with -Dgraft.hitsBroadcastMaxNodes. */
-  private[graft] def hitsBroadcastMaxNodes: Long =
-    sys.props.get("graft.hitsBroadcastMaxNodes").map(_.toLong)
-      .getOrElse(1L << 22)
-
-  /** Edge-count gate for the HITS LOCAL endgame (the q102/Louvain
-    * fits-on-one-node discipline, round 14): a ≤2²²-edge bipartite
-    * graph is a ≤64 MB pair collect, and the 5 max-normalized rounds
-    * over it are millisecond work next to the ~12 driver-synchronized
-    * distributed actions they replace. The replay is bit-identical
-    * integer algebra (same sums, same div, same tie-breaks — spec'd
-    * local == forced-distributed); larger graphs take the broadcast
-    * or shuffle regime unchanged. -Dgraft.hitsLocalMaxEdges=0 forces
-    * the distributed path (the parity spec's lever). */
-  private[graft] def hitsLocalMaxEdges: Long =
-    sys.props.get("graft.hitsLocalMaxEdges").map(_.toLong)
-      .getOrElse(1L << 22)
-
   /** Driver-side replay of `hitsTop`'s rounds over a collected edge
     * list — EXACTLY the distributed algebra: per-side BIGINT sums,
     * one scalar max, x·Scale div max normalization (all values
@@ -3806,7 +3744,7 @@ object Graph {
     val rows = e.select($"cust", $"part").as[(Long, Long)].collect()
     require(rows.length.toLong <= Long.MaxValue / Scale / Scale,
       s"hits local endgame: ${rows.length} edges would overflow the " +
-        "Long fixed-point headroom - lower graft.hitsLocalMaxEdges")
+        "Long fixed-point headroom - lower the hitsLocal gate")
     val custs = rows.map(_._1).distinct
     val parts = rows.map(_._2).distinct
     val cIdx = custs.zipWithIndex.toMap
@@ -3836,12 +3774,23 @@ object Graph {
       .orderBy($"role", $"score".desc, $"node")
   }
 
+  /** The q99 kernel over an arbitrary bipartite (cust, part) edge
+    * list — iters exposed for the rounds+1 spec, edges for the
+    * constructed-graph replay spec. */
   private[graft] def hitsTop(edges: DataFrame, iters: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
     val e = edges.cache()
+    // LOCAL endgame (round 14, the q102/Louvain fits-on-one-node
+    // discipline): a graph under `gates.hitsLocal` is a ≤64 MB pair
+    // collect at the default, and the max-normalized rounds over it
+    // are millisecond work next to the ~12 driver-synchronized actions
+    // they replace — bit-identical integer algebra (OptR14Spec pins
+    // local == forced-distributed); larger graphs keep the broadcast
+    // or shuffle regime below.
+    val g = GraphLocal.gates
     val nEdges = e.count()
-    if (nEdges > 0 && nEdges <= hitsLocalMaxEdges) {
+    if (nEdges > 0 && nEdges <= g.hitsLocal) {
       val out = hitsLocalTop(e, iters)
       e.unpersist()
       return out
@@ -3871,13 +3820,16 @@ object Graph {
     // partitioned data, zero data-scale exchanges. The algebra is
     // bit-identical (same integer sums over the same groups, any
     // partitioning), so the oracle hash is unchanged. Beyond the gate
-    // the original shuffle loop runs as before.
+    // the original shuffle loop runs as before. The node gate
+    // (`gates.hitsBroadcast` nodes PER SIDE, ≈ 100 MB of two-long score
+    // rows at the default) keeps a billion-customer graph from ever
+    // collecting its rank vector.
     val nCust = hub.count()
     val nPart =
-      if (nCust <= hitsBroadcastMaxNodes)
+      if (nCust <= g.hitsBroadcast)
         e.select($"part").distinct().count()
       else Long.MaxValue
-    val bcast = nCust <= hitsBroadcastMaxNodes && nPart <= hitsBroadcastMaxNodes
+    val bcast = nCust <= g.hitsBroadcast && nPart <= g.hitsBroadcast
     val (eByCust, eByPart) =
       if (bcast) (e.repartition($"cust").cache(), e.repartition($"part").cache())
       else (e, e)

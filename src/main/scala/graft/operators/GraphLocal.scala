@@ -3,27 +3,53 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.DynamicVariable
+
 /** LOCAL ENDGAME for the co-purchase fixed-point family (round 14) —
   * the q102/Louvain fits-on-one-node discipline generalized: the
   * THRESHOLDED co-purchase pair list is metadata-scale by construction
   * (bounded by co-purchase breadth, not corpus size — 3.5k pairs at
-  * sf0.1, 2.39M at the 20× probe), while the loops over it were paying
+  * sf0.1, 2.39M at 20× sf0.1), while the loops over it were paying
   * 40–56 driver-synchronized jobs each for 5–6 rounds of integer
-  * algebra. Below `graft.graphLocalMaxEdges` (default 2²² directed
-  * pairs ≈ 100 MB collected, the Louvain bar) each loop replays
-  * driver-side with BIT-IDENTICAL integer arithmetic — same sums, same
-  * truncating `div` on non-negative operands, same tie-breaks — and
-  * `Math.*Exact` mirrors Spark 4's loud ANSI overflow behavior. The
-  * DATA-scale operator (the lineitem self-join building the pairs)
-  * stays distributed at every SF; beyond the gate the distributed
-  * loops run unchanged (OptR14Spec pins local == forced-distributed
-  * per entry; the sf0.01 oracle hash gates the local path directly).
+  * algebra. Below `MaxEdges` (2²² directed pairs ≈ 100 MB collected,
+  * the Louvain bar) each loop replays driver-side with BIT-IDENTICAL
+  * integer arithmetic — same sums, same truncating `div` on
+  * non-negative operands, same tie-breaks — and `Math.*Exact` mirrors
+  * Spark 4's loud ANSI overflow behavior. The DATA-scale operator (the
+  * lineitem self-join building the pairs) stays distributed at every
+  * SF; beyond the gate the distributed loops run unchanged (OptR14Spec
+  * pins local == forced-distributed per entry; the sf0.01 oracle hash
+  * gates the local path directly).
   */
 object GraphLocal {
 
-  def maxEdges: Long =
-    sys.props.get("graft.graphLocalMaxEdges").map(_.toLong)
-      .getOrElse(1L << 22)
+  /** The one driver-local endgame bar: 2²² edges ≈ 100 MB collected.
+    * Every size gate (co-purchase family, Louvain phase 2, HITS local
+    * and broadcast, the spectral solve) defaults to it, and nothing
+    * outside the program can change it. */
+  val MaxEdges: Long = 1L << 22
+
+  /** The size gates the graph operators consult on every call. A gate
+    * of 0 forces that family's distributed path; only `withGates`
+    * installs anything but the defaults. */
+  final case class Gates(
+      graph: Long = MaxEdges,
+      louvain: Long = MaxEdges,
+      hitsLocal: Long = MaxEdges,
+      hitsBroadcast: Long = MaxEdges)
+
+  /** Gates forcing every gated family onto its distributed path. */
+  val Distributed: Gates = Gates(0L, 0L, 0L, 0L)
+
+  private val scoped = new DynamicVariable(Gates())
+
+  /** The gates in force on the calling thread. */
+  def gates: Gates = scoped.value
+
+  /** Runs `body` with `g` in force on the calling thread (and threads
+    * it starts); the previous gates are back when `body` returns or
+    * throws. Other threads keep seeing their own gates. */
+  def withGates[T](g: Gates)(body: => T): T = scoped.withValue(g)(body)
 
   /** Round 15: the ONE gate probe the whole local-endgame family
     * shares — a single bounded `limit(maxPairs+1).collect()` of the
@@ -35,16 +61,16 @@ object GraphLocal {
     * probe then collected only the bounded prefix, never the graph —
     * or when it is empty (empty-graph behavior stays on the
     * distributed path, as before). The gate re-checks against the
-    * CURRENT maxEdges on every call, so a spec lowering the prop after
-    * a collect still routes distributed. */
+    * CURRENT `gates.graph` on every call, so a `withGates` block
+    * entered after a collect still routes distributed. */
   private[graft] def halfPairsUnderGate(s: SparkSession,
       dir: String): Option[Array[(Long, Long, Long)]] = {
-    val gate = maxEdges
+    val gate = gates.graph
     if (gate <= 0) return None
     val (half, truncated) = graft.Caches.memoObj[(Array[(Long, Long, Long)], Boolean)](
         "graph_half_pairs", dir) {
       import s.implicits._
-      val maxPairs = maxEdges / 2
+      val maxPairs = gate / 2
       val lim = math.min(maxPairs + 1, Int.MaxValue.toLong - 1).toInt
       val arr = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
         .select($"pa", $"pb", $"n_orders".cast("long"))
@@ -562,8 +588,8 @@ object GraphLocal {
 
   // q97 is deliberately NOT here (round 15, recorded negative result):
   // a DataSketches HLL union's estimate depends on the fold structure
-  // and order of the aggregation tree (graft.HllProbe measures
-  // flat=592 / two-level=585 / reversed=586 on one 600-item set), so
+  // and order of the aggregation tree (GraphLocalSpec pins it: 600
+  // singletons fold to 592 flat / 585 two-level / 586 reversed), so
   // no driver-side replay can be bit-identical to the distributed
   // partial-agg tree the entry computes through. The distributed loop
   // keeps its per-round totals as observe metrics instead

@@ -23,7 +23,7 @@ package graft.operators
   * real supergraphs against the distributed operators, and the
   * oracle unroll checks either path unchanged.
   *
-  * AT 100 TB: the gate is `Graph.LouvainLocalMaxEdges` on the CROSS-
+  * AT 100 TB: the gate is `GraphLocal.gates.louvain` on the CROSS-
   * EDGE count (the collected payload) — a corpus whose phase-1
   * community graph exceeds it keeps the distributed weighted-move
   * path (that is the scale path; nothing here collects data-scale

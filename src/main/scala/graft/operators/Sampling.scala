@@ -113,7 +113,7 @@ object Sampling {
     import s.implicits._
     // memoized + scaffolding unpersisted after materialization: the
     // un-memoized form leaked one cached `kept` frame per invocation
-    // (repeated bench/ScaleProbe sweeps accumulate partitions
+    // (repeated bench sweeps accumulate partitions
     // Caches.clear never saw — the d9 leak class)
     val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
     graft.Caches.memo("p18_curate", dir) {

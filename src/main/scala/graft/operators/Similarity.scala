@@ -552,7 +552,7 @@ object Similarity {
   }
 
   /** S8: adaptive-probe EXACT top-k — the per-query serving knob the
-    * measured IVF recall/probes curve motivates (AnnProbe), with the
+    * measured IVF recall/probes curve motivates (Round10Spec), with the
     * guesswork removed: instead of a FIXED probe count trading recall
     * blind, each query probes its nearest cluster, reads its running
     * k-th best score, and then scans ONLY clusters whose best-case
@@ -878,11 +878,8 @@ object Similarity {
     flat
   }
 
-  // alternating rotation/codebook rounds; env override exists solely
-  // for the PqRecallProbe A/B (0 ⟹ identity rotation = plain
-  // residual-PQ, the pre-OPQ encoder)
-  val OpqIters: Int =
-    sys.env.get("SPARK_GRAFT_OPQ_ITERS").map(_.toInt).getOrElse(12)
+  // alternating rotation/codebook rounds
+  val OpqIters = 12
 
   /** OPQ rotation (Ge et al., "Optimized Product Quantization", CVPR
     * 2013, non-parametric solution): learn an orthogonal R that
@@ -1042,8 +1039,8 @@ object Similarity {
     * OPQ-ROTATED before encoding (`opqTrain`): R is orthogonal, so
     * (R q̂)·(R r) = q̂·r and the query just rotates once per probe.
     *
-    * Measured at sf0.1, full probes, 100 queries (PqRecallProbe; the
-    * round-4 5-query curve was 15-pair sample noise): residual
+    * Measured at sf0.1, full probes, 100 queries (the round-4
+    * 5-query curve was 15-pair sample noise): residual
     * encoding recalls 0.48/0.66/0.84/0.95 at depths 4/8/16/32, and
     * the OPQ rotation moves those by <±0.03 (within the ≈0.03
     * sampling SE) while cutting sample quantization MSE 7.6% — the
@@ -1051,7 +1048,8 @@ object Similarity {
     * subspace energy is already balanced; on real anisotropic
     * embedding corpora the rotation is what keeps 4-bit codes usable,
     * and the spec pins its two invariants (orthogonality, MSE ≤
-    * plain) deterministically. */
+    * plain) deterministically; SimilaritySpec also pins full-probe
+    * recall ≥ 0.6. */
   def pqIndex(s: SparkSession, dir: String): (DataFrame, Array[Double], Seq[Seq[Double]]) =
     pqIndexes.getOrElseUpdate(dir, {
       import s.implicits._

@@ -49,7 +49,7 @@ import org.apache.spark.sql.functions._
   * At 100 TB: the contraction and projection are the scale path
   * (edge-linear, label-bucketed); the eigensolve runs on the
   * community-count-sized level, gated loudly by
-  * `-Dgraft.spectralLocalMaxEdges` — a corpus whose FIRST coarse
+  * `GraphLocal.MaxEdges` — a corpus whose FIRST coarse
   * level exceeds the gate takes another coarsening level first
   * (q102's supergraph relabeling composes), exactly the published
   * multilevel remedy.
@@ -66,13 +66,6 @@ object SpectralCut {
     * If no prefix qualifies (a star-shaped level), the sweep falls
     * back to the unconstrained minimum — documented, deterministic. */
   val BalanceInv = 10L
-
-  // same bar as Graph.LouvainLocalMaxEdges (≈100 MB collected at
-  // 2²²); the power iteration costs PowerIters·|E| double ops —
-  // ~1.3G at the gate, seconds on a driver core
-  private[graft] def spectralLocalMaxEdges: Long =
-    sys.props.get("graft.spectralLocalMaxEdges").map(_.toLong)
-      .getOrElse(1L << 22)
 
   // (side by supernode label, cut weight, prefix volume, total volume)
   // — the bounded driver artifact, memoized per dataset for the specs
@@ -96,9 +89,11 @@ object SpectralCut {
     require(nCross > 0,
       "q104_spectral_cut: the labeling has no cross-community edges — " +
         "nothing to bisect")
-    require(nCross <= spectralLocalMaxEdges,
+    // the shared 2²² bar; the power iteration costs PowerIters·|E|
+    // double ops — ~1.3G at the gate, seconds on a driver core
+    require(nCross <= GraphLocal.MaxEdges,
       s"q104_spectral_cut: $nCross cross edges exceed the " +
-        s"$spectralLocalMaxEdges driver gate — run another coarsening " +
+        s"${GraphLocal.MaxEdges} driver gate — run another coarsening " +
         "level (q102) before the spectral solve, the multilevel remedy")
     val ce = cross.as[(Long, Long, Long)].collect()
     // FULL strengths (self term included, the q102 invariant): the

@@ -1,0 +1,39 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Operators and models take no process-global switches: the only JVM
+  * property or environment reads allowed under `operators/` and `ml/`
+  * are the deployment paths below. Size gates and tuning knobs are
+  * constants, scoped in code (`GraphLocal.withGates`) where a spec must
+  * force a regime. */
+class GlobalSwitchSpec extends AnyFunSuite {
+
+  private val Allowed = Set("java.io.tmpdir", "SPARK_GRAFT_MODEL_DIR")
+
+  private val Read =
+    """(sys\.props|sys\.env|System\.(getProperty|setProperty|getenv))[^"\n]*("([^"]*)")?""".r
+
+  private def sources(dir: String): Seq[Path] = {
+    val root = Paths.get("src/main/scala/graft", dir)
+    assert(Files.isDirectory(root), s"$root not found (run from the repo root)")
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+  }
+
+  test("operators and ml read no JVM property or env var but the deployment paths") {
+    val files = sources("operators") ++ sources("ml")
+    assert(files.nonEmpty)
+    val offending = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      m <- Read.findAllMatchIn(line)
+      if !Option(m.group(4)).exists(Allowed)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
+  }
+}

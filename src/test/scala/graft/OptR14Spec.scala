@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.GraphLocal
+
 /** Optimization round 14: every plan-shape change must be
   * result-identical to the path it replaces — the q102 discipline
   * applied to this round's reworked operators. */
@@ -16,16 +18,10 @@ class OptR14Spec extends GraftSpecBase {
 
   test("q99: local endgame == broadcast regime == shuffle path, bit-identical") {
     val local = q99Rows()
-    sys.props("graft.hitsLocalMaxEdges") = "0"
-    val bcast = try q99Rows()
-      finally sys.props.remove("graft.hitsLocalMaxEdges")
+    val bcast = GraphLocal.withGates(GraphLocal.Gates(hitsLocal = 0L))(q99Rows())
     assert(local == bcast, "q99 local endgame diverged from broadcast regime")
-    sys.props("graft.hitsLocalMaxEdges") = "0"
-    sys.props("graft.hitsBroadcastMaxNodes") = "0"
-    val shuffle = try q99Rows() finally {
-      sys.props.remove("graft.hitsLocalMaxEdges")
-      sys.props.remove("graft.hitsBroadcastMaxNodes")
-    }
+    val shuffle = GraphLocal.withGates(
+      GraphLocal.Gates(hitsLocal = 0L, hitsBroadcast = 0L))(q99Rows())
     assert(local == shuffle, "q99 local endgame diverged from shuffle path")
   }
 
@@ -45,9 +41,7 @@ class OptR14Spec extends GraftSpecBase {
       "q82" -> (() => operators.Graph.q82Harmonic(spark, sf)))
     entries.foreach { case (name, fn) =>
       val local = rowsOf(fn())
-      sys.props("graft.graphLocalMaxEdges") = "0"
-      val dist = try rowsOf(fn())
-        finally sys.props.remove("graft.graphLocalMaxEdges")
+      val dist = GraphLocal.withGates(GraphLocal.Gates(graph = 0L))(rowsOf(fn()))
       assert(local == dist, s"$name: local endgame diverged from the " +
         s"distributed path\n local=${local.take(5)}\n dist=${dist.take(5)}")
     }
@@ -64,9 +58,7 @@ class OptR14Spec extends GraftSpecBase {
         rowsOf(operators.Graph.q101Louvain(spark, sf)))
     }
     val local = runAll()
-    sys.props("graft.graphLocalMaxEdges") = "0"
-    val dist = try runAll()
-      finally sys.props.remove("graft.graphLocalMaxEdges")
+    val dist = GraphLocal.withGates(GraphLocal.Gates(graph = 0L))(runAll())
     Caches.clear()
     Seq("q84", "q100", "q101").zipWithIndex.foreach { case (name, i) =>
       assert(local(i) == dist(i),

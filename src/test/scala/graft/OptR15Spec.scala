@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.GraphLocal
+
 /** Optimization round 15: every local endgame added this round must be
   * result-identical to the distributed path it gates — the q102/r14
   * discipline applied to the remaining iterative stragglers
@@ -15,9 +17,7 @@ class OptR15Spec extends GraftSpecBase {
     Caches.clear()
     val local = rowsOf(fn())
     Caches.clear()
-    sys.props("graft.graphLocalMaxEdges") = "0"
-    val dist = try rowsOf(fn())
-      finally sys.props.remove("graft.graphLocalMaxEdges")
+    val dist = GraphLocal.withGates(GraphLocal.Gates(graph = 0L))(rowsOf(fn()))
     Caches.clear()
     assert(local == dist, s"$name: local endgame diverged from the " +
       s"distributed path\n local=${local.take(5)}\n dist=${dist.take(5)}")
@@ -52,10 +52,10 @@ class OptR15Spec extends GraftSpecBase {
     val gated = operators.Graph.q76CoreNumbers(spark, sf, kMax = 2, rounds = 3)
       .collect().map(_.toString).toSeq
     Caches.clear()
-    sys.props("graft.graphLocalMaxEdges") = "0"
-    val dist = try operators.Graph.q76CoreNumbers(spark, sf, kMax = 2, rounds = 3)
+    val dist = GraphLocal.withGates(GraphLocal.Gates(graph = 0L)) {
+      operators.Graph.q76CoreNumbers(spark, sf, kMax = 2, rounds = 3)
         .collect().map(_.toString).toSeq
-      finally sys.props.remove("graft.graphLocalMaxEdges")
+    }
     Caches.clear()
     assert(gated == dist)
   }

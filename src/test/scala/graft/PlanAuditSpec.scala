@@ -524,9 +524,8 @@ class PlanAuditSpec extends GraftSpecBase {
     // registry entry returns a driver-computed table at spec SFs
     // (parity spec'd in OptR14Spec); the shape contract here is the
     // beyond-gate path's
-    sys.props("graft.graphLocalMaxEdges") = "0"
-    val df = try operators.Graph.q100Modularity(spark, sf)
-      finally sys.props.remove("graft.graphLocalMaxEdges")
+    val df = operators.GraphLocal.withGates(operators.GraphLocal.Gates(graph = 0L))(
+      operators.Graph.q100Modularity(spark, sf))
     df.collect() // force AQE final plan
     val p = df.queryExecution.executedPlan.toString
     // edge×label scoring must key on the node ids, never loop

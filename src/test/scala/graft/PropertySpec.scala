@@ -148,6 +148,48 @@ class PropertySpec extends GraftSpecBase {
     }
   }
 
+  test("ntileBoundaries: descending order equals window ntile over (v desc, key)") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val rnd = new scala.util.Random(4949)
+    // q49's frequency/monetary axes: a descending value with an
+    // ascending key tie-break; a boundary precedes a row when its
+    // value is larger, or equal with a smaller key
+    Seq(3, 4, 9, 120, 400).foreach { n =>
+      val df = (1L to n.toLong).map(k => (rnd.nextInt(5).toLong, k))
+        .toDF("v", "key")
+      val scaff = scala.collection.mutable.ListBuffer
+        .empty[org.apache.spark.sql.DataFrame]
+      val bs = operators.Analytics.ntileBoundaries(df, 4, scaff,
+        $"v".desc, $"key")
+      val got = bs.map { b =>
+        when($"v" < lit(b.getLong(0)) ||
+          ($"v" === lit(b.getLong(0)) && $"key" > lit(b.getLong(1))),
+          1L).otherwise(0L)
+      }.foldLeft(lit(1L))(_ + _)
+      val mismatch = df
+        .withColumn("got", got)
+        .withColumn("want",
+          ntile(4).over(Window.orderBy($"v".desc, $"key")).cast("long"))
+        .filter($"got" =!= $"want")
+      assert(mismatch.count() == 0, s"N=$n")
+      scaff.foreach(_.unpersist())
+    }
+  }
+
+  test("ntileBoundaries: k = 1 has no boundaries, k < 1 is rejected") {
+    import spark.implicits._
+    val df = Seq((1L, 1L), (2L, 2L), (2L, 3L)).toDF("v", "key")
+    val scaff = scala.collection.mutable.ListBuffer
+      .empty[org.apache.spark.sql.DataFrame]
+    assert(operators.Analytics.ntileBoundaries(df, 1, scaff, $"v", $"key")
+      .isEmpty)
+    intercept[IllegalArgumentException] {
+      operators.Analytics.ntileBoundaries(df, 0, scaff, $"v", $"key")
+    }
+    assert(scaff.isEmpty, "k < 2 must not cache anything")
+  }
+
   test("tileOf equals window ntile for random sizes and bucket counts") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window

@@ -82,13 +82,13 @@ class Round14Spec extends GraftSpecBase {
   test("q102 registry: local endgame result == forced-distributed result at sf0.001") {
     val local = operators.Graph.q102LouvainCoarse(spark, sf)
       .as[(Long, Long, Long)].collect().sorted
-    sys.props("graft.louvainLocalMaxEdges") = "0"
-    try {
-      val dist = operators.Graph.q102LouvainCoarse(spark, sf)
+    val dist = operators.GraphLocal.withGates(
+        operators.GraphLocal.Gates(louvain = 0L)) {
+      operators.Graph.q102LouvainCoarse(spark, sf)
         .as[(Long, Long, Long)].collect().sorted
-      assert(local.sameElements(dist),
-        "q102 local endgame diverged from the distributed path")
-    } finally sys.props.remove("graft.louvainLocalMaxEdges")
+    }
+    assert(local.sameElements(dist),
+      "q102 local endgame diverged from the distributed path")
   }
 
   // ------------- m15 long-form registry surface -------------
@@ -391,10 +391,12 @@ class Round14Spec extends GraftSpecBase {
 
   test("memo: a throwing build leaves no orphaned timing frame behind") {
     Caches.drainBuildLog()
+    var cleaned = false
     intercept[RuntimeException] {
       Caches.memo("r14_boom", "x")(
-        throw new RuntimeException("boom"))()
+        throw new RuntimeException("boom"))({ cleaned = true })
     }
+    assert(cleaned, "a throwing build must still run its cleanup")
     // a later successful build on the same thread must log its own
     // wall time normally (the leaked-frame failure mode would feed it
     // into the orphan instead)
