@@ -74,16 +74,19 @@ object Recommender {
     * the model registry: a serving tier restarting against the same
     * ratings log skips the training head entirely (profiled at ~7 s of
     * m1's ~10.5 s cold path at sf0.1: ~1.8 s ratings build + ~5 s ALS
-    * fit) and pays only the load. Refits stay the trainer's job: a new
-    * ratings snapshot gets a new dataset dir, hence a new store key.
+    * fit) and pays only the load. Refits stay the trainer's job: the
+    * store key is the SHA-256 of the ratings sources' identity (orders
+    * and lineitem: path + per-file bytes and mtime), so a new ratings
+    * snapshot — a new dir, or rewritten tables in the same one — gets
+    * a new key and is fitted, never served a stale factorization.
     * NOTE the quantizer caveat: reloaded factors partition differently,
     * so the IVF clustering (initMode=random) differs from the
     * fit-path clustering — approximate serving output is registry-
     * equivalent, not bit-identical (the recall spec is the contract). */
   private[graft] def fitOrLoad(s: SparkSession, dir: String,
       store: Option[String]): org.apache.spark.ml.recommendation.ALSModel = {
-    val saved = store.map(b => b + "/als-" +
-      java.lang.Integer.toHexString(dir.hashCode))
+    val saved = store.map(b => b + "/als-" + Tables.identityDigest(
+      Tables.sourceIdentity(s, s"$dir/orders.parquet", s"$dir/lineitem.parquet")))
     saved.filter(p => new java.io.File(p, "metadata").exists()) match {
       case Some(p) => org.apache.spark.ml.recommendation.ALSModel.load(p)
       case None =>
@@ -144,6 +147,10 @@ object Recommender {
           .setFeaturesCol("features").setPredictionCol("cluster")
           .fit(factors))
       val assigned = km.transform(factors).select($"id", $"v", $"nrm", $"cluster").cache()
+      // the index is the only cached copy kept: once it is
+      // materialized the factor frame has no reader left
+      assigned.count()
+      factors.unpersist()
       (assigned, km.clusterCenters.map(_.toArray))
     })
 
@@ -512,9 +519,10 @@ object Recommender {
   def loadModel(s: SparkSession, dir: String, path: String): org.apache.spark.ml.recommendation.ALSModel = {
     val m = org.apache.spark.ml.recommendation.ALSModel.load(path)
     models.put(dir, m)
-    itemIdx.remove(dir) // the IVF index derives from the factors
-    packedIdx.remove((dir, false))
-    packedIdx.remove((dir, true))
+    // the explicit IVF index and its packed lists derive from the
+    // replaced factors: evict them and free their storage
+    itemIdx.remove(s"explicit|$dir").foreach(_._1.unpersist())
+    Seq(false, true).foreach(n => packedIdx.remove((s"explicit|$dir", n)).foreach(_.unpersist()))
     m
   }
 

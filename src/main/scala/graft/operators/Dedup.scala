@@ -886,9 +886,11 @@ object Dedup {
     * deliberately). A restart — new JVM or cleared registry — RELOADS
     * the layout instead of re-scanning the old corpus: the production
     * contract where old-data volume prices in at zero per increment
-    * (Round12Spec pins reload-without-rebuild). The layout key hashes
-    * the dataset dir AND the source table's mtime, so regenerated
-    * testdata can never serve a stale index. */
+    * (Round12Spec pins reload-without-rebuild). The layout is named by
+    * the SHA-256 of the documents table's source identity (path +
+    * per-file bytes and mtime) and its `_COMPLETE` marker records that
+    * identity, re-verified on load: regenerated testdata or another
+    * dataset in a shared /tmp can never serve a stale index. */
   private val incIndexReg = scala.collection.concurrent.TrieMap
     .empty[String, (DataFrame, DataFrame)]
   private[graft] val incIndexBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -900,13 +902,13 @@ object Dedup {
     incIndexReg.clear()
   }
 
+  /** Identity of the documents table a d11 layout is built from. */
+  private[graft] def d11SourceIdentity(s: SparkSession, dir: String): String =
+    Tables.sourceIdentity(s, s"$dir/documents.parquet")
+
   /** On-disk home of the d11 layout for a dataset. */
-  private[graft] def d11LayoutDir(dir: String): java.io.File = {
-    val src = new java.io.File(dir, "documents.parquet")
-    val token = Integer.toHexString((dir + ":" + src.lastModified).hashCode)
-    new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-d11-index/$token")
-  }
+  private[graft] def d11LayoutDir(s: SparkSession, dir: String): java.io.File =
+    Tables.artifactDir("graft-d11-index", d11SourceIdentity(s, dir))
 
   /** Signature + sorted shingle-hash frame for an arbitrary doc set:
     * x31 (the 2³¹−1 domain MinHashAgg permutes) drives the signature,
@@ -936,11 +938,12 @@ object Dedup {
   private[graft] def d11Index(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     incIndexReg.getOrElseUpdate(dir, {
       import s.implicits._
-      val root = d11LayoutDir(dir)
-      // _COMPLETE is written LAST: a crashed build leaves no marker
-      // and the next session rebuilds rather than serving a torn layout
-      val marker = new java.io.File(root, "_COMPLETE")
-      if (!marker.exists()) {
+      val identity = d11SourceIdentity(s, dir)
+      val root = Tables.artifactDir("graft-d11-index", identity)
+      // _COMPLETE is written LAST and names the source: a crashed build
+      // leaves no marker, a marker naming another source does not
+      // match, and either way the next session rebuilds
+      if (!Tables.completeFor(root, identity)) {
         incIndexBuilds.incrementAndGet()
         incSigFrame(Tables.documents(s, dir).filter($"doc_id" % 2 === 0))
           .write.mode("overwrite")
@@ -951,7 +954,7 @@ object Dedup {
           .withColumnRenamed("doc_id", "old_id")
           .write.mode("overwrite").partitionBy("band")
           .parquet(new java.io.File(root, "bands").getPath)
-        marker.createNewFile()
+        Tables.markComplete(root, identity)
       }
       val docIdx = s.read.parquet(new java.io.File(root, "sigs").getPath).cache()
       val bandIdx = s.read.parquet(new java.io.File(root, "bands").getPath)

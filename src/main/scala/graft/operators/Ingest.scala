@@ -21,13 +21,20 @@ object Ingest {
   private val staged =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  private def stage(key: String, dir: String)(write: String => Unit): String =
-    staged.getOrElseUpdate(s"$key:$dir", {
-      val tmp = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-        s"/graft-ingest/${Integer.toHexString(dir.hashCode)}/$key"
+  /** Stage `table` of `dir` under `key` once per session and source
+    * identity: the directory is named by the SHA-256 of the table's
+    * path + per-file bytes and mtime, so two datasets never share it
+    * and a rewritten table is staged afresh. */
+  private def stage(key: String, s: SparkSession, dir: String, table: String)(
+      write: String => Unit): String = {
+    val root = Tables.artifactDir("graft-ingest",
+      Tables.sourceIdentity(s, s"$dir/$table.parquet"))
+    staged.getOrElseUpdate(s"$key:$root", {
+      val tmp = new java.io.File(root, key).getPath
       write(tmp)
       tmp
     })
+  }
 
   val NationCsvSchema: StructType = StructType(Seq(
     StructField("n_nationkey", IntegerType),
@@ -39,7 +46,7 @@ object Ingest {
     * over the data at lake scale). */
   def i1CsvIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = stage("nation_csv", dir) { tmp =>
+    val path = stage("nation_csv", s, dir, "nation") { tmp =>
       Tables.nation(s, dir).select($"n_nationkey", $"n_name", $"n_regionkey")
         .write.mode("overwrite").option("header", "true").csv(tmp)
     }
@@ -58,7 +65,7 @@ object Ingest {
     * round-trippable representations), which the oracle hash proves. */
   def i2JsonIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = stage("supplier_json", dir) { tmp =>
+    val path = stage("supplier_json", s, dir, "supplier") { tmp =>
       Tables.supplier(s, dir)
         .select($"s_suppkey", $"s_name", $"s_nationkey", $"s_acctbal")
         .write.mode("overwrite").json(tmp)
@@ -74,7 +81,7 @@ object Ingest {
     * value-exact, doubles included. */
   def i3OrcIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = stage("supplier_orc", dir) { tmp =>
+    val path = stage("supplier_orc", s, dir, "supplier") { tmp =>
       Tables.supplier(s, dir)
         .select($"s_suppkey", $"s_name", $"s_nationkey", $"s_acctbal")
         .write.mode("overwrite").orc(tmp)
@@ -93,7 +100,7 @@ object Ingest {
     * pruning loses nothing. */
   def i4PartitionedIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = stage("customer_part", dir) { tmp =>
+    val path = stage("customer_part", s, dir, "customer") { tmp =>
       Tables.customer(s, dir)
         .select($"c_custkey", $"c_name", $"c_acctbal", $"c_mktsegment")
         .write.mode("overwrite").partitionBy("c_mktsegment").parquet(tmp)
@@ -115,7 +122,7 @@ object Ingest {
     * system, so this edge is for feeds, not for doubles. */
   def i5XmlIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = stage("nation_xml", dir) { tmp =>
+    val path = stage("nation_xml", s, dir, "nation") { tmp =>
       Tables.nation(s, dir).select($"n_nationkey", $"n_name", $"n_regionkey")
         .write.mode("overwrite").option("rowTag", "row").xml(tmp)
     }
@@ -138,7 +145,7 @@ object Ingest {
     * boundary). */
   def i6BinaryIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = stage("docs_bin", dir) { tmp =>
+    val path = stage("docs_bin", s, dir, "documents") { tmp =>
       new java.io.File(tmp).mkdirs()
       Tables.documents(s, dir).filter($"doc_id" < 100)
         .select($"doc_id", $"text")
@@ -177,7 +184,7 @@ object Ingest {
     * itself stays a plain pruned columnar scan. */
   def i7SchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = stage("supplier_evo", dir) { tmp =>
+    val path = stage("supplier_evo", s, dir, "supplier") { tmp =>
       val sup = Tables.supplier(s, dir)
       sup.filter($"s_suppkey" % 2 === 1).select($"s_suppkey", $"s_name")
         .write.mode("overwrite").parquet(tmp + "/v1")
@@ -218,7 +225,7 @@ object Ingest {
   val CorruptMod = 7L
   private[graft] def corruptStage(s: SparkSession, dir: String): String = {
     import s.implicits._
-    stage("supplier_corrupt_json", dir) { tmp =>
+    stage("supplier_corrupt_json", s, dir, "supplier") { tmp =>
       Tables.supplier(s, dir)
         .select($"s_suppkey",
           org.apache.spark.sql.functions.to_json(

@@ -675,34 +675,20 @@ object Similarity {
     knnGraphReg.clear()
   }
 
-  /** Identity of the embeddings table an s15 layout was built from:
-    * path + mtime + total byte size of its parquet parts. Written
-    * into the layout's `_COMPLETE` marker and re-verified on load —
-    * the 32-bit-hashCode keying this replaced (advisor r13) could
-    * collide across datasets in shared /tmp, or miss a regenerated
-    * table whose mtime was preserved, and silently serve the wrong
-    * adjacency. */
-  private[graft] def s15SourceIdentity(dir: String): String = {
-    val src = new java.io.File(dir, "embeddings.parquet")
-    val size =
-      if (src.isDirectory)
-        src.listFiles().filter(_.isFile).map(_.length).sum
-      else src.length
-    s"${src.getAbsolutePath}|mtime=${src.lastModified}|bytes=$size"
-  }
+  /** Identity of the embeddings table an s15 layout was built from
+    * (`Tables.sourceIdentity`: path + per-file bytes and mtime).
+    * Written into the layout's `_COMPLETE` marker and re-verified on
+    * load — the 32-bit-hashCode keying this replaced could collide
+    * across datasets in shared /tmp, or miss a regenerated table whose
+    * mtime was preserved, and silently serve the wrong adjacency. */
+  private[graft] def s15SourceIdentity(s: SparkSession, dir: String): String =
+    Tables.sourceIdentity(s, s"$dir/embeddings.parquet")
 
-  /** On-disk home of the s15 layout for a dataset — named by a
-    * 256-bit digest of the source identity (collision-proof, unlike
-    * a 32-bit hashCode), with the identity string itself stored in
-    * the `_COMPLETE` marker for positive verification on load. */
-  private[graft] def s15LayoutDir(dir: String): java.io.File = {
-    val id = s15SourceIdentity(dir)
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(id.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft-s15-graph/$digest")
-  }
+  /** On-disk home of the s15 layout for a dataset — named by the
+    * SHA-256 of the source identity, with the identity itself stored
+    * in the `_COMPLETE` marker for positive verification on load. */
+  private[graft] def s15LayoutDir(s: SparkSession, dir: String): java.io.File =
+    Tables.artifactDir("graft-s15-graph", s15SourceIdentity(s, dir))
 
   /** The s15 serving graph: `GraphAnnDegree`-NN edges (the s9 kernel)
     * SYMMETRIZED (reverse links added, NSW practice — Malkov et al.
@@ -718,18 +704,12 @@ object Similarity {
   private[graft] def knnGraphIndex(s: SparkSession, dir: String): DataFrame =
     knnGraphReg.getOrElseUpdate(dir, {
       import s.implicits._
-      val root = s15LayoutDir(dir)
-      val marker = new java.io.File(root, "_COMPLETE")
-      val identity = s15SourceIdentity(dir)
+      val identity = s15SourceIdentity(s, dir)
+      val root = Tables.artifactDir("graft-s15-graph", identity)
       // positive identity check: the marker must name THIS source
       // (path+mtime+size) — a digest collision or a marker from an
       // older build scheme triggers a rebuild, never a silent serve
-      val markerOk = marker.exists() && {
-        val recorded = new String(java.nio.file.Files
-          .readAllBytes(marker.toPath), "UTF-8").trim
-        recorded == identity
-      }
-      if (!markerOk) {
+      if (!Tables.completeFor(root, identity)) {
         knnGraphBuilds.incrementAndGet()
         val g = knnGraphEdges(s, dir, IvfProbes, GraphAnnDegree)
           .select($"q_id".as("src"), $"neighbor_id".as("dst"))
@@ -739,7 +719,7 @@ object Similarity {
           .sortWithinPartitions($"src", $"dst")
           .write.mode("overwrite")
           .parquet(new java.io.File(root, "edges").getPath)
-        java.nio.file.Files.write(marker.toPath, identity.getBytes("UTF-8"))
+        Tables.markComplete(root, identity)
       }
       val edges = s.read
         .parquet(new java.io.File(root, "edges").getPath).cache()

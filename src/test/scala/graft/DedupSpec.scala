@@ -11,6 +11,24 @@ class DedupSpec extends GraftSpecBase {
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
   }
 
+  test("d11 index: a _COMPLETE marker naming another source identity triggers a rebuild") {
+    val root = Dedup.d11LayoutDir(spark, sf)
+    Dedup.evictIncIndexMemo()
+    Dedup.d11Index(spark, sf) // a complete layout for this source on disk
+    Dedup.evictIncIndexMemo()
+    // the layout now claims to hold another dataset's index
+    Tables.markComplete(root, Tables.sourceIdentity(spark, s"$sf/embeddings.parquet"))
+    val b0 = Dedup.incIndexBuilds.get()
+    val (docIdx, _) = Dedup.d11Index(spark, sf)
+    assert(Dedup.incIndexBuilds.get() == b0 + 1, "served a layout built from another source")
+    assert(Tables.completeFor(root, Dedup.d11SourceIdentity(spark, sf)))
+    assert(docIdx.count() > 0)
+    // a marker naming this source reloads without a rebuild
+    Dedup.evictIncIndexMemo()
+    Dedup.d11Index(spark, sf)
+    assert(Dedup.incIndexBuilds.get() == b0 + 1)
+  }
+
   test("exact jaccard finds the planted near-dup pairs") {
     assert(exactPairs.nonEmpty, "expected planted near-dups at sf0.001")
   }

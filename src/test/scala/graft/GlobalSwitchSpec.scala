@@ -36,4 +36,20 @@ class GlobalSwitchSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
   }
+
+  // a 32-bit hashCode rendered as a path token: two datasets sharing a
+  // temp dir can collide on it and serve each other's artifacts
+  private val HashName =
+    """toHexString\([^\n]*\.hashCode|\.hashCode\)?\.toHexString""".r
+
+  test("on-disk artifacts are named by a source digest, never a 32-bit hashCode") {
+    val files = sources("operators") ++ sources("ml") :+
+      Paths.get("src/main/scala/graft/Tables.scala")
+    val offending = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if HashName.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
+  }
 }

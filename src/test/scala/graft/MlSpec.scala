@@ -157,10 +157,19 @@ class MlSpec extends GraftSpecBase {
     // reproduce it bit-for-bit (the approximate path rebuilds its IVF
     // index whose KMeans init depends on factor partitioning)
     val before1 = Recommender.m1AlsRecommendExact(spark, sf).collect().map(_.toSeq).toSeq
+    val (ivf0, _) = Recommender.itemIvf(spark, sf)
+    val packed0 = Recommender.itemIvfPacked(spark, sf, normalized = true)
     Recommender.saveModel(spark, sf, s"$tmp/als")
     Recommender.loadModel(spark, sf, s"$tmp/als")
     val after1 = Recommender.m1AlsRecommendExact(spark, sf).collect().map(_.toSeq).toSeq
     assert(after1 == before1)
+    // the IVF index derives from the replaced factors: it is rebuilt,
+    // and the evicted frames no longer hold storage
+    val (ivf1, _) = Recommender.itemIvf(spark, sf)
+    assert(!(ivf1 eq ivf0), "itemIvf kept serving the index of the old factors")
+    assert(ivf0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(!(Recommender.itemIvfPacked(spark, sf, normalized = true) eq packed0))
+    assert(packed0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     assert(Recommender.m1AlsRecommend(spark, sf).count() > 0)
     val before2 = Sentiment.m2Sentiment(spark, sf).collect().map(_.toSeq).toSeq
     Sentiment.saveModel(spark, sf, s"$tmp/sentiment")

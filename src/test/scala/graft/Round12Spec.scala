@@ -181,7 +181,7 @@ class Round12Spec extends GraftSpecBase {
     import operators.Dedup
     val dir = sf
     // cold start: no layout on disk, no in-session memo
-    deleteRec(Dedup.d11LayoutDir(dir))
+    deleteRec(Dedup.d11LayoutDir(spark, dir))
     Dedup.evictIncIndexMemo()
     val newIdx = Dedup.incSigFrame(
       Tables.documents(spark, dir).filter($"doc_id" % 2 === 1)).cache()
@@ -190,7 +190,7 @@ class Round12Spec extends GraftSpecBase {
     val rows1 = Dedup.d11Match(newIdx, docIdx1, bandIdx1)
       .as[(Long, Long, Double)].collect().sorted.toSeq
     assert(Dedup.incIndexBuilds.get() == b0 + 1, "cold start must build once")
-    assert(new java.io.File(Dedup.d11LayoutDir(dir), "_COMPLETE").exists(),
+    assert(new java.io.File(Dedup.d11LayoutDir(spark, dir), "_COMPLETE").exists(),
       "layout marker missing after build")
     // restart shape: the session memo is gone, the layout survives —
     // serving must RELOAD, not rebuild (incIndexBuilds unchanged)

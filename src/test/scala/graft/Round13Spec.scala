@@ -237,14 +237,14 @@ class Round13Spec extends GraftSpecBase {
     import operators.Similarity
     val dir = sf
     // cold start: no layout on disk, no in-session memo
-    deleteRec(Similarity.s15LayoutDir(dir))
+    deleteRec(Similarity.s15LayoutDir(spark, dir))
     Similarity.evictKnnGraphMemo()
     val b0 = Similarity.knnGraphBuilds.get()
     val rows1 = Similarity.s15GraphAnn(spark, dir)
       .as[(Long, Int, Long, Double)].collect().toSeq
     assert(Similarity.knnGraphBuilds.get() == b0 + 1,
       "cold start must build once")
-    assert(new java.io.File(Similarity.s15LayoutDir(dir), "_COMPLETE").exists(),
+    assert(new java.io.File(Similarity.s15LayoutDir(spark, dir), "_COMPLETE").exists(),
       "layout marker missing after build")
     // restart shape: the session memo is gone, the layout survives —
     // serving must RELOAD the adjacency, not re-run the kNN build
