@@ -13,9 +13,10 @@ object Bench {
     // this compiles every query's generated classes (and C2-JITs the
     // interpreters they run on) before anything is timed — the timed
     // sweeps below then measure the benched dataset's compute, not
-    // compiler latency. No result leaks across: frame memos and
-    // model/index registries key on the dataset dir, and the warmup
-    // dir's entries are dropped before the timed sweeps.
+    // compiler latency. No result leaks across: `Caches`, the one
+    // artifact store, keys every memo and session artifact (models,
+    // indexes) on the dataset dir, and the warmup's sweep entries are
+    // cleared before the timed sweeps.
     // force FULL evaluation: `count()` lets the optimizer prune every
     // cardinality-preserving operator (windows, per-row projections —
     // a fingerprint query counted at scan speed without ever hashing),

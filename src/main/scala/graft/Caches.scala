@@ -1,26 +1,34 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 
-/** Per-dataset memoization of materialized intermediate results.
+/** The one store for derived artifacts, keyed by (artifact key,
+  * dataset dir). Each key belongs to one module, which builds it in
+  * one place (a loaded model replaces its key by `evict` + `artifact`).
+  * Entries live for one of two lifetimes:
   *
-  * The registry pattern the engine already uses for models (ALS,
-  * sentiment) and indexes (IVF), applied to expensive derived FRAMES:
-  * an operator's pair table or signature table is an artifact of the
-  * dataset, so repeated invocations (a pipeline stage reusing d2's
-  * pairs, a bench iteration, a dependent operator) serve the cached
-  * artifact instead of re-running the join and re-`cache()`-ing the
-  * same plan (the "Asked to cache already cached data" churn).
+  *  - SWEEP (`memo` for frames, `memoObj` for driver objects): results
+  *    and scaffolds an entry family shares within one pass — d2's
+  *    pairs, the m1 slate, the gated pair list. `clear()` drops them,
+  *    so every bench sweep recomputes the joins and aggregations it
+  *    times instead of reading the last sweep's output.
+  *  - SESSION (`artifact`): trained models, indexes and staged inputs
+  *    that serving reuses the way a deployment does — the ALS and
+  *    sentiment models, the IVF/PQ/d5/d11/s15 indexes, ingest staging.
+  *    `clear()` never touches them; `evict` is the only way out.
   *
-  * `memo` caches the built frame, forces materialization, then runs
-  * `andThen` (for unpersisting the build's scaffolding caches) — so
-  * executor storage holds exactly the artifacts, not every
-  * intermediate that produced them.
+  * All three share one build path: each build is timed and its
+  * exclusive seconds go to one ledger (`drainBuildLog`), so the entry
+  * that triggered a build is charged for it, whichever lifetime the
+  * artifact has. `memo` caches and materializes the built frame before
+  * `cleanup` runs, so executor storage holds the artifact, not every
+  * intermediate that produced it.
   */
 object Caches {
 
-  private val frames =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  private type Key = (String, String)
+  private val sweep = scala.collection.concurrent.TrieMap.empty[Key, Any]
+  private val session = scala.collection.concurrent.TrieMap.empty[Key, Any]
 
   /** Eagerly materialize a loop-state frame AND sever its inherited
     * plan statistics. `localCheckpoint` truncates lineage but COPIES
@@ -72,78 +80,76 @@ object Caches {
     out
   }
 
-  /** Memoized cached frame for (op key, dataset dir). `build` runs at
-    * most once per key; its result is cached and materialized before
-    * `cleanup` runs (safe point to unpersist intermediates); a build
-    * that throws runs `cleanup` before rethrowing. */
+  /** Run `body` as the build of `key`: its wall seconds minus those
+    * of the builds nested inside it go to the ledger. A build that
+    * throws logs nothing; its frame is still popped (a leaked frame
+    * would absorb the wall time of every later build on this thread)
+    * and its elapsed wall still counts against its parent. */
+  private def timed[T](key: String)(body: => T): T = {
+    val stack = childSec.get()
+    stack.push(0.0)
+    val t0 = System.nanoTime()
+    def close(): (Double, Double) = {
+      val wall = (System.nanoTime() - t0) / 1e9
+      val children = stack.pop()
+      if (!stack.isEmpty) stack.push(stack.pop() + wall)
+      (wall, children)
+    }
+    val v = try body catch { case e: Throwable => close(); throw e }
+    val (wall, children) = close()
+    buildLog.synchronized { buildLog += key -> (wall - children) }
+    v
+  }
+
+  /** Memoized cached frame for (op key, dataset dir), sweep lifetime.
+    * `build` runs at most once per key; its result is cached and
+    * materialized before `cleanup` runs (safe point to unpersist
+    * intermediates); a build that throws runs `cleanup` before
+    * rethrowing. */
   def memo(key: String, dir: String)(build: => DataFrame)(
       cleanup: => Unit = ()): DataFrame =
-    frames.getOrElseUpdate((key, dir), {
-      val stack = childSec.get()
-      stack.push(0.0)
-      val t0 = System.nanoTime()
-      try {
-        val df = build.cache()
-        df.count() // materialize so cleanup can't force a recompute
-        cleanup
-        val wall = (System.nanoTime() - t0) / 1e9
-        val children = stack.pop()
-        if (!stack.isEmpty) stack.push(stack.pop() + wall)
-        buildLog.synchronized { buildLog += key -> (wall - children) }
-        df
-      } catch {
-        case e: Throwable =>
-          // pop the frame even on a failed build: a leaked frame makes
-          // every LATER top-level build on this thread feed its wall
-          // time into the orphan and the stack grow unbounded across
-          // failures (advisor r13). The parent (if any) still absorbs
-          // the failed build's elapsed wall; nothing is logged for the
-          // failed key itself.
-          val wall = (System.nanoTime() - t0) / 1e9
-          stack.pop()
-          if (!stack.isEmpty) stack.push(stack.pop() + wall)
-          try cleanup catch { case c: Throwable => e.addSuppressed(c) }
-          throw e
+    sweep.getOrElseUpdate((key, dir), timed(key) {
+      val df = try {
+        val d = build.cache()
+        d.count() // materialize so cleanup can't force a recompute
+        d
+      } catch { case e: Throwable =>
+        try cleanup catch { case c: Throwable => e.addSuppressed(c) }
+        throw e
       }
-    })
+      cleanup
+      df
+    }).asInstanceOf[DataFrame]
 
-  private val objects =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Any]
-
-  /** Round 15: memoized DRIVER-SIDE object for (op key, dataset dir) —
-    * the memo discipline for the local-endgame family's collected pair
-    * list (one bounded collect per sweep serves every gated entry,
-    * instead of a count + collect pair per entry). Same ledger
-    * accounting as `memo`, same clear() lifetime — every bench sweep
-    * recollects. */
+  /** Memoized DRIVER-SIDE object for (op key, dataset dir), sweep
+    * lifetime — e.g. the local-endgame family's collected pair list
+    * (one bounded collect per sweep serves every gated entry). */
   def memoObj[T](key: String, dir: String)(build: => T): T =
-    objects.getOrElseUpdate((key, dir), {
-      val stack = childSec.get()
-      stack.push(0.0)
-      val t0 = System.nanoTime()
-      try {
-        val v = build
-        val wall = (System.nanoTime() - t0) / 1e9
-        val children = stack.pop()
-        if (!stack.isEmpty) stack.push(stack.pop() + wall)
-        buildLog.synchronized { buildLog += key -> (wall - children) }
-        v
-      } catch {
-        case e: Throwable =>
-          val wall = (System.nanoTime() - t0) / 1e9
-          stack.pop()
-          if (!stack.isEmpty) stack.push(stack.pop() + wall)
-          throw e
-      }
-    }).asInstanceOf[T]
+    sweep.getOrElseUpdate((key, dir), timed(key)(build)).asInstanceOf[T]
 
-  /** Drop every memoized frame (unpersisting its cache). Bench calls
-    * this between sweeps so the timed re-sweep measures real
-    * recomputation under warm JIT/models — not reads of the first
-    * sweep's cached results. */
+  /** Session-lifetime artifact for (key, dataset dir): built at most
+    * once and kept across `clear()` until `evict`. The value is
+    * returned as built — a frame the build wants cached it caches. */
+  def artifact[T](key: String, dir: String)(build: => T): T =
+    session.getOrElseUpdate((key, dir), timed(key)(build)).asInstanceOf[T]
+
+  private def release(v: Any): Unit = v match {
+    case ds: Dataset[_] => ds.unpersist()
+    case p: Product => p.productIterator.foreach(release)
+    case _ =>
+  }
+
+  /** Drop (key, dir) from either lifetime and unpersist every frame
+    * the value holds, tuple members included. */
+  def evict(key: String, dir: String): Unit =
+    Seq(sweep, session).foreach(_.remove((key, dir)).foreach(release))
+
+  /** Drop every sweep-lifetime entry (unpersisting its frames). Bench
+    * calls this between sweeps so the timed re-sweep measures real
+    * recomputation under warm JIT and session artifacts — not reads of
+    * the first sweep's cached results. */
   def clear(): Unit = {
-    frames.values.foreach(_.unpersist())
-    frames.clear()
-    objects.clear()
+    sweep.values.foreach(release)
+    sweep.clear()
   }
 }

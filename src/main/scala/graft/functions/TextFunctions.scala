@@ -21,8 +21,6 @@ object TextFunctions {
 
   def nTokens(text: Column): Column = size(tokens(text))
 
-  def nDistinctTokens(text: Column): Column = size(array_distinct(tokens(text)))
-
   /** Fraction of tokens that are stopwords (doc-quality signal).
     *
     * NOTE for hot paths: pass a MATERIALIZED token-array column, not
@@ -36,11 +34,6 @@ object TextFunctions {
     hits.cast("double") / greatest(size(w), lit(1)).cast("double")
   }
 
-  /** Mean token length in characters. */
-  def avgWordLen(text: Column): Column =
-    length(regexp_replace(text, " ", "")).cast("double") /
-      greatest(nTokens(text), lit(1)).cast("double")
-
   /** Fraction of characters that are punctuation. */
   def punctRatio(text: Column): Column =
     (length(text) - length(regexp_replace(text, "[.,!?;:'\"()]", "")))
@@ -48,12 +41,9 @@ object TextFunctions {
 
   /** Composite quality score in [0,1]: long-enough docs with moderate
     * stopword density and low punctuation score high. Heuristic from
-    * standard LLM-corpus filtering recipes (C4-style). */
-  def qualityScore(text: Column): Column =
-    qualityScoreFromTokens(text, tokens(text))
-
-  /** Quality score with pre-materialized tokens (see stopwordRatio
-    * note). `w` must be `tokens(text)` as a real column. */
+    * standard LLM-corpus filtering recipes (C4-style). Takes
+    * pre-materialized tokens (see stopwordRatio note): `w` must be
+    * `tokens(text)` as a real column. */
   def qualityScoreFromTokens(text: Column, w: Column): Column = {
     val lenScore = least(size(w).cast("double") / lit(32.0), lit(1.0))
     val swScore  = lit(1.0) - abs(stopwordRatioFromTokens(w) - lit(0.08)) * lit(2.0)

@@ -28,6 +28,13 @@ object VectorFunctions {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
+  /** `v / nrm` elementwise, with a zero-norm guard: dividing by 1 keeps
+    * the zero vector the zero vector instead of NaN (one NaN would
+    * poison every max/sum it reaches). `nrm` is a materialized norm
+    * column, so the lambda never re-evaluates a dot per element. */
+  def unitScaled(v: Column, nrm: Column): Column =
+    transform(v, x => x / when(nrm === 0.0, 1.0).otherwise(nrm))
+
   /** Cosine similarity; 0 when either vector has zero norm. */
   def cosine(a: Column, b: Column): Column = {
     val d = dot(a, b)

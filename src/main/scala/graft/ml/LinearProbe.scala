@@ -38,15 +38,12 @@ object LinearProbe {
 
   import Pca.{Dim, QScale}
 
-  // per-dataset sufficient statistics: class → (count, Σ qv) — the
-  // C·(d+1)-value bounded artifact (the gramReg pattern)
-  private val clsReg = scala.collection.concurrent.TrieMap
-    .empty[String, Array[(Int, Long, Array[Long])]]
-
   /** One aggregation job: per class label, the row count and the
-    * per-dimension sums of the m14-quantized embeddings. */
+    * per-dimension sums of the m14-quantized embeddings — the
+    * C·(d+1)-value bounded `probe_class_stats` session artifact (the
+    * `gram` pattern). */
   private[graft] def classStats(s: SparkSession, dir: String):
-      Array[(Int, Long, Array[Long])] = clsReg.getOrElseUpdate(dir, {
+      Array[(Int, Long, Array[Long])] = graft.Caches.artifact("probe_class_stats", dir) {
     import s.implicits._
     Pca.quantized(s, dir)
       .join(Tables.embeddings(s, dir).select($"vec_id", $"label"), "vec_id")
@@ -57,7 +54,7 @@ object LinearProbe {
       .orderBy($"label")
       .as[(Int, Long, Seq[Long])].collect()
       .map { case (l, n, ss) => (l, n, ss.toArray) }
-  })
+  }
 
   /** The trained probe: per class (in ascending label order) the
     * weight vector over raw double embeddings and the intercept.
@@ -123,15 +120,13 @@ object LinearProbe {
     * of the data. */
   val CvFolds = 5
 
-  // per-dataset CV sufficient statistics: (fold, label) →
-  // (n, Σ qv, gram triangle, max|q|) — one aggregate, 50 groups,
-  // ~104k longs collected (the bounded-artifact pattern)
-  private val cvReg = scala.collection.concurrent.TrieMap
-    .empty[String, Array[(Int, Int, Long, Array[Long], Array[Long], Long)]]
-
+  /** Per-dataset CV sufficient statistics, the `probe_cv_stats`
+    * session artifact: (fold, label) → (n, Σ qv, gram triangle,
+    * max|q|) — one aggregate, 50 groups, ~104k longs collected (the
+    * bounded-artifact pattern). */
   private[graft] def cvStats(s: SparkSession, dir: String):
       Array[(Int, Int, Long, Array[Long], Array[Long], Long)] =
-    cvReg.getOrElseUpdate(dir, {
+    graft.Caches.artifact("probe_cv_stats", dir) {
       import s.implicits._
       val out = Pca.quantized(s, dir)
         .join(Tables.embeddings(s, dir).select($"vec_id", $"label"), "vec_id")
@@ -153,7 +148,7 @@ object LinearProbe {
         s"m18_cv_probe: $nTot rows × max|q|=$maxq could overflow the " +
           "Long triangle sums — quantize coarser at this scale")
       out
-    })
+    }
 
   /** M18: K-FOLD CROSS-VALIDATED probe accuracy in ONE data pass —
     * the held-out read-out m16's training fit can't give. The key is

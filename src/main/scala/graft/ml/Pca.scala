@@ -55,16 +55,12 @@ object Pca {
           x => floor(x.cast("double") * QScale).cast("long")).as("qv"))
   }
 
-  // the (triangle, sums, n, max|q|) tuple is a K-bounded dataset
-  // artifact like KMeans centroids — built once per dataset, served
-  // to m14 AND m15 (the ivfIndex registry pattern)
-  private val gramReg = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[Long], Array[Long], Long, Long)]
-
   /** One aggregation job: the Gram triangle + per-dim sums + n +
-    * max|q| (the no-wrap guard inputs ride the same scan). */
+    * max|q| (the no-wrap guard inputs ride the same scan). The tuple
+    * is a K-bounded dataset artifact like KMeans centroids — the
+    * `gram` session artifact, served to m14 AND m15. */
   private def gramStats(s: SparkSession, dir: String):
-      (Array[Long], Array[Long], Long, Long) = gramReg.getOrElseUpdate(dir, {
+      (Array[Long], Array[Long], Long, Long) = graft.Caches.artifact("gram", dir) {
     import s.implicits._
     // maxq/sums decode as Option: on an EMPTY table max()/sum() are
     // null and a bare-Long decode would die with an opaque NPE before
@@ -89,7 +85,7 @@ object Pca {
       s"m14_gram: $n rows × max|q|=$maxq could overflow the Long " +
         "triangle sums — quantize coarser (smaller QScale) at this scale")
     (g.toArray, sums.toArray, n, maxq)
-  })
+  }
 
   /** M14: the exact Gram triangle as (i, j, gram) rows, i ≤ j —
     * 2,080 rows of pure integers, the hash-gated surface. */

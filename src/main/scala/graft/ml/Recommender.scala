@@ -32,11 +32,6 @@ object Recommender {
       .agg(sum($"l_quantity").cast("float").as("rating"))
   }
 
-  // model registry: several serving queries (top-N recs, similar
-  // items) share one trained artifact instead of refitting per query
-  private val models =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.ml.recommendation.ALSModel]
-
   /** ALS block count ~ ratings volume: each block's factors must fit
     * an executor, but at small volume per-block overhead dominates —
     * measured at sf0.1 (~1M ratings): 4 blocks fit in 1.9 s vs 3.0 s
@@ -44,9 +39,13 @@ object Recommender {
   def alsBlocks(nRatings: Long): Int =
     math.min(256, math.max(4, (nRatings / 250000L).toInt))
 
+  /** The `als` session artifact: several serving queries (top-N
+    * recs, similar items) share one trained model instead of refitting
+    * per query. */
   def fit(s: SparkSession, dir: String): org.apache.spark.ml.recommendation.ALSModel =
-    models.getOrElseUpdate(dir,
-      fitOrLoad(s, dir, sys.env.get("SPARK_GRAFT_MODEL_DIR")))
+    graft.Caches.artifact("als", dir) {
+      fitOrLoad(s, dir, sys.env.get("SPARK_GRAFT_MODEL_DIR"))
+    }
 
   /** The implicit-feedback twin (Hu/Koren/Volinsky 2008): quantities
     * become CONFIDENCE in a binary preference, not a rating to
@@ -55,7 +54,7 @@ object Recommender {
     * solver, same two shuffles per iteration, so the 100 TB shape is
     * unchanged; only the per-block normal equations differ. */
   def fitImplicit(s: SparkSession, dir: String): org.apache.spark.ml.recommendation.ALSModel =
-    models.getOrElseUpdate(s"implicit|$dir", {
+    graft.Caches.artifact("als:implicit", dir) {
       val r = ratings(s, dir).cache()
       val m = new ALS()
         .setRank(Rank).setMaxIter(Iters).setSeed(Seed)
@@ -67,7 +66,7 @@ object Recommender {
         .fit(r)
       r.unpersist()
       m
-    })
+    }
 
   /** Fit, or reload a previously-persisted factorization if `store`
     * is set and holds one for this dataset — the cross-SESSION half of
@@ -112,19 +111,16 @@ object Recommender {
   def itemClusters(nItems: Long): Int =
     math.min(256, math.max(16, math.ceil(math.sqrt(nItems.toDouble)).toInt))
 
-  // item-factor IVF index registry: one KMeans over the factor space
-  // serves both recommendation heads (m1 candidate pruning, m3
-  // similar-items), like Similarity.ivfIndex does for embeddings
-  private val itemIdx =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, Array[Array[Double]])]
-
   /** Item factors clustered for IVF probing: (id, v, nrm, cluster)
-    * cached, plus the centroid arrays (a K-bounded artifact).
-    * `variant` picks the trainer ("explicit" = m1's fit, "implicit" =
-    * fitImplicit) — each variant's factor space gets its own index. */
+    * cached, plus the centroid arrays (a K-bounded artifact). One
+    * KMeans over the factor space serves both recommendation heads (m1
+    * candidate pruning, m3 similar-items), like Similarity.ivfIndex
+    * does for embeddings. `variant` picks the trainer ("explicit" =
+    * m1's fit, "implicit" = fitImplicit) — each variant's factor space
+    * gets its own index. */
   def itemIvf(s: SparkSession, dir: String,
       variant: String = "explicit"): (DataFrame, Array[Array[Double]]) =
-    itemIdx.getOrElseUpdate(s"$variant|$dir", {
+    graft.Caches.artifact(s"item_ivf:$variant", dir) {
       import s.implicits._
       import graft.functions.VectorFunctions.dot
       val model = if (variant == "implicit") fitImplicit(s, dir) else fit(s, dir)
@@ -152,24 +148,20 @@ object Recommender {
       assigned.count()
       factors.unpersist()
       (assigned, km.clusterCenters.map(_.toArray))
-    })
+    }
 
-  // packed inverted lists: each cluster's candidate vectors laid out as
-  // ONE flat double array (ids ordered ascending) — the IVF-Flat
-  // contiguous-block layout, scanned whole by `dot_topk` in a single
-  // expression evaluation per (user, probe) row. Two variants: raw
-  // factors for m1's ALS-dot scores, unit-normalized for m3's cosine.
-  private val packedIdx =
-    scala.collection.concurrent.TrieMap.empty[(String, Boolean), DataFrame]
-
+  /** Packed inverted lists: each cluster's candidate vectors laid out
+    * as ONE flat double array (ids ordered ascending) — the IVF-Flat
+    * contiguous-block layout, scanned whole by `dot_topk` in a single
+    * expression evaluation per (user, probe) row. Two variants: raw
+    * factors for m1's ALS-dot scores, unit-normalized for m3's cosine. */
   private[graft] def itemIvfPacked(s: SparkSession, dir: String,
       normalized: Boolean, variant: String = "explicit"): DataFrame =
-    packedIdx.getOrElseUpdate((s"$variant|$dir", normalized), {
+    graft.Caches.artifact(s"item_packed:$variant:$normalized", dir) {
       import s.implicits._
+      import graft.functions.VectorFunctions.unitScaled
       val (assigned, _) = itemIvf(s, dir, variant)
-      val vec =
-        if (normalized) transform($"v", x => x / when($"nrm" === 0.0, 1.0).otherwise($"nrm"))
-        else $"v"
+      val vec = if (normalized) unitScaled($"v", $"nrm") else $"v"
       // K rows of ~|catalog|/K packed vectors each: the block per row is
       // bounded by the cluster size the quantizer controls, never the
       // catalog — the same per-inverted-list memory shape FAISS keeps
@@ -180,7 +172,7 @@ object Recommender {
           transform($"ivs", _.getField("id")).as("ids"),
           flatten(transform($"ivs", _.getField("v"))).as("flat"))
         .cache()
-    })
+    }
 
   val UserProbes = 4
 
@@ -343,7 +335,7 @@ object Recommender {
     * — a collapse detector: a popularity-degenerate model recommends
     * the same few items to everyone), and slate novelty (share of
     * recommended pairs the user has NOT purchased — m5's reason to
-    * exist). One row; every input is a serving-registry read plus two
+    * exist). One row; every input is a `Caches` read plus two
     * partial-aggregated joins on keys the frames already hash by.
     * Rows-only (ALS factors aren't SQL) + spec bands. */
   def m7RecMetrics(s: SparkSession, dir: String): DataFrame = {
@@ -469,7 +461,7 @@ object Recommender {
     * (which is exactly the trap at catalog scale). */
   def m3SimilarItems(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.VectorFunctions.q4
+    import graft.functions.VectorFunctions.{q4, unitScaled}
     val (assigned, centers) = itemIvf(s, dir)
     val packed = itemIvfPacked(s, dir, normalized = true)
     // normalized centroid matrix as one flat literal block: ranking by
@@ -485,7 +477,7 @@ object Recommender {
         // unit-normalize the query so the packed block's raw dot IS the
         // cosine (blocks store normalized vectors); zero-norm guard as
         // in d5 — the zero vector stays zero, cosine 0 to everything
-        transform($"v", x => x / when($"nrm" === 0.0, 1.0).otherwise($"nrm")).as("qhat"))
+        unitScaled($"v", $"nrm").as("qhat"))
       .select($"p_partkey", $"qhat",
         explode(call_function("dot_topk", $"qhat", cidsLit, cflatLit, lit(2))
           .getField("id")).as("probe"))
@@ -515,15 +507,15 @@ object Recommender {
     fit(s, dir).write.overwrite().save(path)
 
   /** Load a persisted model and register it for `dir`, so every
-    * serving query (m1/m3) runs fit-free against it. */
+    * serving query (m1/m3) runs fit-free against it. The explicit IVF
+    * index, its packed lists and the m1 slate derive from the replaced
+    * factors: they are evicted, their storage freed, and rebuilt from
+    * the loaded model on next use. */
   def loadModel(s: SparkSession, dir: String, path: String): org.apache.spark.ml.recommendation.ALSModel = {
     val m = org.apache.spark.ml.recommendation.ALSModel.load(path)
-    models.put(dir, m)
-    // the explicit IVF index and its packed lists derive from the
-    // replaced factors: evict them and free their storage
-    itemIdx.remove(s"explicit|$dir").foreach(_._1.unpersist())
-    Seq(false, true).foreach(n => packedIdx.remove((s"explicit|$dir", n)).foreach(_.unpersist()))
-    m
+    Seq("als", "item_ivf:explicit", "item_packed:explicit:false",
+      "item_packed:explicit:true", "m1_slate").foreach(graft.Caches.evict(_, dir))
+    graft.Caches.artifact("als", dir)(m)
   }
 
   /** RMSE of the model's reconstruction of the training ratings —
@@ -766,11 +758,6 @@ object Recommender {
     } finally { sample.unpersist(); () }
   }
 
-  /** m11 under a contribution budget instead of an explicit γ. */
-  def m11DimsumBudget(s: SparkSession, dir: String,
-      budgetContribs: Long): DataFrame =
-    m11Dimsum(s, dir, m11GammaForBudget(s, dir, budgetContribs))
-
   /** The evaluation heads' rating matrix served off the memoized
     * integer frame (round 14): rating = q cast float is EXACTLY
     * `ratings()`'s value — l_quantity is integral, so both forms
@@ -779,7 +766,7 @@ object Recommender {
     * (m5/m7/m12/m13 ran it six times per sweep between them; m12's
     * rel frame alone is consumed twice). The ALS TRAINERS keep the
     * original `ratings` builder: they run once per dataset via the
-    * model registry and manage their own cache lifecycle. */
+    * `als` artifact and manage their own cache lifecycle. */
   private[graft] def ratingsOf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     intRatings(s, dir)

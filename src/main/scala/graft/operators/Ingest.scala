@@ -18,22 +18,20 @@ import graft.sources.Sources
   */
 object Ingest {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Stage `table` of `dir` under `key` once per session and source
-    * identity: the directory is named by the SHA-256 of the table's
+    * identity (the `ingest:<key>` session artifact of the staging
+    * root): the directory is named by the SHA-256 of the table's
     * path + per-file bytes and mtime, so two datasets never share it
     * and a rewritten table is staged afresh. */
   private def stage(key: String, s: SparkSession, dir: String, table: String)(
       write: String => Unit): String = {
     val root = Tables.artifactDir("graft-ingest",
       Tables.sourceIdentity(s, s"$dir/$table.parquet"))
-    staged.getOrElseUpdate(s"$key:$root", {
+    graft.Caches.artifact(s"ingest:$key", root.getPath) {
       val tmp = new java.io.File(root, key).getPath
       write(tmp)
       tmp
-    })
+    }
   }
 
   val NationCsvSchema: StructType = StructType(Seq(

@@ -67,14 +67,11 @@ object SpectralCut {
     * back to the unconstrained minimum — documented, deterministic. */
   val BalanceInv = 10L
 
-  // (side by supernode label, cut weight, prefix volume, total volume)
-  // — the bounded driver artifact, memoized per dataset for the specs
-  // and the projection
-  private val cutReg = scala.collection.concurrent.TrieMap
-    .empty[String, (Map[Long, Int], Long, Long, Long)]
-
+  /** (side by supernode label, cut weight, prefix volume, total
+    * volume) — the bounded driver artifact, memoized per dataset for
+    * the specs and the projection. */
   private[graft] def spectralCutArtifact(s: SparkSession, dir: String):
-      (Map[Long, Int], Long, Long, Long) = cutReg.getOrElseUpdate(dir, {
+      (Map[Long, Int], Long, Long, Long) = graft.Caches.artifact("spectral_cut", dir) {
     import s.implicits._
     val edges = Graph.copurchaseEdges(s, dir).cache()
     val l1 = Graph.louvainLabels(s, dir)
@@ -104,7 +101,7 @@ object SpectralCut {
     le.unpersist(); edges.unpersist()
     val (side, cutW, volS, volT) = sweepCut(ce, st)
     (side, cutW, volS, volT)
-  })
+  }
 
   /** Fiedler power iteration + Cheeger sweep over a collected
     * symmetric weighted edge list. `strength` carries each node's

@@ -13,9 +13,9 @@ class DedupSpec extends GraftSpecBase {
 
   test("d11 index: a _COMPLETE marker naming another source identity triggers a rebuild") {
     val root = Dedup.d11LayoutDir(spark, sf)
-    Dedup.evictIncIndexMemo()
+    Caches.evict("d11_index", sf)
     Dedup.d11Index(spark, sf) // a complete layout for this source on disk
-    Dedup.evictIncIndexMemo()
+    Caches.evict("d11_index", sf)
     // the layout now claims to hold another dataset's index
     Tables.markComplete(root, Tables.sourceIdentity(spark, s"$sf/embeddings.parquet"))
     val b0 = Dedup.incIndexBuilds.get()
@@ -24,7 +24,7 @@ class DedupSpec extends GraftSpecBase {
     assert(Tables.completeFor(root, Dedup.d11SourceIdentity(spark, sf)))
     assert(docIdx.count() > 0)
     // a marker naming this source reloads without a rebuild
-    Dedup.evictIncIndexMemo()
+    Caches.evict("d11_index", sf)
     Dedup.d11Index(spark, sf)
     assert(Dedup.incIndexBuilds.get() == b0 + 1)
   }

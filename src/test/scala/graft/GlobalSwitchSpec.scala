@@ -52,4 +52,15 @@ class GlobalSwitchSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
   }
+
+  // a module-private memo bypasses the build ledger and `Caches.evict`:
+  // derived artifacts are memoized in `graft.Caches` only
+  test("operators and ml keep no registry of their own") {
+    val offending = for {
+      f <- sources("operators") ++ sources("ml")
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("TrieMap")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
+  }
 }

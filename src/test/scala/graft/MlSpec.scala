@@ -159,6 +159,7 @@ class MlSpec extends GraftSpecBase {
     val before1 = Recommender.m1AlsRecommendExact(spark, sf).collect().map(_.toSeq).toSeq
     val (ivf0, _) = Recommender.itemIvf(spark, sf)
     val packed0 = Recommender.itemIvfPacked(spark, sf, normalized = true)
+    val slate0 = Recommender.m1Slate(spark, sf)
     Recommender.saveModel(spark, sf, s"$tmp/als")
     Recommender.loadModel(spark, sf, s"$tmp/als")
     val after1 = Recommender.m1AlsRecommendExact(spark, sf).collect().map(_.toSeq).toSeq
@@ -170,6 +171,10 @@ class MlSpec extends GraftSpecBase {
     assert(ivf0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     assert(!(Recommender.itemIvfPacked(spark, sf, normalized = true) eq packed0))
     assert(packed0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    // the m1 slate was served from the old factors' index: evicted too
+    assert(!(Recommender.m1Slate(spark, sf) eq slate0),
+      "m1Slate kept serving the slate of the old factors")
+    assert(slate0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     assert(Recommender.m1AlsRecommend(spark, sf).count() > 0)
     val before2 = Sentiment.m2Sentiment(spark, sf).collect().map(_.toSeq).toSeq
     Sentiment.saveModel(spark, sf, s"$tmp/sentiment")

@@ -182,7 +182,7 @@ class Round12Spec extends GraftSpecBase {
     val dir = sf
     // cold start: no layout on disk, no in-session memo
     deleteRec(Dedup.d11LayoutDir(spark, dir))
-    Dedup.evictIncIndexMemo()
+    Caches.evict("d11_index", dir)
     val newIdx = Dedup.incSigFrame(
       Tables.documents(spark, dir).filter($"doc_id" % 2 === 1)).cache()
     val b0 = Dedup.incIndexBuilds.get()
@@ -194,7 +194,7 @@ class Round12Spec extends GraftSpecBase {
       "layout marker missing after build")
     // restart shape: the session memo is gone, the layout survives —
     // serving must RELOAD, not rebuild (incIndexBuilds unchanged)
-    Dedup.evictIncIndexMemo()
+    Caches.evict("d11_index", dir)
     val (docIdx2, bandIdx2) = Dedup.d11Index(spark, dir)
     val rows2 = Dedup.d11Match(newIdx, docIdx2, bandIdx2)
       .as[(Long, Long, Double)].collect().sorted.toSeq

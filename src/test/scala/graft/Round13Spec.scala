@@ -238,7 +238,7 @@ class Round13Spec extends GraftSpecBase {
     val dir = sf
     // cold start: no layout on disk, no in-session memo
     deleteRec(Similarity.s15LayoutDir(spark, dir))
-    Similarity.evictKnnGraphMemo()
+    Caches.evict("knn_graph", dir)
     val b0 = Similarity.knnGraphBuilds.get()
     val rows1 = Similarity.s15GraphAnn(spark, dir)
       .as[(Long, Int, Long, Double)].collect().toSeq
@@ -248,7 +248,7 @@ class Round13Spec extends GraftSpecBase {
       "layout marker missing after build")
     // restart shape: the session memo is gone, the layout survives —
     // serving must RELOAD the adjacency, not re-run the kNN build
-    Similarity.evictKnnGraphMemo()
+    Caches.evict("knn_graph", dir)
     val g = Similarity.knnGraphIndex(spark, dir)
     val rows2 = Similarity.s15GraphAnn(spark, dir)
       .as[(Long, Int, Long, Double)].collect().toSeq
