@@ -3,10 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: run the whole suite once at the smallest SF.
     // Whole-stage codegen sources depend on plan shape, not data, so

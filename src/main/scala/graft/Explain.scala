@@ -9,10 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries(name)
     val t0 = System.nanoTime()

@@ -21,10 +21,7 @@ object OptProbe {
     val dir = args(0)
     val names = args(1).split(",").toSeq
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -8,10 +8,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names (local spot-checks)
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

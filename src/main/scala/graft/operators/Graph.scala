@@ -25,54 +25,109 @@ object Graph {
   val Scale = 1000000L
   val Iters = 5
 
-  /** Q53: 5-iteration damped PageRank (d = 0.85) over the threshold-2
-    * co-purchase graph, in exact integer fixed-point.
-    *
-    * Shape at scale: the edge list is the family's memoized
-    * co-purchase pair artifact (order-key self-join, codegen'd — see
-    * Analytics.copurchasePairs), thresholded so the graph holds
-    * signal, not noise. Each iteration is ONE shuffle —
-    * contributions `rank div deg` flow along edges and aggregate on
-    * the destination key (map-side partials); the rank update joins
-    * back on the node key both frames already hash by, and
-    * `localCheckpoint` flattens lineage per round exactly like d6's
-    * propagation loop. 5 iterations = 5 graph-sized shuffles, no
-    * driver-side state beyond the loop counter; a billion-edge graph
-    * runs the same plan wider. Dangling nodes cannot exist (edges are
-    * symmetric, so every node has out-degree ≥ 1). */
-  def q53Pagerank(s: SparkSession, dir: String): DataFrame = {
+  /** The threshold-2 co-purchase graph as its half list (pa < pb,
+    * n_orders): part pairs bought together in ≥ 2 orders, over the
+    * family's memoized pair artifact (order-key self-join, codegen'd —
+    * see Analytics.copurchasePairs). The ONE place the family applies
+    * the threshold, so the graph holds signal, not noise. Lazy plan. */
+  private[graft] def copurchaseHalf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-    // LOCAL ENDGAME (round 14): the thresholded pair list is metadata-
-    // scale; under the gate the 5 rounds replay driver-side with
-    // bit-identical integer algebra (GraphLocal; OptR14Spec pins
-    // local == forced-distributed). The pair BUILD above stays
-    // distributed at every SF.
-        GraphLocal.halfPairsUnderGate(s, dir) match {
-      case Some(half) => return GraphLocal.pagerankTop(s, half, Iters, "pr_rank")
-      case None =>
-    }
-    val edges = prs.select($"pa".as("src"), $"pb".as("dst"))
-      .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-      .cache()
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg")).cache()
-    var ranks = deg.select($"src".as("node"), lit(Scale).as("rank"))
+    Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
+  }
+
+  /** The threshold-2 graph's symmetric edge list (src, dst, n_orders):
+    * both directions of every half pair, the pair weight riding along
+    * (q80 and q85 derive their edge weights from it). Lazy plan —
+    * callers cache around their loops. */
+  private[graft] def copurchaseEdges(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val prs = copurchaseHalf(s, dir)
+    prs.select($"pa".as("src"), $"pb".as("dst"), $"n_orders")
+      .unionAll(prs.select($"pb".as("src"), $"pa".as("dst"), $"n_orders"))
+  }
+
+  /** The top-`k` nodes of a symmetric edge list by degree (deg desc,
+    * key asc) as a one-column `seed` frame — the deterministic pivot /
+    * hub rule (q78/q82/q86/q94) both engines agree on. */
+  private[graft] def topByDegree(edges: DataFrame, k: Int): DataFrame = {
+    import edges.sparkSession.implicits._
+    edges.groupBy($"src").agg(count(lit(1)).as("deg"))
+      .orderBy($"deg".desc, $"src").limit(k).select($"src".as("seed"))
+  }
+
+  /** The ego seed (q77/q85/q88): the highest-degree node, min-key
+    * tie-break — the "anchor product" a merchandiser would actually
+    * ask about. None when the graph is empty. */
+  private[graft] def egoSeed(edges: DataFrame): Option[Long] = {
+    import edges.sparkSession.implicits._
+    topByDegree(edges, 1).as[Long].collect().headOption
+  }
+
+  /** The distributed damped PageRank (d = 0.85) of the family — q53
+    * (uniform), q77 (personalized) and q80 (weighted) — over a
+    * symmetric weighted edge list (src, dst, w), in exact integer
+    * fixed point. Returns (node, rank) after `iters` rounds. `seed` =
+    * None spreads the 0.15 restart mass uniformly; Some(sd) pins it to
+    * `sd` (topic-sensitive PageRank, Haveliwala WWW'02), so nodes the
+    * walk has not reached stay at rank 0.
+    *
+    * Integer algebra: each edge ships (rank · w) div W_src, W_src = Σ w
+    * over src's out-edges — a per-edge floor, deterministic and
+    * oracle-replayable. With w = 1 every W_src is the out-degree at
+    * LongType, so (rank · 1) div W_src ≡ rank div deg: q53/q77's
+    * unweighted algebra to the bit.
+    *
+    * Shape at scale: each iteration is ONE shuffle — contributions
+    * flow along edges and aggregate on the destination key (map-side
+    * partials); the rank update joins back on the node key both frames
+    * already hash by, the restart term is a per-row `when` (the seed
+    * is a driver scalar), and `localCheckpoint` flattens lineage per
+    * round exactly like d6's propagation loop — so the loop also
+    * materializes eagerly inside the call. `iters` graph-sized
+    * shuffles, no driver-side state beyond the loop counter; a
+    * billion-edge graph runs the same plan wider. Dangling nodes cannot
+    * exist (edges are symmetric, so every node has out-degree ≥ 1). */
+  private[graft] def pagerank(weighted: DataFrame, iters: Int,
+      seed: Option[Long]): DataFrame = {
+    val s = weighted.sparkSession
+    import s.implicits._
+    val edges = weighted.select($"src", $"dst", $"w").cache()
+    val wdeg = edges.groupBy($"src").agg(sum($"w").as("wd")).cache()
+    def pinned(node: Column, mass: Long): Column =
+      seed.fold(lit(mass))(sd => when(node === sd, lit(mass)).otherwise(lit(0L)))
+    var ranks = wdeg.select($"src".as("node"), pinned($"src", Scale).as("rank"))
       .localCheckpoint(true)
     withLoopWidth(s, edges.count()) {
-    for (_ <- 1 to Iters) {
-      val contrib = edges.join(deg, "src")
+    for (_ <- 1 to iters) {
+      val contrib = edges.join(wdeg, "src")
         .join(ranks, $"src" === $"node")
-        .select($"dst", expr("rank div deg").as("c"))
+        .select($"dst", expr("(rank * w) div wd").as("c"))
         .groupBy($"dst").agg(sum($"c").as("c"))
       ranks = ranks.join(contrib, $"node" === $"dst", "left")
         .select($"node",
-          (lit(Scale * 15 / 100) +
+          (pinned($"node", Scale * 15 / 100) +
             expr("(85 * coalesce(c, 0L)) div 100")).as("rank"))
         .localCheckpoint(true)
     }
     }
-    edges.unpersist(); deg.unpersist()
+    edges.unpersist(); wdeg.unpersist()
     ranks
+  }
+
+  /** Q53: 5-iteration uniform damped PageRank over the threshold-2
+    * co-purchase graph (`pagerank` with w = 1). */
+  def q53Pagerank(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    // LOCAL ENDGAME (round 14): the thresholded pair list is metadata-
+    // scale; under the gate the 5 rounds replay driver-side with
+    // bit-identical integer algebra (GraphLocal; OptR14Spec pins
+    // local == forced-distributed). The pair BUILD stays distributed
+    // at every SF.
+    GraphLocal.halfPairsUnderGate(s, dir) match {
+      case Some(half) => return GraphLocal.pagerankTop(s, half, Iters)
+      case None =>
+    }
+    pagerank(copurchaseEdges(s, dir).withColumn("w", lit(1L)), Iters, None)
       .select($"node".as("l_partkey"), $"rank".as("pr_rank"))
       .orderBy($"pr_rank".desc, $"l_partkey")
       .limit(50)
@@ -84,7 +139,7 @@ object Graph {
     * distributed fixed-point loop would be exercised only by the
     * builder's own parity specs. The oracle SQL is identical to
     * q53_pagerank's (same computation, forced through the distributed
-    * regime; the loop materializes eagerly through its
+    * regime; `pagerank` materializes eagerly through its
     * localCheckpoints, so the gate override covers the whole build). */
   def q53PagerankDist(s: SparkSession, dir: String): DataFrame =
     GraphLocal.withGates(GraphLocal.Distributed)(q53Pagerank(s, dir))
@@ -129,10 +184,8 @@ object Graph {
     * Ship this exact path only at wedge counts you have budgeted. */
   def q62LinkPredict(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-      .select($"pa", $"pb")
-    val sym = e.unionAll(e.select($"pb".as("pa"), $"pa".as("pb")))
-      .select($"pa".as("w"), $"pb".as("n"))
+    val e = copurchaseHalf(s, dir).select($"pa", $"pb")
+    val sym = copurchaseEdges(s, dir).select($"src".as("w"), $"dst".as("n"))
     val common = sym.as("x").join(sym.as("y"),
         $"x.w" === $"y.w" && $"x.n" < $"y.n")
       .groupBy($"x.n".as("a"), $"y.n".as("b"))
@@ -174,10 +227,8 @@ object Graph {
     import s.implicits._
     val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
     graft.Caches.memo("q62_lsh_top", dir) {
-      val e = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-        .select($"pa", $"pb")
-      val sym = e.unionAll(e.select($"pb".as("pa"), $"pa".as("pb")))
-        .select($"pa".as("v"), $"pb".as("nb"))
+      val e = copurchaseHalf(s, dir).select($"pa", $"pb")
+      val sym = copurchaseEdges(s, dir).select($"src".as("v"), $"dst".as("nb"))
       // per-node neighbor-set signature + sorted adjacency array; both
       // artifacts are node-count-sized and feed several joins below
       val sigs = sym
@@ -236,8 +287,7 @@ object Graph {
 
   def q54Triangles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-      .select($"pa", $"pb")
+    val e = copurchaseHalf(s, dir).select($"pa", $"pb")
     val deg = e.select($"pa".as("n")).unionAll(e.select($"pb".as("n")))
       .groupBy($"n").agg(count(lit(1)).as("deg"))
     val tri = e.as("ab")
@@ -277,8 +327,7 @@ object Graph {
   def q70TriangleSample(s: SparkSession, dir: String,
       p1000: Long = 500L): DataFrame = {
     import s.implicits._
-    val e = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-      .select($"pa", $"pb")
+    val e = copurchaseHalf(s, dir).select($"pa", $"pb")
       .filter(pmod(xxhash64(lit(7L), $"pa", $"pb"), lit(1000L)) < p1000)
     val tri = e.as("ab")
       .join(e.as("bc"), $"ab.pb" === $"bc.pa")
@@ -309,8 +358,7 @@ object Graph {
   def q71LccSample(s: SparkSession, dir: String,
       p1000: Long = 500L): DataFrame = {
     import s.implicits._
-    val full = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-      .select($"pa", $"pb")
+    val full = copurchaseHalf(s, dir).select($"pa", $"pb")
     val deg = full.select($"pa".as("n")).unionAll(full.select($"pb".as("n")))
       .groupBy($"n").agg(count(lit(1)).as("deg"))
     val e = full.filter(pmod(xxhash64(lit(7L), $"pa", $"pb"), lit(1000L)) < p1000)
@@ -347,11 +395,7 @@ object Graph {
     import s.implicits._
     val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
     graft.Caches.memo("q73_families", dir) {
-      val e = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-        .select($"pa", $"pb")
-      val edges = e.select($"pa".as("src"), $"pb".as("dst"))
-        .unionAll(e.select($"pb".as("src"), $"pa".as("dst")))
-        .cache()
+      val edges = copurchaseEdges(s, dir).cache()
       scaffolding += edges
       val labels = Dedup.connectedComponents(s, edges)
         .select($"doc_id".as("l_partkey"), $"group_id".as("family_id"))
@@ -399,8 +443,7 @@ object Graph {
       case Some(half) => return GraphLocal.kcoreTable(s, half, k, rounds)
       case None =>
     }
-    var e = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-      .select($"pa", $"pb").localCheckpoint(true)
+    var e = copurchaseHalf(s, dir).select($"pa", $"pb").localCheckpoint(true)
     withLoopWidth(s, e.count()) {
     for (_ <- 1 to rounds) {
       val core = e.select($"pa".as("n")).unionAll(e.select($"pb".as("n")))
@@ -433,8 +476,7 @@ object Graph {
     * already carry. Output is node-cardinality-sized. */
   def q67ClusteringCoef(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-      .select($"pa", $"pb")
+    val e = copurchaseHalf(s, dir).select($"pa", $"pb")
     val deg = e.select($"pa".as("n")).unionAll(e.select($"pb".as("n")))
       .groupBy($"n").agg(count(lit(1)).as("deg"))
     val tri = e.as("ab")
@@ -511,9 +553,7 @@ object Graph {
     val localOpt = GraphLocal.halfPairsUnderGate(s, dir)
       .flatMap(h => GraphLocal.coreNumbersUnderBudget(s, h, kMax, rounds))
     if (localOpt.isDefined) return localOpt.get
-    val pairs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-      .select($"pa", $"pb")
-    val (table, clamped) = peelCoreNumbers(pairs, kMax, rounds)
+    val (table, clamped) = peelCoreNumbers(copurchaseHalf(s, dir), kMax, rounds)
     if (!clamped) table
     else {
       // The peel budget did NOT empty the graph: reporting the level
@@ -525,9 +565,7 @@ object Graph {
         s"(kMax=$kMax, rounds=$rounds) did not empty the graph — " +
         "escalating to the h-index fixed point (q79 path) instead of " +
         "reporting clamped core numbers")
-      val edges = pairs.select($"pa".as("src"), $"pb".as("dst"))
-        .unionAll(pairs.select($"pb".as("src"), $"pa".as("dst")))
-      hIndexCoreNumbers(edges, HIndexRounds)
+      hIndexCoreNumbers(copurchaseEdges(s, dir), HIndexRounds)
         .orderBy($"l_partkey")
     }
   }
@@ -674,16 +712,13 @@ object Graph {
   def q79CoreHindex(s: SparkSession, dir: String,
       rounds: Int = HIndexRounds): DataFrame = {
     import s.implicits._
-    val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
     // local endgame under the gate (see q53) — same h-index rounds,
     // same early exit (unchanged sum of estimates)
-        GraphLocal.halfPairsUnderGate(s, dir) match {
+    GraphLocal.halfPairsUnderGate(s, dir) match {
       case Some(half) => return GraphLocal.coreHindexTable(s, half, rounds)
       case None =>
     }
-    val edges = prs.select($"pa".as("src"), $"pb".as("dst"))
-      .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-    hIndexCoreNumbers(edges, rounds).orderBy($"l_partkey")
+    hIndexCoreNumbers(copurchaseEdges(s, dir), rounds).orderBy($"l_partkey")
   }
 
   /** The h-index core-number fixed point over a SYMMETRIC edge list
@@ -757,44 +792,19 @@ object Graph {
   }
 
   /** Q80: WEIGHTED damped PageRank — q53 with the edge weights the
-    * co-purchase graph already carries (n_orders: how many baskets
+    * co-purchase graph already carries (w = n_orders: how many baskets
     * joined the pair), so rank flows in proportion to tie strength
-    * instead of treating a 100-basket pairing like a 2-basket one.
-    * Exact integer fixed-point end-to-end: each edge ships
-    * (rank · w) div W_src (per-edge floor — deterministic,
-    * oracle-replayable), W_src = Σ weights the same node-keyed
-    * aggregate as q53's degree. Same shape at scale: one shuffle per
-    * iteration, weights ride the edge rows they already live on. */
+    * instead of treating a 100-basket pairing like a 2-basket one
+    * (`pagerank`; weights ride the edge rows they already live on). */
   def q80WeightedPagerank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
     // local endgame under the gate (see q53) — weighted flows,
     // Math.multiplyExact mirrors the ANSI overflow loudness
-        GraphLocal.halfPairsUnderGate(s, dir) match {
+    GraphLocal.halfPairsUnderGate(s, dir) match {
       case Some(half) => return GraphLocal.weightedPagerankTop(s, half, Iters)
       case None =>
     }
-    val edges = prs.select($"pa".as("src"), $"pb".as("dst"), $"n_orders".as("w"))
-      .unionAll(prs.select($"pb".as("src"), $"pa".as("dst"), $"n_orders".as("w")))
-      .cache()
-    val wdeg = edges.groupBy($"src").agg(sum($"w").as("wd")).cache()
-    var ranks = wdeg.select($"src".as("node"), lit(Scale).as("rank"))
-      .localCheckpoint(true)
-    withLoopWidth(s, edges.count()) {
-    for (_ <- 1 to Iters) {
-      val contrib = edges.join(wdeg, "src")
-        .join(ranks, $"src" === $"node")
-        .select($"dst", expr("(rank * w) div wd").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("c"))
-      ranks = ranks.join(contrib, $"node" === $"dst", "left")
-        .select($"node",
-          (lit(Scale * 15 / 100) +
-            expr("(85 * coalesce(c, 0L)) div 100")).as("rank"))
-        .localCheckpoint(true)
-    }
-    }
-    edges.unpersist(); wdeg.unpersist()
-    ranks
+    pagerank(copurchaseEdges(s, dir).withColumn("w", $"n_orders"), Iters, None)
       .select($"node".as("l_partkey"), $"rank".as("wpr_rank"))
       .orderBy($"wpr_rank".desc, $"l_partkey")
       .limit(50)
@@ -853,16 +863,13 @@ object Graph {
   def q81LabelProp(s: SparkSession, dir: String,
       rounds: Int = LpaRounds): DataFrame = {
     import s.implicits._
-    val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
     // local endgame under the gate (see q53) — same synchronous
     // schedule, same (cnt desc, label asc) argmax
-        GraphLocal.halfPairsUnderGate(s, dir) match {
+    GraphLocal.halfPairsUnderGate(s, dir) match {
       case Some(half) => return GraphLocal.labelPropTable(s, half, rounds)
       case None =>
     }
-    val edges = prs.select($"pa".as("src"), $"pb".as("dst"))
-      .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-      .cache()
+    val edges = copurchaseEdges(s, dir).cache()
     var lbls = edges.select($"src".as("node")).distinct()
       .select($"node", $"node".as("lbl"))
       .localCheckpoint(true)
@@ -917,69 +924,27 @@ object Graph {
          ORDER BY l_partkey"""
   }
 
-  /** Deterministic seed for the ego-centric operators (q77/q78): the
-    * highest-degree node of the threshold-2 graph, min-key tie-break —
-    * the "anchor product" a merchandiser would actually ask about, and
-    * a pure function of the input both engines agree on. */
-  private[graft] def egoSeed(s: SparkSession, dir: String): Long = {
-    import s.implicits._
-    val e = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-      .select($"pa", $"pb")
-    e.select($"pa".as("n")).unionAll(e.select($"pb".as("n")))
-      .groupBy($"n").agg(count(lit(1)).as("deg"))
-      .orderBy($"deg".desc, $"n").select($"n").as[Long].head()
-  }
-
-  /** Q77: PERSONALIZED PageRank from the top-degree seed part — the
-    * "related to THIS product" ranking (topic-sensitive PageRank,
-    * Haveliwala WWW'02): random walk with 0.15 restart mass pinned to
-    * the seed instead of spread uniformly, 5 iterations, exact integer
-    * fixed-point exactly like q53 (float PPR is addition-order-
-    * dependent and cross-engine unverifiable). Nodes the walk hasn't
-    * reached stay at rank 0 and are filtered; output is the top-50
-    * rank-desc with node tie-break.
-    *
-    * Shape at scale: identical to q53 — one shuffle per iteration
-    * (contributions aggregate on dst with map-side partials, the
-    * update joins on the node key both frames hash by), the seed is a
-    * driver-side scalar (K-bounded like centroids), and the final
-    * rank is a TakeOrdered top-50. The restart term is a per-row
-    * `when`, not a join. */
+  /** Q77: PERSONALIZED PageRank from the ego seed — the "related to
+    * THIS product" ranking: `pagerank` with w = 1 and the restart mass
+    * pinned to the seed. Nodes the walk hasn't reached stay at rank 0
+    * and are filtered; output is the top-50 rank-desc with node
+    * tie-break, and no rows when the graph is empty. */
   def q77Ppr(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
     // local endgame under the gate (see q53); the seed replays the
     // same (deg desc, key asc) argmax locally
-        GraphLocal.halfPairsUnderGate(s, dir) match {
+    GraphLocal.halfPairsUnderGate(s, dir) match {
       case Some(half) => return GraphLocal.pprTop(s, half, Iters)
       case None =>
     }
-    val edges = prs.select($"pa".as("src"), $"pb".as("dst"))
-      .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-      .cache()
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg")).cache()
-    val seed = egoSeed(s, dir)
-    var ranks = deg.select($"src".as("node"),
-      when($"src" === seed, lit(Scale)).otherwise(lit(0L)).as("rank"))
-      .localCheckpoint(true)
-    withLoopWidth(s, edges.count()) {
-    for (_ <- 1 to Iters) {
-      val contrib = edges.join(deg, "src")
-        .join(ranks, $"src" === $"node")
-        .select($"dst", expr("rank div deg").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("c"))
-      ranks = ranks.join(contrib, $"node" === $"dst", "left")
-        .select($"node",
-          (when($"node" === seed, lit(Scale * 15 / 100)).otherwise(lit(0L)) +
-            expr("(85 * coalesce(c, 0L)) div 100")).as("rank"))
-        .localCheckpoint(true)
+    val edges = copurchaseEdges(s, dir).withColumn("w", lit(1L))
+    egoSeed(edges) match {
+      case None => Seq.empty[(Long, Long)].toDF("l_partkey", "ppr_rank")
+      case seed => pagerank(edges, Iters, seed).filter($"rank" > 0L)
+        .select($"node".as("l_partkey"), $"rank".as("ppr_rank"))
+        .orderBy($"ppr_rank".desc, $"l_partkey")
+        .limit(50)
     }
-    }
-    edges.unpersist(); deg.unpersist()
-    ranks.filter($"rank" > 0L)
-      .select($"node".as("l_partkey"), $"rank".as("ppr_rank"))
-      .orderBy($"ppr_rank".desc, $"l_partkey")
-      .limit(50)
   }
 
   /** Radius for q78 — a bounded-radius reach query BY DESIGN (the
@@ -988,47 +953,66 @@ object Graph {
     * the oracle replays the same radius. */
   val ReachRadius = 4
 
-  /** Q78: BFS hop distances within `ReachRadius` of the top-degree
-    * seed part — the ego-network reach table (which products are 1, 2,
-    * 3, 4 basket-hops away). Output (l_partkey, hops), seed included
-    * at 0.
+  /** The distributed frontier BFS of the family — q78 (one seed),
+    * q82 (its pivots) and q88 (two single-seed sweeps) — over a
+    * symmetric edge list (src, dst) and a one-column `seed` frame: one
+    * multi-source loop whose rows carry their seed id. Returns (seed,
+    * node, hops) for every node within `rounds` hops of each seed,
+    * seeds themselves at 0. BFS layers are set-valued (no tie-break
+    * nondeterminism — hops is MIN over paths, and the frontier dedups
+    * on the (seed, node) key).
     *
     * Shape at scale: FRONTIER-based expansion — each round joins only
-    * the newly-reached nodes against the edge list (never the whole
-    * reached set), anti-joins out already-settled nodes, and
-    * `localCheckpoint` flattens lineage per round. Each edge is
-    * traversed at most once per endpoint's frontier round, so total
-    * work is O(edges in the R-ball), not O(R · edges); the joins all
-    * hash on the node key. BFS layers are set-valued (no tie-break
-    * nondeterminism — hops is MIN over paths, and the frontier union
-    * dedups on the node key). */
+    * the newly-reached rows against the edge list (never the whole
+    * settled set) and anti-joins out already-settled (seed, node)
+    * pairs, so each edge is traversed at most once per endpoint per
+    * seed: total work is O(Σ edges in each seed's ball), not
+    * O(rounds · edges), with every join hashed on the node key. Loop
+    * state goes through `checkpointFresh`: the anti-join reads two
+    * descendants of the same checkpointed state, so bare
+    * localCheckpoint would compound inherited stats per round (§6.14).
+    * The loop exits once every seed's frontier is empty — result-
+    * identical, since the remaining rounds add nothing. */
+  private[graft] def bfsHops(edges: DataFrame, seeds: DataFrame,
+      rounds: Int): DataFrame = {
+    val s = edges.sparkSession
+    import s.implicits._
+    var dist = seeds.select($"seed", $"seed".as("node"), lit(0).as("hops"))
+      .checkpointFresh
+    var frontier = dist
+    var cnt = 1L
+    var h = 0
+    withLoopWidth(s, edges.count()) {
+    while (h < rounds && cnt > 0) {
+      val nxt = frontier.join(edges, $"node" === $"src")
+        .select($"seed", $"dst".as("node")).distinct()
+        .join(dist.select($"seed", $"node"), Seq("seed", "node"), "left_anti")
+        .select($"seed", $"node", lit(h + 1).as("hops"))
+        .checkpointFresh
+      dist = dist.unionAll(nxt).checkpointFresh
+      frontier = nxt
+      cnt = nxt.count()
+      h += 1
+    }
+    }
+    dist
+  }
+
+  /** Q78: BFS hop distances within `ReachRadius` of the ego seed — the
+    * ego-network reach table (which products are 1, 2, 3, 4
+    * basket-hops away), `bfsHops` from one seed. Output (l_partkey,
+    * hops), seed included at 0; no rows when the graph is empty. */
   def q78SeedReach(s: SparkSession, dir: String,
       radius: Int = ReachRadius): DataFrame = {
     import s.implicits._
-    val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
     // local endgame under the gate (see q53) — BFS layers are
     // set-valued, so the replay is trivially order-independent
-        GraphLocal.halfPairsUnderGate(s, dir) match {
+    GraphLocal.halfPairsUnderGate(s, dir) match {
       case Some(half) => return GraphLocal.seedReachTable(s, half, radius)
       case None =>
     }
-    val edges = prs.select($"pa".as("src"), $"pb".as("dst"))
-      .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-      .cache()
-    val seed = egoSeed(s, dir)
-    var dist = Seq((seed, 0)).toDF("node", "hops").localCheckpoint(true)
-    var frontier = dist
-    withLoopWidth(s, edges.count()) {
-    for (h <- 1 to radius) {
-      val nxt = frontier.join(edges, $"node" === $"src")
-        .select($"dst".as("node")).distinct()
-        .join(dist.select($"node"), Seq("node"), "left_anti")
-        .select($"node", lit(h).as("hops"))
-        .localCheckpoint(true)
-      dist = dist.unionAll(nxt).localCheckpoint(true)
-      frontier = nxt
-    }
-    }
+    val edges = copurchaseEdges(s, dir).cache()
+    val dist = bfsHops(edges, topByDegree(edges, 1), radius)
     edges.unpersist()
     dist.select($"node".as("l_partkey"), $"hops")
       .orderBy($"l_partkey")
@@ -1048,49 +1032,28 @@ object Graph {
     * count of pivots reaching it. Pivots = the top-S-degree nodes
     * (min-key tie-break), deterministic in both engines.
     *
-    * Shape at scale: ONE multi-source BFS loop serves all pivots —
-    * frontier rows carry their pivot id, expansion joins the edge
-    * list on the node key exactly like q78, the settled set anti-joins
-    * on the (pivot, node) pair key, and total fan-out per round is
-    * ≤ S × the single-source bound. Radius-bounded by design (the
-    * q78 contract): contributions beyond R hops are ≤ Scale/R and
-    * truncation is part of the estimator every engine replays. */
+    * Shape at scale: ONE multi-source `bfsHops` loop serves all
+    * pivots, total fan-out per round ≤ S × the single-source bound.
+    * Radius-bounded by design (the q78 contract): contributions beyond
+    * R hops are ≤ Scale/R and truncation is part of the estimator
+    * every engine replays. */
   def q82Harmonic(s: SparkSession, dir: String,
       nSeeds: Int = HarmonicSeeds, radius: Int = ReachRadius): DataFrame = {
     import s.implicits._
-    val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
     // local endgame under the gate (see q53) — per-pivot BFS + the
     // Scale div hops sum, zero-filled over every node
-        GraphLocal.halfPairsUnderGate(s, dir) match {
+    GraphLocal.halfPairsUnderGate(s, dir) match {
       case Some(half) => return GraphLocal.harmonicTable(s, half, nSeeds, radius)
       case None =>
     }
-    val edges = prs.select($"pa".as("src"), $"pb".as("dst"))
-      .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-      .cache()
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-    val seeds = deg.orderBy($"deg".desc, $"src").limit(nSeeds)
-      .select($"src".as("seed"))
-    var dist = seeds.select($"seed", $"seed".as("node"), lit(0).as("hops"))
-      .localCheckpoint(true)
-    var frontier = dist
-    withLoopWidth(s, edges.count()) {
-    for (h <- 1 to radius) {
-      val nxt = frontier.join(edges, $"node" === $"src")
-        .select($"seed", $"dst".as("node")).distinct()
-        .join(dist.select($"seed", $"node"), Seq("seed", "node"), "left_anti")
-        .select($"seed", $"node", lit(h).as("hops"))
-        .localCheckpoint(true)
-      dist = dist.unionAll(nxt).localCheckpoint(true)
-      frontier = nxt
-    }
-    }
+    val edges = copurchaseEdges(s, dir).cache()
+    val dist = bfsHops(edges, topByDegree(edges, nSeeds), radius)
     edges.unpersist()
     val contrib = dist.filter($"hops" > 0)
       .groupBy($"node")
       .agg(count(lit(1)).cast("long").as("n_seeds"),
         sum(expr(s"$Scale div hops")).as("harmonic_1e6"))
-    deg.select($"src".as("node"))
+    edges.select($"src".as("node")).distinct()
       .join(contrib, Seq("node"), "left")
       .select($"node".as("l_partkey"),
         coalesce($"n_seeds", lit(0L)).as("n_seeds"),
@@ -1366,15 +1329,6 @@ object Graph {
         q84Summarize(s, semiLabeled(s, dir).select(col("node"), col("lbl"))))()
     else q84Compute(s, dir, coloringRounds, rounds)
 
-  /** The copurchase graph's symmetric edge list (q84/q100/q101's
-    * shared input). Lazy plan — callers cache around their loops. */
-  private[graft] def copurchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-    prs.select($"pa".as("src"), $"pb".as("dst"))
-      .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-  }
-
   /** The memoized proper-coloring artifact — ONE trial-coloring run
     * per dataset schedules BOTH q84's LPA sweeps and q101's Louvain
     * move passes (the d2/d7 artifact pattern: the expensive loop runs
@@ -1383,7 +1337,6 @@ object Graph {
     import s.implicits._
     var edges: DataFrame = null
     graft.Caches.memo("q84_coloring", dir) {
-      val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
       // LOCAL ENDGAME (round 14 — the q102 discipline moved to the
       // BASE labeling chain): the thresholded co-purchase graph is
       // metadata-scale at every test SF, and the distributed trial
@@ -1392,7 +1345,7 @@ object Graph {
       // (LouvainLocal.coloring — spec-pinned == trialColoring on
       // constructed + seeded + real graphs); beyond it the
       // distributed schedule runs unchanged.
-            val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
+      val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
       if (halfOpt.isDefined) {
         val ce = GraphLocal.symmetrize(halfOpt.get).map(t => (t._1, t._2))
         LouvainLocal.coloring(ce).toSeq.toDF("node", "color")
@@ -1409,12 +1362,11 @@ object Graph {
     import s.implicits._
     var edges: DataFrame = null
     graft.Caches.memo("q84_semi_labeled", dir) {
-      val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
       // local endgame under the gate (see semiColoredMemo): the LPA
       // sweeps replay over the SHARED coloring artifact — one
       // collect of the memoized (node, color) frame, then
       // LouvainLocal.lpaSweeps (parity spec'd vs semiSweeps)
-            val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
+      val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
       if (halfOpt.isDefined) {
         val ce = GraphLocal.symmetrize(halfOpt.get).map(t => (t._1, t._2))
         val colMap = semiColoredMemo(s, dir)
@@ -1922,18 +1874,15 @@ object Graph {
     import s.implicits._
     val lab = q84LpaSemisync(s, dir)
       .select($"l_partkey".as("node"), $"community".as("lbl"))
-    val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
     // local endgame under the gate (see semiColoredMemo): the score is
     // three integer aggregates over the metadata-scale edge list and
     // the memoized labeling — GraphLocal replays the exact algebra,
     // including the loud int64 overflow guard
-        GraphLocal.halfPairsUnderGate(s, dir).foreach { half =>
+    GraphLocal.halfPairsUnderGate(s, dir).foreach { half =>
       val lmap = lab.as[(Long, Long)].collect().toMap
       return GraphLocal.modularityTable(s, half, lmap)
     }
-    val edges = prs.select($"pa".as("src"), $"pb".as("dst"))
-      .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-    modularityOf(edges, lab).orderBy($"community")
+    modularityOf(copurchaseEdges(s, dir), lab).orderBy($"community")
   }
 
   /** The q100 kernel over an arbitrary symmetric edge list and a
@@ -2226,13 +2175,12 @@ object Graph {
     import s.implicits._
     var edges: DataFrame = null
     graft.Caches.memo("q101_labels", dir) {
-      val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
       // local endgame under the gate (see semiColoredMemo): phase 1 is
       // louvainMovesW with w = 1, strength = degree, m2w = |e| — the
       // exact machinery LouvainLocal.movesW already replays for the
       // coarse level (freshTot + zero-move early exit), over the same
       // shared coloring artifact
-            val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
+      val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
       if (halfOpt.isDefined) {
         val ceW = GraphLocal.symmetrize(halfOpt.get).map(t => (t._1, t._2, 1L))
         val colMap = semiColoredMemo(s, dir)
@@ -2582,13 +2530,14 @@ object Graph {
     * eccentricity. */
   val SsspRounds = 8
 
-  /** Q85: weighted single-source SHORTEST PATHS from the top-degree
-    * seed part — q78's hop-count reach upgraded to edge COSTS. An
-    * edge between parts co-purchased in n baskets costs
-    * `greatest(1, 1000 div n)` (tighter assortment link = cheaper
-    * hop), so the table answers "how strongly is this part CHAINED to
-    * the seed through the assortment", not just "how many hops away":
-    * a part two strong links out ranks closer than one weak link out.
+  /** Q85: weighted single-source SHORTEST PATHS from the ego seed part
+    * (no rows when the graph is empty) — q78's hop-count reach
+    * upgraded to edge COSTS. An edge between parts co-purchased in n
+    * baskets costs `greatest(1, 1000 div n)` (tighter assortment
+    * link = cheaper hop), so the table answers "how strongly is this
+    * part CHAINED to the seed through the assortment", not just "how
+    * many hops away": a part two strong links out ranks closer than
+    * one weak link out.
     *
     * Algorithm: frontier Bellman–Ford. Each round relaxes ONLY edges
     * out of nodes whose distance improved last round — relaxing an
@@ -2633,14 +2582,14 @@ object Graph {
           .select($"node".as("l_partkey"), $"dist")
       case None =>
     }
-    val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-      .select($"pa", $"pb",
-        greatest(lit(1L), expr("1000 div n_orders")).as("w"))
-    val edges = prs.select($"pa".as("src"), $"pb".as("dst"), $"w")
-      .unionAll(prs.select($"pb".as("src"), $"pa".as("dst"), $"w"))
+    val edges = copurchaseEdges(s, dir)
+      .select($"src", $"dst", greatest(lit(1L), expr("1000 div n_orders")).as("w"))
       .cache()
-    val res = ssspFrom(edges, egoSeed(s, dir), rounds)
-      .select($"node".as("l_partkey"), $"dist")
+    val res = egoSeed(edges) match {
+      case None => Seq.empty[(Long, Long)].toDF("l_partkey", "dist")
+      case Some(seed) => ssspFrom(edges, seed, rounds)
+        .select($"node".as("l_partkey"), $"dist")
+    }
     edges.unpersist()
     res
   }
@@ -2747,25 +2696,19 @@ object Graph {
       nSeeds: Int = BetweennessSeeds, radius: Int = ReachRadius): DataFrame = {
     import s.implicits._
     graft.Caches.memo("q86_betweenness", dir) {
-      val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
       // LOCAL ENDGAME (round 15, VERDICT item 3): below the 2²² gate
       // the R-level forward/backward loop replays driver-side with
       // the SAME integer algebra and the SAME overflow guards
       // (GraphLocal.betweennessTable; OptR15Spec pins parity). The
       // distributed kernel below runs unchanged beyond the gate and
       // stays directly spec-driven (Round8Spec constructed graphs).
-            val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
+      val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
       if (halfOpt.isDefined)
         GraphLocal.betweennessTable(s, halfOpt.get, nSeeds, radius)
       else {
-      val edges = prs.select($"pa".as("src"), $"pb".as("dst"))
-        .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-        .cache()
-      val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-      val seeds = deg.orderBy($"deg".desc, $"src").limit(nSeeds)
-        .select($"src".as("seed"))
-      val bet = betweennessFrom(edges, seeds, radius)
-      val out = deg.select($"src".as("node"))
+      val edges = copurchaseEdges(s, dir).cache()
+      val bet = betweennessFrom(edges, topByDegree(edges, nSeeds), radius)
+      val out = edges.select($"src".as("node")).distinct()
         .join(bet, Seq("node"), "left")
         .select($"node".as("l_partkey"),
           coalesce($"bet_1e6", lit(0L)).as("bet_1e6"))
@@ -2916,32 +2859,28 @@ object Graph {
     * node, and the double-sweep bound — the "how wide is this graph"
     * dashboard number next to q73's component table.
     *
-    * Shape at scale: two frontier BFS loops (the q78 bound — each
-    * edge visited once per endpoint frontier), both with
-    * result-identical early exit when the frontier empties; the
-    * argmax is aggregate-only (max(struct(hops, −node))). */
+    * Shape at scale: two single-seed `bfsHops` sweeps; the argmax is
+    * aggregate-only (max(struct(hops, −node))). */
   def q88Diameter(s: SparkSession, dir: String,
       rounds: Int = DiameterRounds): DataFrame = {
     import s.implicits._
     def compute = {
-      val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
       // LOCAL ENDGAME (round 15, VERDICT item 3): both sweeps replay
       // driver-side below the 2²² gate (104 jobs → 2 at sf0.1); the
       // local seed is the same (deg desc, key asc) argmax egoSeed
       // computes. OptR15Spec pins local == forced-distributed.
-            val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
+      val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
       if (halfOpt.isDefined)
         GraphLocal.diameterTable(s, halfOpt.get, rounds)
       else {
-      val edges = prs.select($"pa".as("src"), $"pb".as("dst"))
-        .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-        .cache()
-      val seed = egoSeed(s, dir)
-      val d1 = bfsHops(edges, seed, rounds)
+      val edges = copurchaseEdges(s, dir).cache()
+      val seed = egoSeed(edges).getOrElse(sys.error(
+        "q88_diameter: the threshold-2 co-purchase graph is empty"))
+      val d1 = bfsHops(edges, Seq(seed).toDF("seed"), rounds)
       val (eccSeed, far) = d1
         .agg(max(struct($"hops", (-$"node").as("neg"))).as("m"))
         .select($"m.hops", -$"m.neg").as[(Int, Long)].head()
-      val d2 = bfsHops(edges, far, rounds)
+      val d2 = bfsHops(edges, Seq(far).toDF("seed"), rounds)
       val eccFar = d2.agg(max($"hops")).as[Int].head()
       edges.unpersist()
       Seq((seed, eccSeed, far, eccFar))
@@ -2951,36 +2890,6 @@ object Graph {
     if (rounds == DiameterRounds)
       graft.Caches.memo("q88_diameter", dir)(compute)()
     else compute
-  }
-
-  /** Full-hop BFS kernel (q78's loop without the radius truncation):
-    * settles every node reachable within `rounds`, early-exits when
-    * the frontier empties (result-identical — remaining rounds are
-    * the identity). Loop state goes through `checkpointFresh`: the
-    * step anti-joins `dist` against the frontier expansion, so bare
-    * localCheckpoint would compound inherited stats per round (§6.14). */
-  private[graft] def bfsHops(edges: DataFrame, seed: Long,
-      rounds: Int): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    var dist = Seq((seed, 0)).toDF("node", "hops").checkpointFresh
-    var frontier = dist
-    var cnt = 1L
-    var h = 0
-    withLoopWidth(s, edges.count()) {
-    while (h < rounds && cnt > 0) {
-      val nxt = frontier.join(edges, $"node" === $"src")
-        .select($"dst".as("node")).distinct()
-        .join(dist.select($"node"), Seq("node"), "left_anti")
-        .select($"node", lit(h + 1).as("hops"))
-        .checkpointFresh
-      dist = dist.unionAll(nxt).checkpointFresh
-      frontier = nxt
-      cnt = nxt.count()
-      h += 1
-    }
-    }
-    dist
   }
 
   // ----------------------------------------------------------------
@@ -3029,8 +2938,7 @@ object Graph {
       rounds: Int = TrussRounds): DataFrame = {
     import s.implicits._
     def compute = {
-      val e0 = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-        .select($"pa", $"pb")
+      val e0 = copurchaseHalf(s, dir).select($"pa", $"pb")
       val e = trussPeel(e0, k, rounds, math.max(rounds, 1024))
       // final support measured IN the settled subgraph (≥ k−2 by the
       // fixed point; the coalesce mirrors the oracle's left join)
@@ -3143,8 +3051,7 @@ object Graph {
       p1000: Long = TrussThinP1000): DataFrame = {
     import s.implicits._
     def compute = {
-      val e0 = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-        .select($"pa", $"pb")
+      val e0 = copurchaseHalf(s, dir).select($"pa", $"pb")
       val screened = thinnedSupport(e0, p1000)
         .filter($"cnt" * 1000000L >= lit((k - 2).toLong) * p1000 * p1000)
         .select($"pa", $"pb")
@@ -3276,7 +3183,6 @@ object Graph {
   def q97Anf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.Caches.memo("q97_anf", dir) {
-      val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
       // NOT locally gated (round 15, recorded negative result): a
       // DataSketches HLL union's estimate is FOLD-STRUCTURE- and
       // ORDER-sensitive (GraphLocalSpec: flat=592, two-level=585,
@@ -3285,9 +3191,7 @@ object Graph {
       // the q86/q88/q94 local-endgame bar is unattainable here. The
       // loop instead sheds one job per round (the observe-metric
       // total, see anfLoop).
-      val edges = prs.select($"pa".as("src"), $"pb".as("dst"))
-        .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-        .cache()
+      val edges = copurchaseEdges(s, dir).cache()
       val out = anfFrom(edges, AnfRounds, AnfLgK)
       edges.unpersist()
       out
@@ -3482,7 +3386,6 @@ object Graph {
   def q94Robustness(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     def compute = {
-      val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
       // LOCAL ENDGAME (round 15, VERDICT item 2): below the shared 2²²
       // gate both pointer-jumping component passes — and the degree/
       // hub/size bookkeeping around them — replay driver-side over the
@@ -3490,17 +3393,13 @@ object Graph {
       // sf0.1). The pair BUILD stays distributed at every SF; beyond
       // the gate the distributed passes below run unchanged
       // (OptR15Spec pins local == forced-distributed).
-            val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
+      val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
       if (halfOpt.isDefined)
         GraphLocal.robustnessTable(s, halfOpt.get, RobustnessHubs)
       else {
-      val edges = prs.select($"pa".as("src"), $"pb".as("dst"))
-        .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-        .cache()
+      val edges = copurchaseEdges(s, dir).cache()
       val nEdges = edges.count() / 2
-      val hubs = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-        .orderBy($"deg".desc, $"src").limit(RobustnessHubs)
-        .select($"src").as[Long].collect()
+      val hubs = topByDegree(edges, RobustnessHubs).as[Long].collect()
       val lab1 = Dedup.connectedComponents(s, edges)
       val (n1, lcc1) = sizesOf(lab1)
       val edges2 = edges
@@ -3579,10 +3478,7 @@ object Graph {
     * scale), never over nodes. */
   def q95DegreeDist(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-    val edges = prs.select($"pa".as("src"), $"pb".as("dst"))
-      .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-    val hist = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
+    val hist = copurchaseEdges(s, dir).groupBy($"src").agg(count(lit(1)).as("deg"))
       .groupBy($"deg").agg(count(lit(1)).as("n_nodes"))
     val total = hist.agg(sum($"n_nodes").as("n_total"))
     val w = org.apache.spark.sql.expressions.Window.orderBy($"deg".desc)
@@ -3640,10 +3536,7 @@ object Graph {
     * aggregate — no window, no collect, wire is O(edges) then O(1). */
   def q89Assortativity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val prs = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
-    val edges = prs.select($"pa".as("src"), $"pb".as("dst"))
-      .unionAll(prs.select($"pb".as("src"), $"pa".as("dst")))
-    assortativityStats(edges)
+    assortativityStats(copurchaseEdges(s, dir))
   }
 
   /** The q89 kernel over an arbitrary symmetric edge list (src, dst). */

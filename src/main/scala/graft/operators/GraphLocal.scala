@@ -72,7 +72,7 @@ object GraphLocal {
       import s.implicits._
       val maxPairs = gate / 2
       val lim = math.min(maxPairs + 1, Int.MaxValue.toLong - 1).toInt
-      val arr = Analytics.copurchasePairs(s, dir).filter($"n_orders" >= 2)
+      val arr = Graph.copurchaseHalf(s, dir)
         .select($"pa", $"pb", $"n_orders".cast("long"))
         .limit(lim).as[(Long, Long, Long)].collect()
       (arr, arr.length >= lim)
@@ -93,70 +93,29 @@ object GraphLocal {
   private def degrees(es: Array[(Long, Long, Long)]): Map[Long, Long] =
     es.groupBy(_._1).map { case (n, xs) => n -> xs.length.toLong }
 
-  /** The ego seed: max symmetric degree, min key on ties — exactly
-    * `Graph.egoSeed`'s orderBy(deg desc, n).head. */
-  private def seedOf(deg: Map[Long, Long]): Long =
-    deg.toSeq.minBy { case (n, d) => (-d, n) }._1
+  /** Neighbor lists of symmetric edges: src → its dsts. */
+  private def adjacency(es: Array[(Long, Long, Long)]): Map[Long, Array[Long]] =
+    es.groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2) }
 
-  /** q53/q77's damped integer PageRank rounds. `seed` = None is the
-    * uniform restart (q53), Some(s) pins the restart mass (q77). */
+  /** The top-`k` nodes by degree (deg desc, key asc) — exactly
+    * `Graph.topByDegree`'s orderBy(deg desc, src).limit(k). */
+  private def topByDegree(deg: Map[Long, Long], k: Int): Seq[Long] =
+    deg.toSeq.sortBy { case (n, d) => (-d, n) }.take(k).map(_._1)
+
+  /** The ego seed: `Graph.egoSeed`'s top-1 by degree. */
+  private def seedOf(deg: Map[Long, Long]): Long = topByDegree(deg, 1).head
+
+  /** `Graph.pagerank` replayed: damped integer PageRank rounds over
+    * symmetric weighted edges (src, dst, w), contrib = (rank·w) div
+    * Σw(src). `seed` = None is the uniform restart, Some(s) pins the
+    * restart mass; w = 1 is the unweighted walk (Σw = degree). */
   private def rankRounds(es: Array[(Long, Long, Long)], iters: Int,
       seed: Option[Long]): Map[Long, Long] = {
-    val deg = degrees(es)
+    val wdeg = es.groupBy(_._1).map { case (n, xs) => n -> xs.map(_._3).sum }
     val scale = Graph.Scale
-    var ranks: Map[Long, Long] = seed match {
-      case None => deg.map { case (n, _) => n -> scale }
-      case Some(sd) => deg.map { case (n, _) => n -> (if (n == sd) scale else 0L) }
-    }
-    for (_ <- 1 to iters) {
-      val c = collection.mutable.HashMap.empty[Long, Long]
-      es.foreach { case (src, dst, _) =>
-        val add = ranks(src) / deg(src)
-        c.update(dst, Math.addExact(c.getOrElse(dst, 0L), add))
-      }
-      ranks = ranks.map { case (n, _) =>
-        val base = seed match {
-          case None => scale * 15 / 100
-          case Some(sd) => if (n == sd) scale * 15 / 100 else 0L
-        }
-        n -> Math.addExact(base,
-          Math.multiplyExact(85L, c.getOrElse(n, 0L)) / 100)
-      }
-    }
-    ranks
-  }
-
-  /** q53: top-50 (rank desc, node asc) as (l_partkey, pr_rank). */
-  def pagerankTop(s: SparkSession, half: Array[(Long, Long, Long)], iters: Int,
-      outCol: String): DataFrame = {
-    import s.implicits._
-    val ranks = rankRounds(symmetrize(half), iters, None)
-    val top = ranks.toSeq.sortBy { case (n, r) => (-r, n) }.take(50)
-    top.toDF("l_partkey", outCol)
-      .orderBy(col(outCol).desc, $"l_partkey")
-  }
-
-  /** q77: personalized variant — rank>0 filter, top-50. */
-  def pprTop(s: SparkSession, half: Array[(Long, Long, Long)], iters: Int): DataFrame = {
-    import s.implicits._
-    val es = symmetrize(half)
-    val seed = seedOf(degrees(es))
-    val ranks = rankRounds(es, iters, Some(seed))
-    val top = ranks.toSeq.filter(_._2 > 0L)
-      .sortBy { case (n, r) => (-r, n) }.take(50)
-    top.toDF("l_partkey", "ppr_rank")
-      .orderBy($"ppr_rank".desc, $"l_partkey")
-  }
-
-  /** q80: weighted rounds — contrib = (rank·w) div Σw(src). */
-  def weightedPagerankTop(s: SparkSession, half: Array[(Long, Long, Long)],
-      iters: Int): DataFrame = {
-    import s.implicits._
-    val es = symmetrize(half)
-    val scale = Graph.Scale
-    val wdeg = es.groupBy(_._1).map { case (n, xs) =>
-      n -> xs.map(_._3).sum }
-    var ranks: Map[Long, Long] = wdeg.map { case (n, _) => n -> scale }
+    def pinned(n: Long, mass: Long): Long =
+      if (seed.forall(_ == n)) mass else 0L
+    var ranks: Map[Long, Long] = wdeg.map { case (n, _) => n -> pinned(n, scale) }
     for (_ <- 1 to iters) {
       val c = collection.mutable.HashMap.empty[Long, Long]
       es.foreach { case (src, dst, w) =>
@@ -164,14 +123,42 @@ object GraphLocal {
         c.update(dst, Math.addExact(c.getOrElse(dst, 0L), add))
       }
       ranks = ranks.map { case (n, _) =>
-        n -> Math.addExact(scale * 15 / 100,
+        n -> Math.addExact(pinned(n, scale * 15 / 100),
           Math.multiplyExact(85L, c.getOrElse(n, 0L)) / 100)
       }
     }
-    val top = ranks.toSeq.sortBy { case (n, r) => (-r, n) }.take(50)
-    top.toDF("l_partkey", "wpr_rank")
-      .orderBy($"wpr_rank".desc, $"l_partkey")
+    ranks
   }
+
+  /** Top-50 of `ranks` (rank desc, node asc) as (l_partkey, `outCol`). */
+  private def top50(s: SparkSession, ranks: Map[Long, Long],
+      outCol: String): DataFrame = {
+    import s.implicits._
+    ranks.toSeq.sortBy { case (n, r) => (-r, n) }.take(50)
+      .toDF("l_partkey", outCol)
+      .orderBy(col(outCol).desc, $"l_partkey")
+  }
+
+  /** Symmetric edges with w = 1: q53/q77's unweighted walk. */
+  private def unweighted(half: Array[(Long, Long, Long)]): Array[(Long, Long, Long)] =
+    symmetrize(half).map { case (a, b, _) => (a, b, 1L) }
+
+  /** q53: uniform ranks, top-50 as (l_partkey, pr_rank). */
+  def pagerankTop(s: SparkSession, half: Array[(Long, Long, Long)],
+      iters: Int): DataFrame =
+    top50(s, rankRounds(unweighted(half), iters, None), "pr_rank")
+
+  /** q77: personalized from the ego seed — rank > 0 filter, top-50. */
+  def pprTop(s: SparkSession, half: Array[(Long, Long, Long)], iters: Int): DataFrame = {
+    val es = unweighted(half)
+    val ranks = rankRounds(es, iters, Some(seedOf(degrees(es))))
+    top50(s, ranks.filter(_._2 > 0L), "ppr_rank")
+  }
+
+  /** q80: weighted by n_orders, top-50 as (l_partkey, wpr_rank). */
+  def weightedPagerankTop(s: SparkSession, half: Array[(Long, Long, Long)],
+      iters: Int): DataFrame =
+    top50(s, rankRounds(symmetrize(half), iters, None), "wpr_rank")
 
   /** q81: synchronous LPA — per round each node adopts its neighbors'
     * most frequent label, ties to the MIN label (the distributed
@@ -207,8 +194,7 @@ object GraphLocal {
   def coreHindexTable(s: SparkSession, half: Array[(Long, Long, Long)],
       rounds: Int): DataFrame = {
     import s.implicits._
-    val es = symmetrize(half)
-    val nbrs = es.groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2) }
+    val nbrs = adjacency(symmetrize(half))
     var c: Map[Long, Long] = nbrs.map { case (n, xs) => n -> xs.length.toLong }
     var tot = c.values.sum
     var converged = false
@@ -248,9 +234,7 @@ object GraphLocal {
       radius: Int): DataFrame = {
     import s.implicits._
     val es = symmetrize(half)
-    val adj = es.groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2) }
-    val seed = seedOf(degrees(es))
-    bfs(adj, seed, radius).toSeq.sortBy(_._1)
+    bfs(adjacency(es), seedOf(degrees(es)), radius).toSeq.sortBy(_._1)
       .toDF("l_partkey", "hops").orderBy($"l_partkey")
   }
 
@@ -293,9 +277,8 @@ object GraphLocal {
     import s.implicits._
     val es = symmetrize(half)
     val deg = degrees(es)
-    val adj = es.groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2) }
-    val seeds = deg.toSeq.sortBy { case (n, d) => (-d, n) }
-      .take(nSeeds).map(_._1)
+    val adj = adjacency(es)
+    val seeds = topByDegree(deg, nSeeds)
     val contrib = collection.mutable.HashMap.empty[Long, (Long, Long)]
     seeds.foreach { sd =>
       bfs(adj, sd, radius).foreach { case (n, h) =>
@@ -360,8 +343,7 @@ object GraphLocal {
     import s.implicits._
     val es = symmetrize(half)
     val nEdges = es.length.toLong / 2
-    val hubs = degrees(es).toSeq.sortBy { case (n, d) => (-d, n) }
-      .take(hubK).map(_._1).toSet
+    val hubs = topByDegree(degrees(es), hubK).toSet
     def ccSizes(pairs: Array[(Long, Long)]): (Long, Long) = {
       val sizes = ccLabels(pairs).groupBy(_._2).map(_._2.size.toLong)
       (sizes.sum, sizes.max)
@@ -383,7 +365,7 @@ object GraphLocal {
   def diameterTable(s: SparkSession, half: Array[(Long, Long, Long)], rounds: Int): DataFrame = {
     import s.implicits._
     val es = symmetrize(half)
-    val adj = es.groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2) }
+    val adj = adjacency(es)
     val seed = seedOf(degrees(es))
     val d1 = bfs(adj, seed, rounds)
     val eccSeed = d1.values.max
@@ -405,9 +387,8 @@ object GraphLocal {
     import s.implicits._
     val es = symmetrize(half)
     val deg = degrees(es)
-    val adj = es.groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2) }
-    val seeds = deg.toSeq.sortBy { case (n, d) => (-d, n) }
-      .take(nSeeds).map(_._1)
+    val adj = adjacency(es)
+    val seeds = topByDegree(deg, nSeeds)
     // forward: perLevel(h) = (seed, node) -> σ
     val settled = collection.mutable.HashSet.empty[(Long, Long)]
     seeds.foreach(sd => settled += ((sd, sd)))

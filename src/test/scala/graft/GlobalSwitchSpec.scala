@@ -63,4 +63,16 @@ class GlobalSwitchSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
   }
+
+  // the co-purchase graph is thresholded in one builder
+  // (`Graph.copurchaseHalf`); a second copy can drift from it and from
+  // the oracle's HAVING count(*) >= 2
+  test("operators apply the co-purchase threshold in one place") {
+    val hits = for {
+      f <- sources("operators")
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("$\"n_orders\" >= 2")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.size <= 1, hits.mkString("\n", "\n", ""))
+  }
 }

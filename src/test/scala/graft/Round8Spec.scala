@@ -743,12 +743,12 @@ class Round8Spec extends GraftSpecBase {
     val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L),
       (1L, 5L), (1L, 6L), (3L, 7L))
     val sym = symmetric(pairs)
-    val d1 = operators.Graph.bfsHops(sym, 2L, rounds = 12)
-      .as[(Long, Int)].collect().toMap
+    val d1 = operators.Graph.bfsHops(sym, Seq(2L).toDF("seed"), rounds = 12)
+      .select($"node", $"hops").as[(Long, Int)].collect().toMap
     assert(d1.size == 8 && d1(5L) == 2 && d1(4L) == 2)
     val far = d1.toSeq.maxBy { case (n, h) => (h, -n) }._1
-    val d2 = operators.Graph.bfsHops(sym, far, rounds = 12)
-      .as[(Long, Int)].collect().toMap
+    val d2 = operators.Graph.bfsHops(sym, Seq(far).toDF("seed"), rounds = 12)
+      .select($"node", $"hops").as[(Long, Int)].collect().toMap
     assert(d2.values.max == 4, s"tree diameter must be exact: got ${d2.values.max}")
   }
 
