@@ -1253,11 +1253,12 @@ object Analytics {
     // sketch input is the canonical STRING form (injective, so the
     // cardinality is the column's own) — HLL accepts int/long/string/
     // binary but not DATE
-    profileOf(s, dir, c => hll_sketch_estimate(hll_sketch_agg(c.cast("string"), 14)))
+    profileOf(s, dir, c => hll_sketch_estimate(hll_sketch_agg(c.cast("string"), 14)),
+      splitDistinct = false)
 
   private def profileOf(s: SparkSession, dir: String,
       distinctAgg: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      splitDistinct: Boolean = false)
+      splitDistinct: Boolean)
       : DataFrame = {
     import s.implicits._
     val o = Tables.orders(s, dir)

@@ -580,18 +580,12 @@ object Dedup {
         if (probe.length <= gate)
           return GraphLocal.componentsTable(s, probe)
       }
-      val nEdges = edges.count()
       // the iterative tail runs many small jobs; its shuffle width
       // follows the pair-graph size (the per-stage decision AQE makes
       // for one-shot queries) — a dup graph of thousands of edges on a
       // 32-way shuffle is pure task-startup overhead per round, while
       // a billion-edge graph keeps the session's full width
-      val loopParts = math.max(1L, math.min(
-        s.sessionState.conf.numShufflePartitions.toLong,
-        nEdges / 100000L)).toInt
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-      try {
+      Graph.withLoopWidth(s, edges.count()) {
       var labels = edges.select($"src".as("doc_id")).distinct()
         .select($"doc_id", $"doc_id".as("group_id"))
         .localCheckpoint(true)
@@ -639,7 +633,7 @@ object Dedup {
         s"label propagation did not converge in $maxIters rounds " +
           s"($changed labels still changing) — component diameter exceeds the bound")
       labels
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }
   }
 

@@ -1379,7 +1379,7 @@ object Graph {
           .toDF("node", "color", "lbl")
       } else {
         edges = copurchaseEdges(s, dir).cache()
-        semiSweeps(edges, semiColoredMemo(s, dir), colorBudget = SemiColors)
+        semiSweeps(edges, semiColoredMemo(s, dir), SemiColors)
       }
     }(if (edges != null) edges.unpersist())
   }
@@ -1402,7 +1402,28 @@ object Graph {
     out
   }
 
-  /** The windowed-trial-coloring schedule — colors to COMPLETION:
+  /** The windowed pick's free palette, HUB-SAFE: the pick only ever
+    * reads the min(|free|, W) smallest free colors, and the k-th
+    * smallest free color is ≤ |used| + k (at most |used| exclusions
+    * below it), so truncating the candidate sequence at
+    * |used| + SemiPickWindow preserves (a) ALL free colors when
+    * |free| ≤ W — the |free|-th is ≤ |used| + W — and (b) the first W
+    * otherwise; either way both the modulus min(|free|, W) and the
+    * indexed element are unchanged → the pick is BIT-IDENTICAL to the
+    * full [1..deg+1] palette the oracle replays. The row cost drops
+    * from O(deg) to O(|used| + W) ≤ O(colors-so-far): a 10⁶-degree
+    * hub on a power-law graph allocates a ≤ ~50-element array per
+    * round instead of a 10⁶-element one (executor-memory scale
+    * guard; Round12Spec pins both the bound and pick equality). */
+  private[graft] def freePalette(deg: Column, used: Column): Column =
+    array_except(
+      sequence(lit(1L),
+        least(deg + 1L, size(used).cast("long") + lit(SemiPickWindow.toLong))),
+      used)
+
+  /** The windowed-trial-coloring schedule — one schedule: picks
+    * among the `SemiPickWindow` smallest free colors, the colored-
+    * neighbor sets carried incrementally — colors to COMPLETION:
     * every node must land in some class or the sweeps would never
     * update it. `coloringRounds` sizes the ORACLE's unrolled replay
     * (rounds past completion are the identity — no uncolored nodes,
@@ -1427,30 +1448,8 @@ object Graph {
     * references the previous state frame twice — the composed subplan
     * duplicates ~2^k). The per-round form stays simple; the round
     * COUNT is where the 20× win came from. */
-  /** The windowed pick's free palette, HUB-SAFE: the pick only ever
-    * reads the min(|free|, W) smallest free colors, and the k-th
-    * smallest free color is ≤ |used| + k (at most |used| exclusions
-    * below it), so truncating the candidate sequence at
-    * |used| + SemiPickWindow preserves (a) ALL free colors when
-    * |free| ≤ W — the |free|-th is ≤ |used| + W — and (b) the first W
-    * otherwise; either way both the modulus min(|free|, W) and the
-    * indexed element are unchanged → the pick is BIT-IDENTICAL to the
-    * full [1..deg+1] palette the oracle replays. The row cost drops
-    * from O(deg) to O(|used| + W) ≤ O(colors-so-far): a 10⁶-degree
-    * hub on a power-law graph allocates a ≤ ~50-element array per
-    * round instead of a 10⁶-element one (executor-memory scale
-    * guard; Round12Spec pins both the bound and pick equality). */
-  private[graft] def freePalette(deg: Column, used: Column,
-      window: Int = SemiPickWindow): Column =
-    array_except(
-      sequence(lit(1L),
-        least(deg + 1L, size(used).cast("long") + lit(window.toLong))),
-      used)
-
   private[graft] def trialColoring(edges: DataFrame,
-      coloringRounds: Int,
-      window: Int = SemiPickWindow,
-      incrementalUsed: Boolean = true): (DataFrame, Int) = {
+      coloringRounds: Int): (DataFrame, Int) = {
     val s = edges.sparkSession
     import s.implicits._
     // graph-sized loop width (see withLoopWidth): every round runs a
@@ -1472,14 +1471,14 @@ object Graph {
     // neighbors, carried for still-uncolored nodes. A neighbor's
     // color enters the set exactly once — the round it colors — so
     // the whole loop touches each edge ONCE (O(E) aggregate work
-    // total) where the recomputing form re-joins every colored
-    // neighborhood every round (O(E·rounds)). Membership is what the
-    // pick reads (array_except + size are order-free), and
-    // delta-union-distinct preserves membership exactly, so picks are
-    // BIT-IDENTICAL to the full recomputation the oracle replays
-    // (spec: both strategies swept equal on constructed + real
-    // graphs). The trade is one node-keyed outer-merge + checkpoint
-    // per round — edge-scale work drops, node-scale bookkeeping
+    // total) where recomputing re-joins every colored neighborhood
+    // every round (O(E·rounds)). Membership is what the pick reads
+    // (array_except + size are order-free), and delta-union-distinct
+    // preserves membership exactly, so picks are BIT-IDENTICAL to the
+    // full recomputation the oracle (and LouvainLocal.coloring)
+    // replays (spec-pinned against it on constructed + real graphs).
+    // The trade is one node-keyed outer-merge + checkpoint per
+    // round — edge-scale work drops, node-scale bookkeeping
     // appears: same-box back-to-back A/B measured the 20× coloring
     // 60.8 → 29.8 s (2.0×) and sf0.1 inside noise (9.5 vs 9.0 s —
     // the small graph's 3 rounds never amortize either way).
@@ -1493,26 +1492,15 @@ object Graph {
       // drives the windowed pick index — a pairwise-independent
       // permutation, so adjacent nodes' picks decorrelate)
       val prio = ($"node" * semiPrioA(r)) % SemiPrioM
-      // colors used by COLORED neighbors (bounded by degree) — served
-      // from the incremental state, or recomputed (only UNCOLORED
-      // srcs are ever read, so the semi-join prefilter shrinks the
-      // recomputing form's aggregation input — the round-12 plan cut
-      // kept for the A/B path and the spec's bit-identity sweep)
-      val used =
-        if (incrementalUsed) usedSt
-        else edges
-          .join(unc.select($"node".as("src")), Seq("src"), "left_semi")
-          .join(col.select($"node".as("dst"), $"color"), "dst")
-          .groupBy($"src").agg(collect_set($"color".cast("long")).as("used"))
-          .withColumnRenamed("src", "node")
-      // free palette (ascending) and the windowed pick
+      // free palette (ascending) over the carried colored-neighbor
+      // colors, and the windowed pick
       val picks = unc
-        .join(used, Seq("node"), "left")
+        .join(usedSt, Seq("node"), "left")
         .withColumn("prio", prio)
         .withColumn("free", freePalette($"deg",
-          coalesce($"used", array().cast("array<long>")), window))
+          coalesce($"used", array().cast("array<long>"))))
         .withColumn("pick", element_at($"free",
-          (($"prio" % least(size($"free"), lit(window))) + 1)
+          (($"prio" % least(size($"free"), lit(SemiPickWindow))) + 1)
             .cast("int")))
         .select($"node", $"prio", $"pick")
         .cache()
@@ -1542,7 +1530,7 @@ object Graph {
       col = col.unionAll(newly).checkpointFresh
       unc = unc.join(newly.select($"node"), Seq("node"), "left_anti")
         .checkpointFresh
-      if (incrementalUsed && uncCnt - nNew > 0) {
+      if (uncCnt - nNew > 0) {
         // fold this round's newly-colored neighbors into the carried
         // state: each edge contributes in exactly one round's delta.
         // Rows for nodes that just colored leave the state (anti-join)
@@ -1577,34 +1565,25 @@ object Graph {
   private[graft] val lpaSweepSteps = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** q84's engine over a symmetric edge list: returns (node, lbl)
-    * at the stable labeling. Separated so specs can drive constructed
-    * graphs (the 2-cycle graphs q81 oscillates on). */
+    * at the stable labeling, checked against the oracle's
+    * `SemiColors` class budget. Separated so specs can drive
+    * constructed graphs (the 2-cycle graphs q81 oscillates on). */
   private[graft] def semiSyncLabels(edges: DataFrame,
       coloringRounds: Int = SemiColoringRounds,
-      rounds: Int = SemiLpaRounds,
-      window: Int = SemiPickWindow): DataFrame =
-    semiSyncLabeled(edges, coloringRounds, rounds, window)
-      .select(col("node"), col("lbl"))
-
-  /** The full (node, color, lbl) frame behind `semiSyncLabels`. */
-  private[graft] def semiSyncLabeled(edges: DataFrame,
-      coloringRounds: Int = SemiColoringRounds,
-      rounds: Int = SemiLpaRounds,
-      window: Int = SemiPickWindow): DataFrame =
-    semiSweeps(edges, trialColoring(edges, coloringRounds, window)._1, rounds)
+      rounds: Int = SemiLpaRounds): DataFrame =
+    semiSweeps(edges, trialColoring(edges, coloringRounds)._1,
+      SemiColors, rounds).select(col("node"), col("lbl"))
 
   /** The per-color LPA sweep schedule over a PREBUILT proper coloring
     * — separated so the coloring artifact can be shared with q101's
     * Louvain schedule (`semiColoredMemo`). */
   private[graft] def semiSweeps(edges: DataFrame, col: DataFrame,
-      rounds: Int = SemiLpaRounds, colorBudget: Int = 0): DataFrame = {
+      colorBudget: Int, rounds: Int = SemiLpaRounds): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
     val nColors = col.agg(max($"color")).as[Int].head()
     // same loud guard as louvainMovesW: the oracle unrolls a fixed
-    // class budget; sweeping past it would diverge silently. Entry
-    // paths pass their oracle's budget; constructed-graph spec calls
-    // leave it unchecked (0).
+    // class budget; sweeping past it would diverge silently
     checkColorBudget("q84", nColors, colorBudget)
     // graph-sized loop width (see withLoopWidth): each sweep step is
     // one class-restricted join chain + checkpoint; the argmax is an
@@ -1940,17 +1919,14 @@ object Graph {
     * gain (ties → min label; no positive gain → stay). Classes are
     * independent sets, so a member's neighbor-community edge counts
     * k_{v,C} are EXACT under simultaneous within-class moves; the
-    * community volumes Σ_C deg refresh PER CLASS STEP (round 13 —
-    * the q102 freshTot policy adopted for phase 1 after measurement:
-    * the round-frozen form, originally shipped as "second-order
-    * staleness", OSCILLATES on the dense sf0.001 graph — moves
+    * community volumes Σ_C deg refresh PER CLASS STEP, the one
+    * schedule of `louvainMovesW` (why: volumes frozen at round start
+    * OSCILLATE on the dense sf0.001 graph — moves
     * 193/81/124/149/129/155 over 6 rounds, snowballing into 4
     * over-merged communities at Σ q_num 727,882 — while per-step
     * volumes CONVERGE 169/62/30/20/17/13 and land 12 communities at
     * Σ q_num 3,588,086, 4.9× the modularity, at no wall-clock cost;
-    * §6.18. The phase-2 collapse measurement predicted this — stale
-    * volumes under-penalize the snowballing community at every
-    * scale).
+    * §6.18).
     *
     * The gain is Newman modularity's exact integer numerator: moving
     * v (degree k_v) from community A to C changes Q·(2m)²/2 by
@@ -1964,9 +1940,9 @@ object Graph {
     * to the class (left_semi on the shrinking member set) + one
     * (node, community) count + a broadcast-scale volume join + one
     * agg-only argmax — the q84 sweep shape with a volumes join. The
-    * volumes frame is |communities|-sized and refreshed once per
-    * round. Rounds × colors driver-synchronized steps is the q84
-    * price, bounded by the ZERO-MOVE ROUND EARLY EXIT (round 13):
+    * volumes frame is |communities|-sized. Rounds × colors
+    * driver-synchronized steps is the q84 price, bounded by the
+    * ZERO-MOVE ROUND EARLY EXIT (round 13):
     * a round that applies no move is a fixed point, and the fixed
     * point is ABSORBING — volumes are a pure function of the (now
     * frozen) labeling, so every later round replays the same gains
@@ -1977,17 +1953,14 @@ object Graph {
     * metric (the d6 convergence-count discipline) — zero extra
     * jobs. */
   private[graft] def louvainMoves(edges: DataFrame, labeled: DataFrame,
-      rounds: Int = LouvainRounds,
-      colorBudget: Int = 0,
-      earlyExit: Boolean = true,
-      freshTot: Boolean = true): DataFrame = {
+      colorBudget: Int, rounds: Int = LouvainRounds): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
     val deg = edges.groupBy($"src".as("node"))
       .agg(count(lit(1)).as("s")).cache()
     val m2 = edges.count() // |e| = 2m: one scalar, the only driver value
     val out = louvainMovesW(edges.withColumn("w", lit(1L)), deg, m2,
-      labeled, rounds, freshTot, colorBudget, earlyExit)
+      labeled, rounds, colorBudget)
     deg.unpersist()
     out
   }
@@ -2041,7 +2014,7 @@ object Graph {
     * already computed for the sweep schedule. */
   private[graft] def checkColorBudget(op: String, nColors: Int,
       colorBudget: Int): Unit =
-    if (colorBudget > 0 && nColors > colorBudget) {
+    if (nColors > colorBudget) {
       val msg = s"$op: coloring used $nColors classes > the oracle's " +
         s"unroll budget $colorBudget — raise the budget (and the " +
         "unrolled oracle with it) rather than diverge silently"
@@ -2056,12 +2029,24 @@ object Graph {
     * directed count — the standard Σw + 2·loops), and `m2w` = Σ
     * strength, which coarsening leaves INVARIANT (= the base graph's
     * |e| — the property that makes phase-2 gains the same global Q
-    * algebra as phase 1's). */
+    * algebra as phase 1's).
+    *
+    * One schedule, the one both phases and both oracles ship: rounds
+    * of classes ascending, community volumes recomputed from the
+    * CURRENT labeling before every class step, and an exit after the
+    * first round that moves nothing (the remaining budget replays as
+    * the identity; the oracle still unrolls it). Why per-step volumes:
+    * frozen at round start they SNOWBALL — at sf0.001 phase 2 (9
+    * supernodes / 8 colors ⟹ nearly-sequential steps against fully
+    * stale volumes) collapses Q·(2m)² 569,980 → 3,104, while per-step
+    * volumes improve and converge (→ 779,378, stable from round 1);
+    * phase 1's measurement is on `louvainMoves`. The volumes frame is
+    * community-count-sized, so the per-step aggregate is
+    * metadata-scale. The color budget is the oracle unroll's class
+    * count (`checkColorBudget`). */
   private[graft] def louvainMovesW(edges: DataFrame, strength: DataFrame,
       m2w: Long, labeled: DataFrame, rounds: Int,
-      freshTot: Boolean = false,
-      colorBudget: Int = 0,
-      earlyExit: Boolean = true): DataFrame = {
+      colorBudget: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
     val nColors = labeled.agg(coalesce(max($"color"), lit(0))).as[Int].head()
@@ -2086,25 +2071,14 @@ object Graph {
     var lbl = labeled.select($"node", $"color", $"lbl").checkpointFresh
     var round = 0
     var fixedPoint = false
-    while (round < rounds && !(earlyExit && fixedPoint)) {
+    while (round < rounds && !fixedPoint) {
       var movedInRound = 0L
-      // Community volumes: phase 1 freezes them at ROUND start (one
-      // aggregate per round — singleton strengths are tiny next to
-      // 2m, so staleness is second-order); phase 2 refreshes PER
-      // CLASS STEP (freshTot) — supernode strengths are community-
-      // scale, and measured at sf0.001 the frozen policy SNOWBALLS
-      // (9 supernodes / 8 colors ⟹ nearly-sequential steps against
-      // fully stale volumes: Q·(2m)² 569,980 → 3,104 collapse),
-      // while per-step volumes improve and converge (→ 779,378,
-      // stable from round 1). The supergraph is community-count-
-      // sized, so the extra per-step aggregate is metadata-scale.
-      def volumes() = lbl.join(strength, "node")
-        .groupBy($"lbl".as("c_lbl")).agg(sum($"s").as("tot"))
-        .cache()
-      var tot = volumes()
       for (c <- 1 to nColors) {
         louvainMoveSteps.incrementAndGet()
-        if (freshTot && c > 1) { tot.unpersist(); tot = volumes() }
+        // community volumes from the CURRENT labeling (per class step)
+        val tot = lbl.join(strength, "node")
+          .groupBy($"lbl".as("c_lbl")).agg(sum($"s").as("tot"))
+          .cache()
         val cls = lbl.filter($"color" === c)
           .select($"node".as("src"), $"lbl".as("cur"))
         val kv = edges
@@ -2141,8 +2115,8 @@ object Graph {
         val stepMoved =
           Option(obs.get("moved")).map(_.asInstanceOf[Long]).getOrElse(0L)
         movedInRound += stepMoved
+        tot.unpersist()
       }
-      tot.unpersist()
       round += 1
       // zero-move round ⟹ fixed point ⟹ absorbing (volumes are a
       // pure function of the unchanged labeling): the remaining
@@ -2178,8 +2152,7 @@ object Graph {
       // local endgame under the gate (see semiColoredMemo): phase 1 is
       // louvainMovesW with w = 1, strength = degree, m2w = |e| — the
       // exact machinery LouvainLocal.movesW already replays for the
-      // coarse level (freshTot + zero-move early exit), over the same
-      // shared coloring artifact
+      // coarse level, over the same shared coloring artifact
       val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
       if (halfOpt.isDefined) {
         val ceW = GraphLocal.symmetrize(halfOpt.get).map(t => (t._1, t._2, 1L))
@@ -2194,8 +2167,7 @@ object Graph {
       } else {
         edges = copurchaseEdges(s, dir).cache()
         louvainMoves(edges, semiColoredMemo(s, dir)
-          .select($"node", $"color", $"node".as("lbl")),
-          colorBudget = SemiColors)
+          .select($"node", $"color", $"node".as("lbl")), SemiColors)
       }
     }(if (edges != null) edges.unpersist())
   }
@@ -2218,10 +2190,9 @@ object Graph {
     * merges phase 1 could only reach through a chain of individually
     * negative node moves happen in one supernode move (measured: Σ
     * q_num strictly improves over q101 at sf0.001). Volumes refresh
-    * PER CLASS STEP here (`freshTot` — see louvainMovesW: with
-    * community-scale strengths the round-frozen policy measurably
-    * snowballs into a near-total collapse; per-step volumes improve
-    * and converge).
+    * PER CLASS STEP (see louvainMovesW: with community-scale
+    * strengths, round-frozen volumes measurably snowball into a
+    * near-total collapse).
     *
     * Shape at scale: the contraction is ONE (label, label) aggregate
     * over the edge list; everything after runs on a graph whose node
@@ -2278,7 +2249,7 @@ object Graph {
           SemiColoringRounds)
         val init2 = col2.select($"node", $"color", $"node".as("lbl"))
         louvainMovesW(cross, strength, m2w, init2, LouvainP2Rounds,
-          freshTot = true, colorBudget = LouvainP2Colors)
+          LouvainP2Colors)
       }
     // isolated supernodes never entered the cross graph: keep their
     // phase-1 label (they have no neighbors to move toward)
@@ -2290,37 +2261,24 @@ object Graph {
     out
   }
 
-  /** Q101 oracle: the shared coloring CTE prefix, a singleton init
-    * `lv_0`, then per move round r and class step c: a volumes CTE
-    * `lt_r_c` refreshed from the CURRENT labeling (round 13 — the
-    * freshTot policy adopted for phase 1, see louvainMoves), a
-    * `kv_r_c` (per-member neighbor-community counts) and `lv_r_c`
-    * (apply the best strictly-positive-gain move, ties → min label).
-    * HUGEINT products ≡ Spark's DECIMAL(38,0) — both exact. ~17
-    * coloring + 3×(3×24) move CTEs ≈ 233, under the 374 precedent. */
   /** The Louvain move-round CTEs over arbitrary table names — ONE
     * recipe for both phases: phase 1 reads (e, dg.deg, k = count(*));
     * phase 2 reads (e2, st2.s, k = sum of edge weights). `tag`
     * suffixes the lt/kv/lv names; `init` is the singleton CTE. */
   private[graft] def louvainMoveCtes(e: String, st: String, sCol: String,
       kAgg: String, init: String, tag: String,
-      colors: Int, moveRounds: Int,
-      freshTot: Boolean = false): String =
+      colors: Int, moveRounds: Int): String =
     (1 to moveRounds).map { r =>
       val roundStart = if (r == 1) init else s"lv${tag}_${r - 1}_$colors"
-      def totCte(name: String, from: String) = s""",
-         $name AS MATERIALIZED (
-           SELECT l.lbl AS c_lbl, CAST(sum(d.$sCol) AS BIGINT) AS tot
-           FROM $from l JOIN $st d ON d.node = l.node GROUP BY 1)"""
-      val roundTot =
-        if (freshTot) "" else totCte(s"lt${tag}_$r", roundStart)
-      val classes = (1 to colors).map { c =>
+      (1 to colors).map { c =>
         val prev = if (c == 1) roundStart else s"lv${tag}_${r}_${c - 1}"
-        // phase 2 (freshTot): volumes recomputed from the CURRENT
-        // labeling before every class step — the anti-snowball policy
-        val ltName = if (freshTot) s"lt${tag}_${r}_$c" else s"lt${tag}_$r"
-        val stepTot = if (freshTot) totCte(ltName, prev) else ""
-        s"""$stepTot,
+        // volumes recomputed from the CURRENT labeling before every
+        // class step (louvainMovesW's schedule)
+        val lt = s"lt${tag}_${r}_$c"
+        s""",
+         $lt AS MATERIALIZED (
+           SELECT l.lbl AS c_lbl, CAST(sum(d.$sCol) AS BIGINT) AS tot
+           FROM $prev l JOIN $st d ON d.node = l.node GROUP BY 1),
          kv${tag}_${r}_$c AS MATERIALIZED (
            SELECT e.src, q.lbl AS nl, $kAgg AS k,
              any_value(me.lbl) AS cur
@@ -2345,14 +2303,13 @@ object Graph {
                  LEFT JOIN (SELECT src, k AS ka FROM kv${tag}_${r}_$c
                             WHERE nl = cur) ka ON ka.src = kv.src
                  JOIN $st d ON d.node = kv.src
-                 JOIN $ltName tc ON tc.c_lbl = kv.nl
-                 JOIN $ltName ta ON ta.c_lbl = kv.cur
+                 JOIN $lt tc ON tc.c_lbl = kv.nl
+                 JOIN $lt ta ON ta.c_lbl = kv.cur
                  CROSS JOIN m2t m
                  WHERE kv.nl <> kv.cur) v
                WHERE v.gain > 0) z WHERE z.rn = 1) u
              ON u.node = p.node)"""
       }.mkString
-      roundTot + classes
     }.mkString
 
   /** The q101 chain WITHOUT the final select (coloring prefix + m2t +
@@ -2366,8 +2323,16 @@ object Graph {
          lv_0 AS MATERIALIZED (
            SELECT node, color, node AS lbl FROM col_$coloringRounds)""" +
       louvainMoveCtes("e", "dg", "deg", "count(*)", "lv_0", "",
-        colors, moveRounds, freshTot = true)
+        colors, moveRounds)
 
+  /** Q101 oracle: the shared coloring CTE prefix, a singleton init
+    * `lv_0`, then per move round r and class step c: a volumes CTE
+    * `lt_r_c` refreshed from the CURRENT labeling (louvainMovesW's
+    * per-step volumes), a
+    * `kv_r_c` (per-member neighbor-community counts) and `lv_r_c`
+    * (apply the best strictly-positive-gain move, ties → min label).
+    * HUGEINT products ≡ Spark's DECIMAL(38,0) — both exact. ~17
+    * coloring + 3×(3×24) move CTEs ≈ 233, under the 374 precedent. */
   private[graft] def louvainOracleSql(
       coloringRounds: Int = SemiColoringRounds,
       colors: Int = SemiColors,
@@ -2418,7 +2383,7 @@ object Graph {
          lv2_0 AS MATERIALIZED (
            SELECT node, color, node AS lbl FROM col2_$coloringRounds)""" +
       louvainMoveCtes("e2", "st2", "s", "CAST(sum(e.w) AS BIGINT)",
-        "lv2_0", "2", p2Colors, p2Rounds, freshTot = true) + s"""
+        "lv2_0", "2", p2Colors, p2Rounds) + s"""
          SELECT l.node AS l_partkey,
            coalesce(p.lbl, l.lbl) AS community, c.community_size
          FROM $l1 l
@@ -2850,6 +2815,8 @@ object Graph {
     * tail CTEs are the identity. */
   val DiameterRounds = 12
 
+  private val diameterCols = Seq("seed", "ecc_seed", "far_node", "diameter_lb")
+
   /** Q88: graph DIAMETER lower bound by the double-sweep heuristic
     * (Magnien, Latapy & Habib 2009; the iFUB seed step): BFS from the
     * top-degree seed, take the FARTHEST node (max hops, min key —
@@ -2857,7 +2824,8 @@ object Graph {
     * a diameter lower bound, EXACT on trees and empirically tight on
     * real-world graphs. One row out: seed, its eccentricity, the far
     * node, and the double-sweep bound — the "how wide is this graph"
-    * dashboard number next to q73's component table.
+    * dashboard number next to q73's component table. A graph with no
+    * edge at the threshold gives one all-NULL row, as the oracle does.
     *
     * Shape at scale: two single-seed `bfsHops` sweeps; the argmax is
     * aggregate-only (max(struct(hops, −node))). */
@@ -2874,17 +2842,21 @@ object Graph {
         GraphLocal.diameterTable(s, halfOpt.get, rounds)
       else {
       val edges = copurchaseEdges(s, dir).cache()
-      val seed = egoSeed(edges).getOrElse(sys.error(
-        "q88_diameter: the threshold-2 co-purchase graph is empty"))
-      val d1 = bfsHops(edges, Seq(seed).toDF("seed"), rounds)
-      val (eccSeed, far) = d1
-        .agg(max(struct($"hops", (-$"node").as("neg"))).as("m"))
-        .select($"m.hops", -$"m.neg").as[(Int, Long)].head()
-      val d2 = bfsHops(edges, Seq(far).toDF("seed"), rounds)
-      val eccFar = d2.agg(max($"hops")).as[Int].head()
+      val out = egoSeed(edges) match {
+        case Some(seed) =>
+          val d1 = bfsHops(edges, Seq(seed).toDF("seed"), rounds)
+          val (eccSeed, far) = d1
+            .agg(max(struct($"hops", (-$"node").as("neg"))).as("m"))
+            .select($"m.hops", -$"m.neg").as[(Int, Long)].head()
+          val d2 = bfsHops(edges, Seq(far).toDF("seed"), rounds)
+          val eccFar = d2.agg(max($"hops")).as[Int].head()
+          Seq((seed, eccSeed, far, eccFar)).toDF(diameterCols: _*)
+        case None => // no seed: the oracle's scalar subqueries are NULL
+          Seq[(Option[Long], Option[Int], Option[Long], Option[Int])](
+            (None, None, None, None)).toDF(diameterCols: _*)
+      }
       edges.unpersist()
-      Seq((seed, eccSeed, far, eccFar))
-        .toDF("seed", "ecc_seed", "far_node", "diameter_lb")
+      out
       }
     }
     if (rounds == DiameterRounds)

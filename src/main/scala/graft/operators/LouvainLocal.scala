@@ -4,9 +4,8 @@ package graft.operators
   * verdict's "What's wrong #2"): a driver-side, BigInt-exact replay
   * of the SAME semi-synchronous schedule the distributed operators
   * run — the windowed trial coloring (`Graph.trialColoring`) and the
-  * per-class-step weighted move passes (`Graph.louvainMovesW`,
-  * freshTot policy) — used by q102 when the coarsened supergraph is
-  * metadata-scale.
+  * per-class-step weighted move passes (`Graph.louvainMovesW`) —
+  * used by q102 when the coarsened supergraph is metadata-scale.
   *
   * WHY: multi-level Louvain's published scaling story (Blondel et al.
   * 2008; Lu/Halappanavar/Kalyanaraman's Grappolo) ends every level
@@ -37,9 +36,11 @@ private[graft] object LouvainLocal {
     * free[(prio_r % min(|free|, W))] from the ascending free palette
     * (windowed, hub-safe truncation — same membership algebra as
     * `freePalette`) and keeps it unless a same-pick uncolored
-    * neighbor outranks it on (prio_r, id). Returns node → color. */
-  def coloring(edges: Array[(Long, Long)],
-      window: Int = Graph.SemiPickWindow): Map[Long, Int] = {
+    * neighbor outranks it on (prio_r, id). The used-sets are
+    * recomputed every round (the distributed operator carries them
+    * incrementally; membership is equal). Returns node → color. */
+  def coloring(edges: Array[(Long, Long)]): Map[Long, Int] = {
+    val window = Graph.SemiPickWindow
     val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val deg = adj.view.mapValues(_.length.toLong).toMap
     val col = collection.mutable.Map.empty[Long, Int]
@@ -102,9 +103,9 @@ private[graft] object LouvainLocal {
     lbl.toMap
   }
 
-  /** Replay of `Graph.louvainMovesW` under the freshTot policy over a
-    * DIRECTED weighted edge list (both directions present): rounds of
-    * classes ascending; per class step, community volumes from the
+  /** Replay of `Graph.louvainMovesW` over a DIRECTED weighted edge
+    * list (both directions present): rounds of classes ascending;
+    * per class step, community volumes from the
     * CURRENT labeling, then every class member's best strictly-
     * positive-gain move (gain = 2m·(k_C − k_A) − s_v·(tot_C − tot_A
     * + s_v), ties → min label) applied simultaneously. Zero-move
@@ -113,8 +114,7 @@ private[graft] object LouvainLocal {
     * cross-graph nodes. */
   def movesW(wEdges: Array[(Long, Long, Long)],
       strength: Map[Long, Long], m2w: Long,
-      color: Map[Long, Int], rounds: Int,
-      earlyExit: Boolean = true): Map[Long, Long] = {
+      color: Map[Long, Int], rounds: Int): Map[Long, Long] = {
     val adj = wEdges.groupBy(_._1).view
       .mapValues(_.map(t => (t._2, t._3))).toMap
     val lbl = collection.mutable.Map.empty[Long, Long]
@@ -123,7 +123,7 @@ private[graft] object LouvainLocal {
     val m2 = BigInt(m2w)
     var round = 0
     var fixedPoint = false
-    while (round < rounds && !(earlyExit && fixedPoint)) {
+    while (round < rounds && !fixedPoint) {
       var movedInRound = 0L
       for (c <- 1 to nColors) {
         val tot = lbl.keys.groupBy(lbl).view

@@ -75,4 +75,18 @@ class GlobalSwitchSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.size <= 1, hits.mkString("\n", "\n", ""))
   }
+
+  // a defaulted Boolean parameter is a mode switch that only callers
+  // passing the non-default value ever reach; each kernel ships one
+  // schedule, so a mode is an explicit argument at every call or gone
+  private val DefaultedBoolean = """(^|[(,])\s*\w+\s*:\s*Boolean\s*=(?!>)""".r
+
+  test("operators and ml declare no defaulted Boolean parameter") {
+    val offending = for {
+      f <- sources("operators") ++ sources("ml")
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if DefaultedBoolean.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
+  }
 }

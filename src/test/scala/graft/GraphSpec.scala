@@ -49,13 +49,19 @@ class GraphSpec extends GraftSpecBase {
     }
   }
 
-  test("q77, q78, q85 return no rows with their normal columns when no pair reaches the threshold") {
-    // one order: every pair is bought together exactly once
+  /** A dataset of one order: every pair is bought together exactly
+    * once, so no pair reaches the co-purchase threshold. */
+  private def oneOrderDataset(): String = {
     val li = Tables.lineitem(spark, sf)
     val order = li.agg(min($"l_orderkey")).as[Long].head()
     val dir = java.nio.file.Files.createTempDirectory("graft_empty_graph").toString
     li.filter($"l_orderkey" === order).write.parquet(s"$dir/lineitem.parquet")
     assert(Graph.copurchaseHalf(spark, dir).isEmpty)
+    dir
+  }
+
+  test("q77, q78, q85 return no rows with their normal columns when no pair reaches the threshold") {
+    val dir = oneOrderDataset()
     val entries: Seq[(String, String => DataFrame)] = Seq(
       "q77" -> (d => Graph.q77Ppr(spark, d)),
       "q78" -> (d => Graph.q78SeedReach(spark, d)),
@@ -66,5 +72,22 @@ class GraphSpec extends GraftSpecBase {
       val normal = fn(sf).schema.map(f => (f.name, f.dataType))
       assert(empty.schema.map(f => (f.name, f.dataType)) == normal, name)
     } finally Caches.clear()
+  }
+
+  test("q88 returns one all-NULL row with its normal columns when no pair reaches the threshold") {
+    // the oracle's scalar subqueries over an empty graph give one row
+    // of NULLs; the entry answers the same under either gate
+    val dir = oneOrderDataset()
+    val normal = Graph.q88Diameter(spark, sf).schema.map(f => (f.name, f.dataType))
+    try Seq("default" -> GraphLocal.gates, "distributed" -> GraphLocal.Distributed)
+      .foreach { case (regime, g) =>
+        Caches.clear()
+        val empty = GraphLocal.withGates(g)(Graph.q88Diameter(spark, dir))
+        val rows = empty.collect()
+        assert(rows.length == 1, s"$regime: ${rows.length} rows")
+        assert(rows.head.toSeq.forall(_ == null), s"$regime: ${rows.head}")
+        assert(empty.schema.map(f => (f.name, f.dataType)) == normal, regime)
+      }
+    finally Caches.clear()
   }
 }

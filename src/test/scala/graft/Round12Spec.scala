@@ -112,40 +112,6 @@ class Round12Spec extends GraftSpecBase {
     }
   }
 
-  test("q84 coloring: incremental used-state is bit-identical to full recomputation") {
-    // the round-12 O(E)-total state maintenance must produce the SAME
-    // coloring as re-aggregating colored neighborhoods every round
-    // (the form the oracle replays): membership-equal used sets give
-    // identical picks. Swept on the skip test's graphs (2-cycle,
-    // staggered-stabilization, seeded random) and the real sf graph.
-    val rnd = new scala.util.Random(7)
-    val random = (for (_ <- 1 to 150) yield {
-      val a = rnd.nextInt(50).toLong; val b = rnd.nextInt(50).toLong
-      if (a < b) Some((a, b)) else if (b < a) Some((b, a)) else None
-    }).flatten.distinct
-    val prs = operators.Analytics.copurchasePairs(spark, sf)
-      .filter($"n_orders" >= 2).select($"pa", $"pb")
-      .as[(Long, Long)].collect().toSeq
-    val graphs = Seq(
-      "K23" -> Seq((10L, 3L), (10L, 7L), (10L, 11L), (20L, 3L), (20L, 7L), (20L, 11L)),
-      "bridged cliques" -> (
-        (for { a <- 1L to 4L; b <- 1L to 4L if a < b } yield (a, b)) ++
-        (for { a <- 11L to 14L; b <- 11L to 14L if a < b } yield (a, b)) ++
-        Seq((4L, 11L))),
-      "seeded random" -> random,
-      "sf0.001 co-purchase" -> prs)
-    for ((name, pairs) <- graphs) {
-      val edges = symmetric(pairs).cache()
-      def run(inc: Boolean) = operators.Graph.trialColoring(
-        edges, operators.Graph.SemiColoringRounds,
-        operators.Graph.SemiPickWindow, inc)._1
-        .as[(Long, Int)].collect().sortBy(_._1).toSeq
-      assert(run(inc = true) == run(inc = false),
-        s"$name: incremental used-state diverged from recomputation")
-      edges.unpersist()
-    }
-  }
-
   test("q84 engine: classes are actually skipped after stabilization") {
     // two disjoint triangles: every node labels to its triangle min in
     // round 1; every later sweep is identity, so the pending skip must
@@ -507,79 +473,6 @@ class Round12Spec extends GraftSpecBase {
 
   // ------------- q101: Louvain local moves -------------
 
-  /** Local reference of the q101 move schedule: classes ascending,
-    * within-class simultaneous best-positive-gain moves (ties → min
-    * label), community volumes frozen at round start — exactly what
-    * the engine and the oracle run, in BigInt algebra. */
-  private def louvainReference(edges: Seq[(Long, Long)],
-      color: Map[Long, Int], init: Map[Long, Long],
-      rounds: Int): Map[Long, Long] = {
-    val adj = edges.flatMap(e => Seq(e, e.swap)).distinct
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val deg = adj.view.mapValues(_.size.toLong).toMap
-    val m2 = BigInt(adj.values.map(_.size).sum)
-    val lbl = collection.mutable.Map(init.toSeq: _*)
-    for (_ <- 1 to rounds) {
-      // iterator.map, NOT Set.map: mapping member nodes to degrees
-      // through a Set DEDUPES equal degree values before the sum
-      val tot = lbl.keys.groupBy(lbl).view
-        .mapValues(vs => BigInt(vs.iterator.map(deg).sum)).toMap
-      for (c <- 1 to color.values.max) {
-        val upd = adj.keys.filter(color(_) == c).flatMap { v =>
-          val cnt = adj(v).groupBy(lbl).view
-            .mapValues(us => BigInt(us.size)).toMap
-          val cur = lbl(v)
-          val ka = cnt.getOrElse(cur, BigInt(0))
-          val kvDeg = BigInt(deg(v))
-          val cand = cnt.keys.filter(_ != cur).map { nl =>
-            (nl, m2 * (cnt(nl) - ka) -
-              kvDeg * (tot(nl) - tot(cur) + kvDeg))
-          }.filter(_._2 > 0)
-          if (cand.isEmpty) None
-          else Some(v -> cand.maxBy { case (nl, g) => (g, -nl) }._1)
-        }.toSeq
-        upd.foreach { case (v, l) => lbl(v) = l }
-      }
-    }
-    lbl.toMap
-  }
-
-  // NOTE (round 13): this pins the KERNEL's round-frozen policy
-  // against its local reference; the SHIPPED q101 policy is now
-  // per-class-step volumes (freshTot — Round13Spec pins that one
-  // against the per-step reference). Both kernel modes stay spec'd.
-  test("q101 engine: distributed moves == local reference on constructed + real graphs") {
-    val rnd = new scala.util.Random(13)
-    val random = (for (_ <- 1 to 150) yield {
-      val a = rnd.nextInt(50).toLong; val b = rnd.nextInt(50).toLong
-      if (a < b) Some((a, b)) else if (b < a) Some((b, a)) else None
-    }).flatten.distinct
-    val prs = operators.Analytics.copurchasePairs(spark, sf)
-      .filter($"n_orders" >= 2).select($"pa", $"pb")
-      .as[(Long, Long)].collect().toSeq
-    val graphs = Seq(
-      "bridged triangles" -> Seq((1L, 2L), (2L, 3L), (1L, 3L),
-        (11L, 12L), (12L, 13L), (11L, 13L), (3L, 11L)),
-      "K23" -> Seq((10L, 3L), (10L, 7L), (10L, 11L), (20L, 3L), (20L, 7L), (20L, 11L)),
-      "seeded random" -> random,
-      "sf0.001 co-purchase" -> prs)
-    for ((name, pairs) <- graphs) {
-      val edges = symmetric(pairs).cache()
-      val colored = operators.Graph.trialColoring(
-        edges, operators.Graph.SemiColoringRounds)._1
-      val init = colored.select($"node", $"color", $"node".as("lbl"))
-      val got = operators.Graph.louvainMoves(edges, init,
-          freshTot = false)
-        .as[(Long, Long)].collect().toMap
-      val color = colored.as[(Long, Int)].collect().toMap
-      val want = louvainReference(pairs, color,
-        color.keys.map(v => v -> v).toMap,
-        operators.Graph.LouvainRounds)
-      assert(got == want, s"$name: distributed moves diverged from reference")
-      edges.unpersist()
-    }
-  }
-
   test("q101: modularity strictly improves on the q84 labeling at sf0.001") {
     // the reason the entry exists: q84's LPA optimizes monochromatic
     // edges with no volume penalty and glues the dense sf0.001 graph
@@ -599,61 +492,35 @@ class Round12Spec extends GraftSpecBase {
     assert(after > before, s"q_num sum $before -> $after (no improvement)")
   }
 
-  /** Weighted local reference of the q102 move schedule over a
-    * DIRECTED weighted edge list (both directions present) — same
-    * semantics as `louvainReference` with strengths in place of
-    * degrees, weight sums in place of counts, and volumes refreshed
-    * PER CLASS STEP (phase 2's freshTot policy). */
-  private def louvainReferenceW(wEdges: Seq[(Long, Long, Long)],
-      strength: Map[Long, Long], m2w: BigInt, color: Map[Long, Int],
-      init: Map[Long, Long], rounds: Int): Map[Long, Long] = {
-    val adj = wEdges.groupBy(_._1).view
-      .mapValues(_.map(t => (t._2, t._3))).toMap
-    val lbl = collection.mutable.Map(init.toSeq: _*)
-    val nColors = if (color.isEmpty) 0 else color.values.max
-    for (_ <- 1 to rounds) {
-      for (c <- 1 to nColors) {
-        val tot = lbl.keys.groupBy(lbl).view
-          .mapValues(vs => BigInt(vs.iterator.map(strength).sum)).toMap
-        val upd = adj.keys.filter(color(_) == c).flatMap { v =>
-          val cnt = adj(v).groupBy(t => lbl(t._1)).view
-            .mapValues(ts => BigInt(ts.iterator.map(_._2).sum)).toMap
-          val cur = lbl(v)
-          val ka = cnt.getOrElse(cur, BigInt(0))
-          val sv = BigInt(strength(v))
-          val cand = cnt.keys.filter(_ != cur).map { nl =>
-            (nl, m2w * (cnt(nl) - ka) - sv * (tot(nl) - tot(cur) + sv))
-          }.filter(_._2 > 0)
-          if (cand.isEmpty) None
-          else Some(v -> cand.maxBy { case (nl, g) => (g, -nl) }._1)
-        }.toSeq
-        upd.foreach { case (v, l) => lbl(v) = l }
-      }
-    }
-    lbl.toMap
-  }
-
-  test("q102 engine: weighted supergraph moves == local reference on constructed + real graphs") {
-    val rnd = new scala.util.Random(29)
-    val random = (for (_ <- 1 to 150) yield {
+  private def randomPairs(seed: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    (for (_ <- 1 to 150) yield {
       val a = rnd.nextInt(50).toLong; val b = rnd.nextInt(50).toLong
       if (a < b) Some((a, b)) else if (b < a) Some((b, a)) else None
     }).flatten.distinct
-    val prs = operators.Analytics.copurchasePairs(spark, sf)
-      .filter($"n_orders" >= 2).select($"pa", $"pb")
-      .as[(Long, Long)].collect().toSeq
+  }
+
+  test("q102 engine: weighted supergraph moves == local reference on constructed + real graphs") {
+    // ONE forced-distributed phase-1 + phase-2 run per graph, asserted
+    // against both local references: the BigInt schedule reference
+    // over the engine's own supergraph coloring, and the driver-side
+    // endgame q102 takes under the gate (LouvainLocal: its own
+    // coloring of the collected cross edges, then movesW)
+    val prs = operators.Graph.copurchaseHalf(spark, sf)
+      .select($"pa", $"pb").as[(Long, Long)].collect().toSeq
     val graphs = Seq(
       "bridged triangles" -> Seq((1L, 2L), (2L, 3L), (1L, 3L),
         (11L, 12L), (12L, 13L), (11L, 13L), (3L, 11L)),
-      "seeded random" -> random,
+      "seeded random 29" -> randomPairs(29),
+      "seeded random 41" -> randomPairs(41),
       "sf0.001 co-purchase" -> prs)
     for ((name, pairs) <- graphs) {
       val edges = symmetric(pairs).cache()
-      // phase 1 (its own reference equality is pinned above)
       val colored = operators.Graph.trialColoring(
         edges, operators.Graph.SemiColoringRounds)._1
       val l1 = operators.Graph.louvainMoves(edges,
-        colored.select($"node", $"color", $"node".as("lbl")))
+        colored.select($"node", $"color", $"node".as("lbl")),
+        operators.Graph.SemiColors)
       // contraction — the q102 construction
       val le = edges
         .join(l1.select($"node".as("src"), $"lbl".as("la")), "src")
@@ -663,19 +530,23 @@ class Round12Spec extends GraftSpecBase {
         .select($"la".as("src"), $"lb".as("dst"), $"w")
       val strength = le.groupBy($"la".as("node")).agg(sum($"w").as("s"))
       val m2w = edges.count()
+      val ce = cross.as[(Long, Long, Long)].collect()
+      val st = strength.as[(Long, Long)].collect().toMap
       val col2 = operators.Graph.trialColoring(
         cross.select($"src", $"dst"), operators.Graph.SemiColoringRounds)._1
       val got = operators.Graph.louvainMovesW(cross, strength, m2w,
         col2.select($"node", $"color", $"node".as("lbl")),
-        operators.Graph.LouvainP2Rounds, freshTot = true)
+        operators.Graph.LouvainP2Rounds, operators.Graph.LouvainP2Colors)
         .as[(Long, Long)].collect().toMap
       val color2 = col2.as[(Long, Int)].collect().toMap
-      val want = louvainReferenceW(
-        cross.as[(Long, Long, Long)].collect().toSeq,
-        strength.as[(Long, Long)].collect().toMap,
-        BigInt(m2w), color2, color2.keys.map(v => v -> v).toMap,
+      val want = LouvainReference.movesW(ce.toSeq, st, BigInt(m2w),
+        color2, color2.keys.map(v => v -> v).toMap,
         operators.Graph.LouvainP2Rounds)
       assert(got == want, s"$name: weighted moves diverged from reference")
+      val local = operators.LouvainLocal.movesW(ce, st, m2w,
+        operators.LouvainLocal.coloring(ce.map(t => (t._1, t._2))),
+        operators.Graph.LouvainP2Rounds)
+      assert(local == got, s"$name: local weighted moves diverged")
       le.unpersist(); edges.unpersist()
     }
   }
@@ -692,8 +563,8 @@ class Round12Spec extends GraftSpecBase {
     val after = qSum(q102.select($"l_partkey".as("node"), $"community".as("lbl")))
     // phase-2 gains are the same global Q algebra (2m is invariant
     // under contraction), and every applied move had strictly
-    // positive frozen-volume gain — measured: a strict improvement
-    // on this corpus
+    // positive gain against its step's volumes — measured: a strict
+    // improvement on this corpus
     assert(after > before, s"q_num sum $before -> $after")
     // conservation: same node set as q84/q101; sizes consistent
     assert(q102.count() === q101.count(), "node set changed")

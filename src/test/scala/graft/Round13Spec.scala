@@ -16,67 +16,69 @@ class Round13Spec extends GraftSpecBase {
 
   // ------------- q101/q102: zero-move round early exit -------------
 
-  test("louvainMoves: early exit == full budget, with strictly fewer class steps, on constructed + real graphs") {
-    // the absorbing-fixed-point claim: a round that applies no move
-    // freezes the labeling, volumes are a pure function of the
-    // labeling, so every later budgeted round replays as the
-    // identity. Exit must be BIT-identical to running the whole
-    // budget (what the oracle unrolls) — proven here by running a
-    // budget well past convergence both ways.
+  private val bridgedTriangles = Seq((1L, 2L), (2L, 3L), (1L, 3L),
+    (11L, 12L), (12L, 13L), (11L, 13L), (3L, 11L))
+
+  private def graphs: Seq[(String, Seq[(Long, Long)])] = {
     val rnd = new scala.util.Random(31)
     val random = (for (_ <- 1 to 150) yield {
       val a = rnd.nextInt(50).toLong; val b = rnd.nextInt(50).toLong
       if (a < b) Some((a, b)) else if (b < a) Some((b, a)) else None
     }).flatten.distinct
-    val prs = operators.Analytics.copurchasePairs(spark, sf)
-      .filter($"n_orders" >= 2).select($"pa", $"pb")
-      .as[(Long, Long)].collect().toSeq
-    val graphs = Seq(
-      "bridged triangles" -> Seq((1L, 2L), (2L, 3L), (1L, 3L),
-        (11L, 12L), (12L, 13L), (11L, 13L), (3L, 11L)),
+    val prs = operators.Graph.copurchaseHalf(spark, sf)
+      .select($"pa", $"pb").as[(Long, Long)].collect().toSeq
+    Seq("bridged triangles" -> bridgedTriangles,
       "seeded random" -> random,
       "sf0.001 co-purchase" -> prs)
+  }
+
+  test("louvainMoves: early exit == full budget, with strictly fewer class steps, on constructed + real graphs") {
+    // the absorbing-fixed-point claim: a round that applies no move
+    // freezes the labeling, volumes are a pure function of the
+    // labeling, so every later budgeted round replays as the
+    // identity. The exiting engine must be BIT-identical to the
+    // full-budget reference (what the oracle unrolls), at a budget
+    // well past convergence.
     val budget = operators.Graph.LouvainRounds + 3
     for ((name, pairs) <- graphs) {
       val edges = symmetric(pairs).cache()
-      val init = operators.Graph.trialColoring(
-          edges, operators.Graph.SemiColoringRounds)._1
-        .select($"node", $"color", $"node".as("lbl")).cache()
+      val colored = operators.Graph.trialColoring(
+          edges, operators.Graph.SemiColoringRounds)._1.cache()
+      val color = colored.as[(Long, Int)].collect().toMap
       val s0 = operators.Graph.louvainMoveSteps.get
-      val exited = operators.Graph.louvainMoves(edges, init, budget)
+      val exited = operators.Graph.louvainMoves(edges,
+          colored.select($"node", $"color", $"node".as("lbl")),
+          operators.Graph.SemiColors, budget)
         .as[(Long, Long)].collect().toMap
       val exitSteps = operators.Graph.louvainMoveSteps.get - s0
-      val full = operators.Graph.louvainMoves(edges, init, budget,
-          earlyExit = false)
-        .as[(Long, Long)].collect().toMap
-      val fullSteps = operators.Graph.louvainMoveSteps.get - s0 - exitSteps
-      assert(exited == full, s"$name: early exit diverged from full budget")
-      // frozen-volume moves are NOT monotone in Q, so graphs can
-      // oscillate and never reach a zero-move round — measured: BOTH
-      // the seeded random AND the real sf0.001 co-purchase graph keep
-      // ≥ 1 move in every budgeted round (see SURVEY §6.18). The exit
-      // is an optimization; equality above is the contract. The one
-      // constructed graph with a measured fixed point inside the
-      // budget must actually fire it (strictly fewer steps).
+      assert(exited == LouvainReference.moves(pairs, color, budget),
+        s"$name: early exit diverged from the full-budget reference")
+      // a full-budget run takes exactly budget × nColors class steps.
+      // The exit is an optimization; equality above is the contract.
+      // A graph that still moves in every budgeted round runs them all
+      // (measured at sf0.001: 169/62/30/20/17/13 moves); the bridged
+      // triangles reach a fixed point inside the budget and must
+      // actually fire the exit.
+      val fullSteps = budget * color.values.max
       assert(exitSteps <= fullSteps,
         s"$name: exit ran MORE steps ($exitSteps vs $fullSteps)")
       if (name == "bridged triangles")
         assert(exitSteps < fullSteps,
           s"$name: exit never fired ($exitSteps vs $fullSteps steps)")
-      edges.unpersist(); init.unpersist()
+      edges.unpersist(); colored.unpersist()
     }
   }
 
   test("louvainMovesW: early exit == full budget under the q102 freshTot policy") {
-    // phase 2's per-class-step volumes are ALSO a pure function of
-    // the labeling — the absorbing argument is policy-independent,
-    // but the policies execute different plans, so pin both
-    val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L),
-      (11L, 12L), (12L, 13L), (11L, 13L), (3L, 11L))
-    val edges = symmetric(pairs).cache()
+    // phase 2's weighted moves on the q102 construction: the exiting
+    // engine against the full-budget weighted reference (per-step
+    // volumes are a pure function of the labeling, so the absorbing
+    // argument holds for phase 2 too)
+    val edges = symmetric(bridgedTriangles).cache()
     val l1 = operators.Graph.louvainMoves(edges,
       operators.Graph.trialColoring(edges, operators.Graph.SemiColoringRounds)
-        ._1.select($"node", $"color", $"node".as("lbl")))
+        ._1.select($"node", $"color", $"node".as("lbl")),
+      operators.Graph.SemiColors)
     val le = edges
       .join(l1.select($"node".as("src"), $"lbl".as("la")), "src")
       .join(l1.select($"node".as("dst"), $"lbl".as("lb")), "dst")
@@ -87,34 +89,35 @@ class Round13Spec extends GraftSpecBase {
     val m2w = edges.count()
     val col2 = operators.Graph.trialColoring(
       cross.select($"src", $"dst"), operators.Graph.SemiColoringRounds)._1
-    val init2 = col2.select($"node", $"color", $"node".as("lbl")).cache()
+      .cache()
     val budget = operators.Graph.LouvainP2Rounds + 3
     val exited = operators.Graph.louvainMovesW(cross, strength, m2w,
-        init2, budget, freshTot = true)
+        col2.select($"node", $"color", $"node".as("lbl")), budget,
+        operators.Graph.LouvainP2Colors)
       .as[(Long, Long)].collect().toMap
-    val full = operators.Graph.louvainMovesW(cross, strength, m2w,
-        init2, budget, freshTot = true, earlyExit = false)
-      .as[(Long, Long)].collect().toMap
-    assert(exited == full, "freshTot early exit diverged from full budget")
-    le.unpersist(); edges.unpersist(); init2.unpersist()
+    val color2 = col2.as[(Long, Int)].collect().toMap
+    val full = LouvainReference.movesW(
+      cross.as[(Long, Long, Long)].collect().toSeq,
+      strength.as[(Long, Long)].collect().toMap, BigInt(m2w), color2,
+      color2.keys.map(v => v -> v).toMap, budget)
+    assert(exited == full, "weighted early exit diverged from full budget")
+    le.unpersist(); edges.unpersist(); col2.unpersist()
   }
 
   test("q101/q103 registry results are unchanged by the early exit (vs forced full budget) at sf0.001") {
-    // the registry surface itself: the default-budget entry with the
-    // exit on must equal the forced full-budget run label-for-label
-    // (the sf0.01 oracle hash gates this too; this pins it at the
-    // spec SF with the memoized artifacts in play)
-    val edges = operators.Graph.copurchaseEdges(spark, sf).cache()
-    val init = operators.Graph.semiColoredMemo(spark, sf)
-      .select($"node", $"color", $"node".as("lbl"))
-    val exited = operators.Graph.louvainMoves(edges, init,
-        operators.Graph.LouvainRounds)
+    // the registry surface itself: the memoized q101 labeling (the
+    // input of q102 and q103) must equal the full-budget reference
+    // over the memoized coloring, label-for-label (the sf0.01 oracle
+    // hash gates this too; this pins it at the spec SF)
+    val pairs = operators.Graph.copurchaseHalf(spark, sf)
+      .select($"pa", $"pb").as[(Long, Long)].collect().toSeq
+    val color = operators.Graph.semiColoredMemo(spark, sf)
+      .as[(Long, Int)].collect().toMap
+    val got = operators.Graph.louvainLabels(spark, sf)
       .as[(Long, Long)].collect().toMap
-    val full = operators.Graph.louvainMoves(edges, init,
-        operators.Graph.LouvainRounds, earlyExit = false)
-      .as[(Long, Long)].collect().toMap
-    assert(exited == full, "default-budget exit changed the labeling")
-    edges.unpersist()
+    assert(got == LouvainReference.moves(pairs, color,
+        operators.Graph.LouvainRounds),
+      "default-budget labeling diverged from the full-budget reference")
   }
 
   // ------------- loud color-budget guards -------------
@@ -149,81 +152,25 @@ class Round13Spec extends GraftSpecBase {
     edges.unpersist()
   }
 
-  // ------------- q101 phase-1 freshTot policy (round 13) -------------
+  // ------------- q101 phase-1 per-step volumes (round 13) -------------
 
-  /** Local reference of the SHIPPED phase-1 schedule (round 13):
-    * classes ascending, within-class simultaneous best-positive-gain
-    * moves (ties → min label), community volumes refreshed PER CLASS
-    * STEP — the q102 freshTot policy adopted for phase 1 after the
-    * §6.18 oscillation/quality measurement. BigInt algebra. */
-  private def louvainReferenceFresh(edges: Seq[(Long, Long)],
-      color: Map[Long, Int], init: Map[Long, Long],
-      rounds: Int): Map[Long, Long] = {
-    val adj = edges.flatMap(e => Seq(e, e.swap)).distinct
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val deg = adj.view.mapValues(_.size.toLong).toMap
-    val m2 = BigInt(adj.values.map(_.size).sum)
-    val lbl = collection.mutable.Map(init.toSeq: _*)
-    for (_ <- 1 to rounds; c <- 1 to color.values.max) {
-      val tot = lbl.keys.groupBy(lbl).view
-        .mapValues(vs => BigInt(vs.iterator.map(deg).sum)).toMap
-      val upd = adj.keys.filter(color(_) == c).flatMap { v =>
-        val cnt = adj(v).groupBy(lbl).view
-          .mapValues(us => BigInt(us.size)).toMap
-        val cur = lbl(v)
-        val ka = cnt.getOrElse(cur, BigInt(0))
-        val kvDeg = BigInt(deg(v))
-        val cand = cnt.keys.filter(_ != cur).map { nl =>
-          (nl, m2 * (cnt(nl) - ka) - kvDeg * (tot(nl) - tot(cur) + kvDeg))
-        }.filter(_._2 > 0)
-        if (cand.isEmpty) None
-        else Some(v -> cand.maxBy { case (nl, g) => (g, -nl) }._1)
-      }.toSeq
-      upd.foreach { case (v, l) => lbl(v) = l }
-    }
-    lbl.toMap
-  }
-
-  test("q101 shipped policy (freshTot): distributed moves == per-step local reference; quality beats frozen") {
-    val rnd = new scala.util.Random(31)
-    val random = (for (_ <- 1 to 150) yield {
-      val a = rnd.nextInt(50).toLong; val b = rnd.nextInt(50).toLong
-      if (a < b) Some((a, b)) else if (b < a) Some((b, a)) else None
-    }).flatten.distinct
-    val prs = operators.Analytics.copurchasePairs(spark, sf)
-      .filter($"n_orders" >= 2).select($"pa", $"pb")
-      .as[(Long, Long)].collect().toSeq
-    val graphs = Seq(
-      "bridged triangles" -> Seq((1L, 2L), (2L, 3L), (1L, 3L),
-        (11L, 12L), (12L, 13L), (11L, 13L), (3L, 11L)),
-      "seeded random" -> random,
-      "sf0.001 co-purchase" -> prs)
-    for ((name, pairs) <- graphs) {
+  test("q101 shipped policy: distributed moves == per-step local reference on constructed + real graphs") {
+    val k23 = Seq((10L, 3L), (10L, 7L), (10L, 11L),
+      (20L, 3L), (20L, 7L), (20L, 11L))
+    for ((name, pairs) <- graphs :+ ("K23" -> k23)) {
       val edges = symmetric(pairs).cache()
       val colored = operators.Graph.trialColoring(
         edges, operators.Graph.SemiColoringRounds)._1
       val init = colored.select($"node", $"color", $"node".as("lbl"))
-      val got = operators.Graph.louvainMoves(edges, init)
+      val got = operators.Graph.louvainMoves(edges, init,
+          operators.Graph.SemiColors)
         .as[(Long, Long)].collect().toMap
       val color = colored.as[(Long, Int)].collect().toMap
-      val want = louvainReferenceFresh(pairs, color,
-        color.keys.map(v => v -> v).toMap,
+      val want = LouvainReference.moves(pairs, color,
         operators.Graph.LouvainRounds)
-      assert(got == want, s"$name: freshTot moves diverged from reference")
+      assert(got == want, s"$name: per-step moves diverged from reference")
       edges.unpersist()
     }
-    // the adoption evidence (§6.18): on the dense real graph the
-    // per-step policy must land strictly higher modularity than the
-    // round-frozen one at the same budget
-    val edges = operators.Graph.copurchaseEdges(spark, sf).cache()
-    val init = operators.Graph.semiColoredMemo(spark, sf)
-      .select($"node", $"color", $"node".as("lbl"))
-    def qn(l: org.apache.spark.sql.DataFrame): Long =
-      operators.Graph.modularityOf(edges, l).agg(sum($"q_num")).as[Long].head()
-    val fresh = qn(operators.Graph.louvainMoves(edges, init))
-    val frozen = qn(operators.Graph.louvainMoves(edges, init, freshTot = false))
-    assert(fresh > frozen, s"freshTot $fresh !> frozen $frozen")
-    edges.unpersist()
   }
 
   // ------------- s15: persisted serving-graph layout -------------
