@@ -501,11 +501,9 @@ class Round12Spec extends GraftSpecBase {
   }
 
   test("q102 engine: weighted supergraph moves == local reference on constructed + real graphs") {
-    // ONE forced-distributed phase-1 + phase-2 run per graph, asserted
-    // against both local references: the BigInt schedule reference
-    // over the engine's own supergraph coloring, and the driver-side
-    // endgame q102 takes under the gate (LouvainLocal: its own
-    // coloring of the collected cross edges, then movesW)
+    // the BigInt schedule reference over the engine's own supergraph
+    // coloring; Round14Spec checks the same runs (Q102Construction
+    // memoizes them) against the driver-side endgame, LouvainLocal
     val prs = operators.Graph.copurchaseHalf(spark, sf)
       .select($"pa", $"pb").as[(Long, Long)].collect().toSeq
     val graphs = Seq(
@@ -515,39 +513,11 @@ class Round12Spec extends GraftSpecBase {
       "seeded random 41" -> randomPairs(41),
       "sf0.001 co-purchase" -> prs)
     for ((name, pairs) <- graphs) {
-      val edges = symmetric(pairs).cache()
-      val colored = operators.Graph.trialColoring(
-        edges, operators.Graph.SemiColoringRounds)._1
-      val l1 = operators.Graph.louvainMoves(edges,
-        colored.select($"node", $"color", $"node".as("lbl")),
-        operators.Graph.SemiColors)
-      // contraction — the q102 construction
-      val le = edges
-        .join(l1.select($"node".as("src"), $"lbl".as("la")), "src")
-        .join(l1.select($"node".as("dst"), $"lbl".as("lb")), "dst")
-        .groupBy($"la", $"lb").agg(count(lit(1)).as("w")).cache()
-      val cross = le.filter($"la" =!= $"lb")
-        .select($"la".as("src"), $"lb".as("dst"), $"w")
-      val strength = le.groupBy($"la".as("node")).agg(sum($"w").as("s"))
-      val m2w = edges.count()
-      val ce = cross.as[(Long, Long, Long)].collect()
-      val st = strength.as[(Long, Long)].collect().toMap
-      val col2 = operators.Graph.trialColoring(
-        cross.select($"src", $"dst"), operators.Graph.SemiColoringRounds)._1
-      val got = operators.Graph.louvainMovesW(cross, strength, m2w,
-        col2.select($"node", $"color", $"node".as("lbl")),
-        operators.Graph.LouvainP2Rounds, operators.Graph.LouvainP2Colors)
-        .as[(Long, Long)].collect().toMap
-      val color2 = col2.as[(Long, Int)].collect().toMap
-      val want = LouvainReference.movesW(ce.toSeq, st, BigInt(m2w),
-        color2, color2.keys.map(v => v -> v).toMap,
+      val r = Q102Construction.run(spark, pairs)
+      val want = LouvainReference.movesW(r.cross, r.strength,
+        BigInt(r.m2w), r.color, r.color.keys.map(v => v -> v).toMap,
         operators.Graph.LouvainP2Rounds)
-      assert(got == want, s"$name: weighted moves diverged from reference")
-      val local = operators.LouvainLocal.movesW(ce, st, m2w,
-        operators.LouvainLocal.coloring(ce.map(t => (t._1, t._2))),
-        operators.Graph.LouvainP2Rounds)
-      assert(local == got, s"$name: local weighted moves diverged")
-      le.unpersist(); edges.unpersist()
+      assert(r.moves == want, s"$name: weighted moves diverged from reference")
     }
   }
 

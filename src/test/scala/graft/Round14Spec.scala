@@ -57,6 +57,17 @@ class Round14Spec extends GraftSpecBase {
     }
   }
 
+  test("local weighted moves == distributed louvainMovesW on the q102 construction") {
+    for ((name, pairs) <- graphs) {
+      val r = Q102Construction.run(spark, pairs)
+      val ce = r.cross.toArray
+      val got = operators.LouvainLocal.movesW(ce, r.strength, r.m2w,
+        operators.LouvainLocal.coloring(ce.map(t => (t._1, t._2))),
+        operators.Graph.LouvainP2Rounds)
+      assert(got == r.moves, s"$name: local weighted moves diverged")
+    }
+  }
+
   test("q102 registry: local endgame result == forced-distributed result at sf0.001") {
     val local = operators.Graph.q102LouvainCoarse(spark, sf)
       .as[(Long, Long, Long)].collect().sorted
