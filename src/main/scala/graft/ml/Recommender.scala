@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.recommendation.ALS
+import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import graft.Tables
 
 /** Collaborative-filtering recommender — the reference's "movie
@@ -42,7 +42,7 @@ object Recommender {
   /** The `als` session artifact: several serving queries (top-N
     * recs, similar items) share one trained model instead of refitting
     * per query. */
-  def fit(s: SparkSession, dir: String): org.apache.spark.ml.recommendation.ALSModel =
+  def fit(s: SparkSession, dir: String): ALSModel =
     graft.Caches.artifact("als", dir) {
       fitOrLoad(s, dir, sys.env.get("SPARK_GRAFT_MODEL_DIR"))
     }
@@ -53,20 +53,28 @@ object Recommender {
     * c_ui = 1 + α·r_ui over ALL cells (observed and not). Same blocked
     * solver, same two shuffles per iteration, so the 100 TB shape is
     * unchanged; only the per-block normal equations differ. */
-  def fitImplicit(s: SparkSession, dir: String): org.apache.spark.ml.recommendation.ALSModel =
+  def fitImplicit(s: SparkSession, dir: String): ALSModel =
     graft.Caches.artifact("als:implicit", dir) {
-      val r = ratings(s, dir).cache()
-      val m = new ALS()
+      trainAls(s, dir, implicitPrefs = true)
+    }
+
+  /** Both factorizations' one trainer: the same ALS estimator over the
+    * cached rating matrix (ALS iterates over it; the fitted factors are
+    * materialized at ALS's final storage level, so the cache is
+    * released once the fit returns or throws). `implicitPrefs` swaps
+    * the loss for Hu/Koren/Volinsky confidence weighting (α = 8). */
+  private def trainAls(s: SparkSession, dir: String, implicitPrefs: Boolean): ALSModel = {
+    val r = ratings(s, dir).cache()
+    try {
+      val als = new ALS()
         .setRank(Rank).setMaxIter(Iters).setSeed(Seed)
         .setRegParam(0.1)
-        .setImplicitPrefs(true).setAlpha(8.0)
         .setNumBlocks(alsBlocks(r.count()))
         .setUserCol("user").setItemCol("item").setRatingCol("rating")
         .setColdStartStrategy("drop")
-        .fit(r)
-      r.unpersist()
-      m
-    }
+      (if (implicitPrefs) als.setImplicitPrefs(true).setAlpha(8.0) else als).fit(r)
+    } finally r.unpersist()
+  }
 
   /** Fit, or reload a previously-persisted factorization if `store`
     * is set and holds one for this dataset — the cross-SESSION half of
@@ -83,23 +91,13 @@ object Recommender {
     * fit-path clustering — approximate serving output is registry-
     * equivalent, not bit-identical (the recall spec is the contract). */
   private[graft] def fitOrLoad(s: SparkSession, dir: String,
-      store: Option[String]): org.apache.spark.ml.recommendation.ALSModel = {
+      store: Option[String]): ALSModel = {
     val saved = store.map(b => b + "/als-" + Tables.identityDigest(
       Tables.sourceIdentity(s, s"$dir/orders.parquet", s"$dir/lineitem.parquet")))
     saved.filter(p => new java.io.File(p, "metadata").exists()) match {
-      case Some(p) => org.apache.spark.ml.recommendation.ALSModel.load(p)
+      case Some(p) => ALSModel.load(p)
       case None =>
-        val r = ratings(s, dir).cache() // ALS iterates over it
-        val m = new ALS()
-          .setRank(Rank).setMaxIter(Iters).setSeed(Seed)
-          .setRegParam(0.1)
-          .setNumBlocks(alsBlocks(r.count()))
-          .setUserCol("user").setItemCol("item").setRatingCol("rating")
-          .setColdStartStrategy("drop")
-          .fit(r)
-        // the fitted factors are materialized at ALS's final storage
-        // level — the ratings cache has served its purpose
-        r.unpersist()
+        val m = trainAls(s, dir, implicitPrefs = false)
         saved.foreach(p => m.write.overwrite().save(p))
         m
     }
@@ -415,9 +413,13 @@ object Recommender {
 
   /** The exact MLlib serving path (blocked user×item cross) — the
     * spec's recall baseline for m1. */
-  def m1AlsRecommendExact(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val model = fit(s, dir)
+  def m1AlsRecommendExact(s: SparkSession, dir: String): DataFrame =
+    exactSlate(fit(s, dir))
+
+  /** A model's exact top-5 per user (MLlib's blocked user×item cross)
+    * in the served slate's shape: (c_custkey, rnk, p_partkey, score). */
+  private def exactSlate(model: ALSModel): DataFrame = {
+    import model.userFactors.sparkSession.implicits._
     model.recommendForAllUsers(5)
       .select($"user", posexplode($"recommendations").as(Seq("pos", "rec")))
       .select($"user".as("c_custkey"), ($"pos" + 1).as("rnk"),
@@ -442,16 +444,8 @@ object Recommender {
 
   /** Exact serving twin of m8 (blocked cross product) — the recall
     * baseline. */
-  private[graft] def m8ImplicitRecsExact(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val model = fitImplicit(s, dir)
-    model.recommendForAllUsers(5)
-      .select($"user", posexplode($"recommendations").as(Seq("pos", "rec")))
-      .select($"user".as("c_custkey"), ($"pos" + 1).as("rnk"),
-        $"rec.item".as("p_partkey"),
-        round($"rec.rating".cast("double"), 4).as("score"))
-      .orderBy($"c_custkey", $"rnk")
-  }
+  private[graft] def m8ImplicitRecsExact(s: SparkSession, dir: String): DataFrame =
+    exactSlate(fitImplicit(s, dir))
 
   /** M3: item-item similarity ("customers also bought") — top-5
     * nearest parts per part by cosine over the ALS item factors,
@@ -511,8 +505,8 @@ object Recommender {
     * index, its packed lists and the m1 slate derive from the replaced
     * factors: they are evicted, their storage freed, and rebuilt from
     * the loaded model on next use. */
-  def loadModel(s: SparkSession, dir: String, path: String): org.apache.spark.ml.recommendation.ALSModel = {
-    val m = org.apache.spark.ml.recommendation.ALSModel.load(path)
+  def loadModel(s: SparkSession, dir: String, path: String): ALSModel = {
+    val m = ALSModel.load(path)
     Seq("als", "item_ivf:explicit", "item_packed:explicit:false",
       "item_packed:explicit:true", "m1_slate").foreach(graft.Caches.evict(_, dir))
     graft.Caches.artifact("als", dir)(m)

@@ -2,9 +2,10 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.Pipeline
+import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.feature.{HashingTF, IDF, RegexTokenizer, StopWordsRemover}
+import org.apache.spark.ml.functions.vector_to_array
 import graft.Tables
 
 /** Text-sentiment head — the reference's sentiment-analysis pipeline
@@ -55,36 +56,39 @@ object Sentiment {
       .withColumn("is_train", pmod($"doc_id", lit(5)) =!= 0)
   }
 
-  /** Fit the pipeline on the labeled TRAIN fold only (the test fold
-    * stays unseen for `heldOutAccuracy`), once per dataset: the
-    * `sentiment` session artifact serves every m2/m4 call after the
-    * first.
-    *
-    * Fitted stage-wise rather than via `Pipeline.fit` so the term-
-    * frequency frame is computed ONCE and cached: inside Pipeline.fit
-    * the tokenize→stopwords→hashingTF prefix is lazy, so IDF's
-    * document-frequency pass and LR's instance materialization would
-    * each re-run it over the corpus. The final assembly `Pipeline.fit`
-    * over already-fitted transformers refits nothing — it just wraps
-    * them in the same serveable PipelineModel the one-shot fit
-    * returns. */
-  def fit(s: SparkSession, dir: String): org.apache.spark.ml.PipelineModel =
-    graft.Caches.artifact("sentiment", dir) {
-      import s.implicits._
-      val train = labeled(s, dir).filter($"label".isNotNull && $"is_train")
-      val Array(tok, sw, tf, idf, lr) = pipeline.getStages
-      val featurize = new Pipeline().setStages(Array(tok, sw, tf)).fit(train)
-      val tfFrame = featurize.transform(train).select($"tf", $"label").cache()
+  /** Fit `pipeline` on `train` stage-wise rather than via
+    * `Pipeline.fit`, so the term-frequency frame is computed ONCE and
+    * cached: inside Pipeline.fit the tokenize→stopwords→hashingTF
+    * prefix is lazy, so IDF's document-frequency pass and LR's
+    * instance materialization would each re-run it over the corpus.
+    * The final assembly `Pipeline.fit` over already-fitted
+    * transformers refits nothing — it just wraps them in the same
+    * serveable PipelineModel the one-shot fit returns. The tf cache is
+    * released whether or not a fit throws. */
+  private def trainStagewise(train: DataFrame): PipelineModel = {
+    val Array(tok, sw, tf, idf, lr) = pipeline.getStages
+    val featurize = new Pipeline().setStages(Array(tok, sw, tf)).fit(train)
+    val tfFrame = featurize.transform(train).select(col("tf"), col("label")).cache()
+    try {
       val idfModel = idf.asInstanceOf[IDF].fit(tfFrame)
       // the summary would pin the session inside every serve closure —
       // see ModelHygiene (a d6-then-m2 session order would crash)
       val lrModel = org.apache.spark.ml.graft.ModelHygiene.dropTrainingSummary(
         lr.asInstanceOf[LogisticRegression].fit(idfModel.transform(tfFrame)))
-      val model = new Pipeline()
+      new Pipeline()
         .setStages(featurize.stages ++ Array(idfModel, lrModel))
         .fit(train.limit(0))
-      tfFrame.unpersist()
-      model
+    } finally tfFrame.unpersist()
+  }
+
+  /** Fit the pipeline on the labeled TRAIN fold only (the test fold
+    * stays unseen for `heldOutAccuracy`), once per dataset: the
+    * `sentiment` session artifact serves every m2/m4 call after the
+    * first. */
+  def fit(s: SparkSession, dir: String): PipelineModel =
+    graft.Caches.artifact("sentiment", dir) {
+      import s.implicits._
+      trainStagewise(labeled(s, dir).filter($"label".isNotNull && $"is_train"))
     }
 
   /** M2: train on polarity-labeled train-fold docs, score every doc.
@@ -126,8 +130,8 @@ object Sentiment {
     fit(s, dir).write.overwrite().save(path)
 
   /** Load a persisted pipeline and register it for `dir`. */
-  def loadModel(s: SparkSession, dir: String, path: String): org.apache.spark.ml.PipelineModel = {
-    val m = org.apache.spark.ml.PipelineModel.load(path)
+  def loadModel(s: SparkSession, dir: String, path: String): PipelineModel = {
+    val m = PipelineModel.load(path)
     graft.Caches.evict("sentiment", dir)
     graft.Caches.artifact("sentiment", dir)(m)
   }
@@ -172,18 +176,8 @@ object Sentiment {
       .withColumn("flip", pmod(xxhash64($"doc_id"), lit(20)) < 3)
       .withColumn("noisy_label",
         when($"flip", lit(1.0) - $"label").otherwise($"label"))
-    val train = base.filter($"is_train")
-      .withColumn("label", $"noisy_label")
-    val Array(tok, sw, tf, idf, lr) = pipeline.getStages
-    val featurize = new Pipeline().setStages(Array(tok, sw, tf)).fit(train)
-    val tfFrame = featurize.transform(train).select($"tf", $"label").cache()
-    val idfModel = idf.asInstanceOf[IDF].fit(tfFrame)
-    val lrModel = org.apache.spark.ml.graft.ModelHygiene.dropTrainingSummary(
-      lr.asInstanceOf[LogisticRegression].fit(idfModel.transform(tfFrame)))
-    val model = new Pipeline()
-      .setStages(featurize.stages ++ Array(idfModel, lrModel))
-      .fit(train.limit(0))
-    tfFrame.unpersist()
+    val model = trainStagewise(base.filter($"is_train")
+      .withColumn("label", $"noisy_label"))
     def acc(df: DataFrame, labelCol: String): Double = {
       val scored = model.transform(df)
       scored.filter($"prediction" === col(labelCol)).count().toDouble / scored.count()
@@ -191,11 +185,4 @@ object Sentiment {
     (acc(base.filter(!$"is_train"), "label"),
       acc(base.filter($"is_train"), "noisy_label"))
   }
-
-  private def vector_to_array(c: org.apache.spark.sql.Column) =
-    org.apache.spark.ml.functions.vector_to_array(c)
-
-  /** Shared with the streaming scoring twin (SentimentStream). */
-  private[graft] def vectorToArray(c: org.apache.spark.sql.Column) =
-    vector_to_array(c)
 }

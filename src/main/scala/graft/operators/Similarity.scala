@@ -29,19 +29,18 @@ object Similarity {
   def s1KnnBrute(s: SparkSession, dir: String): DataFrame =
     s1KnnBrute(s, dir, 5)
 
+  /** The exact scorer behind s1 and s7: the query block (vec_id <
+    * `nQueries`) broadcasts, each partition scores its candidate slice
+    * with the codegen'd dot, and the slate's map-side `topk_agg`
+    * partial ships only k rows per (partition, query). */
   private[graft] def s1KnnBrute(s: SparkSession, dir: String, nQueries: Int): DataFrame = {
     import s.implicits._
     val emb = withNorm(Tables.embeddings(s, dir))
     val queries = emb.filter($"vec_id" < nQueries)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"))
-    val scored = emb.join(broadcast(queries), $"vec_id" =!= $"q_id")
+    slate(emb.join(broadcast(queries), $"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id".as("neighbor_id"),
-        q4(dot($"qv", $"v") / ($"qn" * $"nrm")).as("cos"))
-    val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"neighbor_id")
-    scored.withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= 3)
-      .select($"q_id", $"rnk", $"neighbor_id", $"cos")
-      .orderBy($"q_id", $"rnk")
+        q4(dot($"qv", $"v") / ($"qn" * $"nrm")).as("cos")), Seq("q_id"), "cos", 3)
   }
 
   /** S6: exact max-inner-product top-k (MIPS) — the recommender
@@ -66,42 +65,21 @@ object Similarity {
       .select($"vec_id", toDoubles($"embedding").as("v"))
     val queries = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"v".as("qv"))
-    val scored = emb.join(broadcast(queries), $"vec_id" =!= $"q_id")
+    slate(emb.join(broadcast(queries), $"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id".as("neighbor_id"),
-        q4(dot($"qv", $"v")).as("ip"))
-    scored.groupBy($"q_id")
-      .agg(expr("topk_agg(ip, neighbor_id, 3)").as("top"))
-      .select($"q_id", posexplode($"top").as(Seq("pos", "e")))
-      .select($"q_id", ($"pos" + 1).cast("int").as("rnk"),
-        $"e.id".as("neighbor_id"), $"e.score".as("ip"))
-      .orderBy($"q_id", $"rnk")
+        q4(dot($"qv", $"v")).as("ip")), Seq("q_id"), "ip", 3)
   }
 
   /** S7: exact kNN JOIN — a 500-query batch each getting its top-3
     * cosine neighbors over the whole corpus (the batch operator behind
-    * "find neighbors for every row"; s1 is its 5-query lookup case).
-    * The O(n·m) dot products are unavoidable for the exact result, but
-    * the SHUFFLE never sees them: the query block broadcasts, each
-    * partition scores its candidate slice, and `topk_agg`'s map-side
-    * partial ships only k rows per (partition, query) — m·k rows cross
-    * the wire, not n·m. At 100 TB the same plan serves with the s2 IVF
-    * probe replacing the full scan (the approximate twin); this entry
-    * is the exact reference the recall specs measure against. */
-  def s7KnnJoin(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = withNorm(Tables.embeddings(s, dir))
-    val queries = emb.filter($"vec_id" < 500)
-      .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"))
-    emb.join(broadcast(queries), $"vec_id" =!= $"q_id")
-      .select($"q_id", $"vec_id".as("neighbor_id"),
-        q4(dot($"qv", $"v") / ($"qn" * $"nrm")).as("cos"))
-      .groupBy($"q_id")
-      .agg(expr("topk_agg(cos, neighbor_id, 3)").as("top"))
-      .select($"q_id", posexplode($"top").as(Seq("pos", "e")))
-      .select($"q_id", ($"pos" + 1).cast("int").as("rnk"),
-        $"e.id".as("neighbor_id"), $"e.score".as("cos"))
-      .orderBy($"q_id", $"rnk")
-  }
+    * "find neighbors for every row"); s1's exact scorer at 500
+    * queries. The O(n·m) dot products are unavoidable for the exact
+    * result, but the SHUFFLE never sees them: m·k rows cross the wire,
+    * not n·m. At 100 TB the same plan serves with the s2 IVF probe
+    * replacing the full scan (the approximate twin); this entry is the
+    * exact reference the recall specs measure against. */
+  def s7KnnJoin(s: SparkSession, dir: String): DataFrame =
+    s1KnnBrute(s, dir, 500)
 
   /** The norm-augmentation lift for the spec: candidates →
     * [x; √(M²−‖x‖²)], queries → [q; 0]. ‖lifted‖ = M for every
@@ -401,6 +379,39 @@ object Similarity {
       .withColumn("nrm", sqrt(dot($"v", $"v")))
   }
 
+  /** The top-k slate every ranked search ends with: one `topk_agg` per
+    * `keys` group over (`score`, neighbor_id) rows — score desc (−0.0
+    * canonicalized), neighbor_id asc, the order a row_number window
+    * would give — exploded to one row per rank. The map-side partial
+    * ships ≤ k rows per (partition, group); a window would sort every
+    * candidate. Returns (keys…, rnk int, neighbor_id, score) ordered by
+    * (q_id, rnk). */
+  private def slate(scored: DataFrame, keys: Seq[String], score: String,
+      k: Int): DataFrame = {
+    import scored.sparkSession.implicits._
+    val ks = keys.map(col)
+    scored.groupBy(ks: _*)
+      .agg(expr(s"topk_agg($score, neighbor_id, $k)").as("top"))
+      .select(ks :+ posexplode($"top").as(Seq("pos", "e")): _*)
+      .select(ks ++ Seq(($"pos" + 1).cast("int").as("rnk"),
+        $"e.id".as("neighbor_id"), $"e.score".as(score)): _*)
+      .orderBy($"q_id", $"rnk")
+  }
+
+  /** The IVF centroids as one K×dim array literal. */
+  private def centroidLit(centers: Array[Array[Double]]): Column =
+    array(centers.map(c => array(c.map(lit): _*)): _*)
+
+  /** The IVF probe: each `qv` row's top-`probes` clusters by
+    * q4-quantized centroid cosine, one row per probed cluster
+    * (`probe`). */
+  private def probeClusters(queries: DataFrame, centers: Array[Array[Double]],
+      probes: Int): DataFrame = {
+    import queries.sparkSession.implicits._
+    queries.withColumn("probe", explode(topIndicesDesc(
+      transform(centroidLit(centers), c => q4(cosine($"qv", c))), probes)))
+  }
+
   val IvfClusters = 16
   val IvfProbes = 2
 
@@ -438,21 +449,12 @@ object Similarity {
   def s2AnnIvf(s: SparkSession, dir: String, probes: Int): DataFrame = {
     import s.implicits._
     val (assigned, centers) = ivfIndex(s, dir)
-    val centerLit = array(centers.map(c => array(c.map(lit): _*)): _*)
-    // per-query: top-`IvfProbes` clusters by centroid cosine
-    val queries = assigned.filter($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"v".as("qv"))
-      .withColumn("cdist",
-        transform(centerLit, c => q4(cosine($"qv", c))))
-      .withColumn("probe", explode(topIndicesDesc($"cdist", probes)))
-    val scored = assigned.join(broadcast(queries),
+    val queries = probeClusters(assigned.filter($"vec_id" < 5)
+      .select($"vec_id".as("q_id"), $"v".as("qv")), centers, probes)
+    slate(assigned.join(broadcast(queries),
         $"cluster" === $"probe" && $"vec_id" =!= $"q_id")
-      .select($"q_id", $"vec_id".as("neighbor_id"), q4(cosine($"qv", $"v")).as("cos"))
-    val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"neighbor_id")
-    scored.withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= 3)
-      .select($"q_id", $"rnk", $"neighbor_id", $"cos")
-      .orderBy($"q_id", $"rnk")
+      .select($"q_id", $"vec_id".as("neighbor_id"), q4(cosine($"qv", $"v")).as("cos")),
+      Seq("q_id"), "cos", 3)
   }
 
   /** Persist the IVF index in its serving layout: vectors written
@@ -480,10 +482,9 @@ object Similarity {
   private[graft] def clusterRadiiOf(assigned: DataFrame,
       centers: Array[Array[Double]]): Array[Double] = {
     import assigned.sparkSession.implicits._
-    val centerLit = array(centers.map(c => array(c.map(lit): _*)): _*)
     val rows = assigned
       .select($"cluster", acos(least(greatest(
-        cosine($"v", element_at(centerLit, $"cluster" + 1)),
+        cosine($"v", element_at(centroidLit(centers), $"cluster" + 1)),
         lit(-1.0)), lit(1.0))).as("ang"))
       .groupBy($"cluster").agg(max($"ang").as("radius"))
       .as[(Int, Double)].collect()
@@ -501,7 +502,7 @@ object Similarity {
       nQueries: Int): (DataFrame, DataFrame) = {
     import assigned.sparkSession.implicits._
     val nK = centers.length
-    val centerLit = array(centers.map(c => array(c.map(lit): _*)): _*)
+    val centerLit = centroidLit(centers)
     val radiusLit = array(radii.map(lit): _*)
     val queries = assigned.filter($"vec_id" < nQueries)
       .select($"vec_id".as("q_id"), $"v".as("qv"))
@@ -532,13 +533,7 @@ object Similarity {
         $"cluster" === $"probe" && $"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id".as("neighbor_id"),
         q4(cosine($"qv", $"v")).as("cos"))
-    val res = scored1.unionAll(scored2)
-      .groupBy($"q_id")
-      .agg(expr("topk_agg(cos, neighbor_id, 3)").as("top"))
-      .select($"q_id", posexplode($"top").as(Seq("pos", "e")))
-      .select($"q_id", ($"pos" + 1).cast("int").as("rnk"),
-        $"e.id".as("neighbor_id"), $"e.score".as("cos"))
-      .orderBy($"q_id", $"rnk")
+    val res = slate(scored1.unionAll(scored2), Seq("q_id"), "cos", 3)
     val probed = queries.select($"q_id", $"probe1".cast("int").as("cluster"))
       .unionAll(probes2.select($"q_id", $"probe".cast("int").as("cluster")))
     (res, probed)
@@ -610,21 +605,11 @@ object Similarity {
       probes: Int, k: Int): DataFrame = {
     import s.implicits._
     val (assigned, centers) = ivfIndex(s, dir)
-    val centerLit = array(centers.map(c => array(c.map(lit): _*)): _*)
-    val queries = assigned
-      .select($"vec_id".as("q_id"), $"v".as("qv"))
-      .withColumn("cdist", transform(centerLit, c => q4(cosine($"qv", c))))
-      .withColumn("probe", explode(topIndicesDesc($"cdist", probes)))
-      .select($"q_id", $"qv", $"probe")
-    assigned.join(queries, $"cluster" === $"probe" && $"vec_id" =!= $"q_id")
+    val queries = probeClusters(assigned
+      .select($"vec_id".as("q_id"), $"v".as("qv")), centers, probes)
+    slate(assigned.join(queries, $"cluster" === $"probe" && $"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id".as("neighbor_id"),
-        q4(cosine($"qv", $"v")).as("cos"))
-      .groupBy($"q_id")
-      .agg(expr(s"topk_agg(cos, neighbor_id, $k)").as("top"))
-      .select($"q_id", posexplode($"top").as(Seq("pos", "e")))
-      .select($"q_id", ($"pos" + 1).cast("int").as("rnk"),
-        $"e.id".as("neighbor_id"), $"e.score".as("cos"))
-      .orderBy($"q_id", $"rnk")
+        q4(cosine($"qv", $"v")).as("cos")), Seq("q_id"), "cos", k)
   }
 
   // ---- Graph-based ANN (beam search over the kNN graph) --------------
@@ -742,10 +727,9 @@ object Similarity {
     val (assigned, centers) = ivfIndex(s, dir)
     val g = knnGraphIndex(s, dir)
     val vecs = assigned.select($"vec_id", $"v")
-    val centerLit = array(centers.map(c => array(c.map(lit): _*)): _*)
     // per-cluster medoid: K-bounded frame (≤ IvfClusters rows)
     val medoids = assigned
-      .withColumn("csim", q4(cosine($"v", element_at(centerLit, $"cluster" + 1))))
+      .withColumn("csim", q4(cosine($"v", element_at(centroidLit(centers), $"cluster" + 1))))
       .groupBy($"cluster")
       .agg(max(struct($"csim", (-$"vec_id").as("nid"))).as("m"))
       .select((-$"m.nid").as("vec_id"))
@@ -770,13 +754,8 @@ object Similarity {
       // expansion and the union (§6.14's two-descendant shape)
       bm = rescore(cand).checkpointFresh
     }
-    bm.filter($"vec_id" =!= $"q_id")
-      .groupBy($"q_id")
-      .agg(expr("topk_agg(cos, vec_id, 3)").as("top"))
-      .select($"q_id", posexplode($"top").as(Seq("pos", "e")))
-      .select($"q_id", ($"pos" + 1).cast("int").as("rnk"),
-        $"e.id".as("neighbor_id"), $"e.score".as("cos"))
-      .orderBy($"q_id", $"rnk")
+    slate(bm.filter($"vec_id" =!= $"q_id")
+      .select($"q_id", $"vec_id".as("neighbor_id"), $"cos"), Seq("q_id"), "cos", 3)
   }
 
   // ---- Product quantization (IVF-PQ) ---------------------------------
@@ -1051,14 +1030,11 @@ object Similarity {
     val (packed, cb, rotRows) = pqIndex(s, dir)
     val cbLit = typedlit(cb.toSeq)
     val rotLit = typedlit(rotRows)
-    val centerLit = array(centers.map(c => array(c.map(lit): _*)): _*)
-    val queries = assigned.filter($"vec_id" < nQueries)
+    val normed = assigned.filter($"vec_id" < nQueries)
       .select($"vec_id".as("q_id"), $"v".as("qv"))
       .withColumn("qn", sqrt(dot($"qv", $"qv")))
-      .withColumn("qu",
-        transform($"qv", x => x / when($"qn" === 0.0, 1.0).otherwise($"qn")))
-      .withColumn("cdist", transform(centerLit, c => q4(cosine($"qv", c))))
-      .withColumn("probe", explode(topIndicesDesc($"cdist", probes)))
+      .withColumn("qu", unitScaled($"qv", $"qn"))
+    val queries = probeClusters(normed, centers, probes)
       // rotate the query once into OPQ space: (R q̂)·(R r) = q̂·r, so
       // LUT sums against the rotated codes still rank by cosine
       .select($"q_id", $"qv",
@@ -1077,11 +1053,7 @@ object Similarity {
     val exact = cands.join(assigned.select($"vec_id".as("neighbor_id"), $"cluster", $"v"),
         Seq("cluster", "neighbor_id"))
       .select($"q_id", $"neighbor_id", q4(cosine($"qv", $"v")).as("cos"))
-    val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"neighbor_id")
-    exact.withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= 3)
-      .select($"q_id", $"rnk", $"neighbor_id", $"cos")
-      .orderBy($"q_id", $"rnk")
+    slate(exact, Seq("q_id"), "cos", 3)
   }
 
   // ----------------------------------------------------------------
@@ -1199,16 +1171,11 @@ object Similarity {
     val queries = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"),
         $"label".as("qlabel"))
-    emb.join(broadcast(queries),
+    slate(emb.join(broadcast(queries),
         $"label" === $"qlabel" && $"vec_id" =!= $"q_id")
       .select($"q_id", $"qlabel".as("label"), $"vec_id".as("neighbor_id"),
-        q4(dot($"qv", $"v") / ($"qn" * $"nrm")).as("cos"))
-      .groupBy($"q_id", $"label")
-      .agg(expr("topk_agg(cos, neighbor_id, 3)").as("top"))
-      .select($"q_id", $"label", posexplode($"top").as(Seq("pos", "e")))
-      .select($"q_id", $"label", ($"pos" + 1).cast("int").as("rnk"),
-        $"e.id".as("neighbor_id"), $"e.score".as("cos"))
-      .orderBy($"q_id", $"rnk")
+        q4(dot($"qv", $"v") / ($"qn" * $"nrm")).as("cos")),
+      Seq("q_id", "label"), "cos", 3)
   }
 
   private[graft] def filteredAnnOracleSql: String =
@@ -1263,23 +1230,15 @@ object Similarity {
     // layout, not a join)
     val labeled = assigned.join(
       Tables.embeddings(s, dir).select($"vec_id", $"label"), "vec_id")
-    val centerLit = array(centers.map(c => array(c.map(lit): _*)): _*)
-    val queries = labeled.filter($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"v".as("qv"), $"label".as("qlabel"))
-      .withColumn("cdist", transform(centerLit, c => q4(cosine($"qv", c))))
-      .withColumn("probe", explode(topIndicesDesc($"cdist", probes)))
-      .select($"q_id", $"qv", $"qlabel", $"probe")
-    labeled.join(broadcast(queries),
+    val queries = probeClusters(labeled.filter($"vec_id" < 5)
+      .select($"vec_id".as("q_id"), $"v".as("qv"), $"label".as("qlabel")),
+      centers, probes)
+    slate(labeled.join(broadcast(queries),
         $"label" === $"qlabel" && $"cluster" === $"probe" &&
           $"vec_id" =!= $"q_id")
       .select($"q_id", $"qlabel".as("label"), $"vec_id".as("neighbor_id"),
-        q4(cosine($"qv", $"v")).as("cos"))
-      .groupBy($"q_id", $"label")
-      .agg(expr("topk_agg(cos, neighbor_id, 3)").as("top"))
-      .select($"q_id", $"label", posexplode($"top").as(Seq("pos", "e")))
-      .select($"q_id", $"label", ($"pos" + 1).cast("int").as("rnk"),
-        $"e.id".as("neighbor_id"), $"e.score".as("cos"))
-      .orderBy($"q_id", $"rnk")
+        q4(cosine($"qv", $"v")).as("cos")),
+      Seq("q_id", "label"), "cos", 3)
   }
 
   /** Measured recall of the hybrid probe path at `probes` vs the

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,7 +24,6 @@ object SentimentStream {
     import docs.sparkSession.implicits._
     model.transform(docs)
       .select($"doc_id", $"prediction",
-        round(element_at(graft.ml.Sentiment.vectorToArray($"probability"), 2), 4)
-          .as("p_positive"))
+        round(element_at(vector_to_array($"probability"), 2), 4).as("p_positive"))
   }
 }

@@ -33,6 +33,18 @@ class DotTopKSpec extends GraftSpecBase {
     assert(got.map(_._2) == Seq(2L))
   }
 
+  test("rejects a wrong arity or a non-literal k at analysis") {
+    val df = Seq((Seq(1.0), Seq(5L), Seq(4.0), 3)).toDF("q", "ids", "flat", "k")
+    def err(args: org.apache.spark.sql.Column*): String =
+      intercept[org.apache.spark.sql.AnalysisException] {
+        df.select(call_function("dot_topk", args: _*))
+      }.getMessage
+    val arity = err($"q", $"ids", $"flat")
+    assert(arity.contains("dot_topk(q, ids, flat, k) takes 4 arguments, got 3"), arity)
+    val column = err($"q", $"ids", $"flat", $"k")
+    assert(column.contains("dot_topk: k must be an INT literal"), column)
+  }
+
   test("rejects a flat block whose size disagrees with ids x dims") {
     val ex = intercept[Exception] {
       topk(Seq(1.0, 2.0), Seq(1L, 2L), Seq(1.0, 2.0, 3.0), 1)

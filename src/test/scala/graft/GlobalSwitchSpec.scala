@@ -76,6 +76,24 @@ class GlobalSwitchSpec extends AnyFunSuite {
     assert(hits.size <= 1, hits.mkString("\n", "\n", ""))
   }
 
+  // the vector-search family ranks through one top-k slate
+  // (`Similarity.slate`, a topk_agg) and builds one IVF centroid
+  // literal; a window rank or a second literal is a second copy that
+  // can drift from it. s12's fusion keeps the one window: it ranks
+  // summed rank contributions, not a scored candidate stream.
+  private val CentroidLiteral = """array\([^\n]*\.map\([^\n]*array\([^\n]*\.map\(lit\)""".r
+
+  test("similarity keeps one window rank and one centroid literal") {
+    val f = Paths.get("src/main/scala/graft/operators/Similarity.scala")
+    val lines = Files.readAllLines(f).asScala.zipWithIndex
+    def hits(p: String => Boolean) =
+      lines.collect { case (line, i) if p(line) => s"$f:${i + 1}: ${line.trim}" }
+    val windows = hits(_.contains("row_number().over"))
+    assert(windows.size <= 1, windows.mkString("\n", "\n", ""))
+    val literals = hits(CentroidLiteral.findFirstIn(_).isDefined)
+    assert(literals.size <= 1, literals.mkString("\n", "\n", ""))
+  }
+
   // a defaulted Boolean parameter is a mode switch that only callers
   // passing the non-default value ever reach; each kernel ships one
   // schedule, so a mode is an explicit argument at every call or gone

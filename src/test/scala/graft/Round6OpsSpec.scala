@@ -96,14 +96,19 @@ class Round6OpsSpec extends GraftSpecBase {
   // ---------------- s7 kNN join ----------------
 
   test("s7: the batch kNN join agrees with s1's window formulation on the shared queries") {
-    val s1 = operators.Similarity.s1KnnBrute(spark, sf)
+    def slate(df: org.apache.spark.sql.DataFrame) = df
       .select($"q_id", $"rnk", $"neighbor_id", $"cos")
       .as[(Long, Int, Long, Double)].collect().toSet
-    val s7 = operators.Similarity.s7KnnJoin(spark, sf)
-      .filter($"q_id" < 5)
-      .select($"q_id", $"rnk", $"neighbor_id", $"cos")
-      .as[(Long, Int, Long, Double)].collect().toSet
+    val s1 = slate(operators.Similarity.s1KnnBrute(spark, sf))
+    val s7All = slate(operators.Similarity.s7KnnJoin(spark, sf))
+    val s7 = s7All.filter(_._1 < 5)
     assert(s7 == s1, "topk_agg batch path must reproduce the window lookup path")
+    // both entries rank through topk_agg; the row_number window
+    // (`SlateReference`) is the reference, on s1's 5 queries and s7's 500
+    assert(s1 == slate(SlateReference.knnBrute(spark, sf, 5)),
+      "s1's topk_agg slate must reproduce the window formulation")
+    assert(s7All == slate(SlateReference.knnBrute(spark, sf, 500)),
+      "s7's topk_agg slate must reproduce the window formulation")
   }
 
   test("s7: plan is broadcast + partial topk_agg — no window, no pair-sized shuffle") {

@@ -22,6 +22,8 @@ class SimilaritySpec extends GraftSpecBase {
     val exact = Similarity.s1KnnBrute(spark, sf).collect().toSeq
     val full = Similarity.s2AnnIvf(spark, sf, Similarity.IvfClusters).collect().toSeq
     assert(full == exact)
+    // and both equal the window-ranked brute force (`SlateReference`)
+    assert(full == SlateReference.knnBrute(spark, sf, 5).collect().toSeq)
   }
 
   test("ivf with default probes returns k results per query from probed lists only") {

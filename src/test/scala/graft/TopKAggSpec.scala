@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -55,6 +56,20 @@ class TopKAggSpec extends GraftSpecBase {
     val win = df.withColumn("rnk", row_number().over(w)).filter($"rnk" <= 2)
       .orderBy($"rnk").select($"item").as[Long].collect().toSeq
     assert(agg == win && agg == Seq(10L, 20L))
+  }
+
+  test("topk_agg rejects a wrong arity or a k that is not a positive INT literal at analysis") {
+    import spark.implicits._
+    val df = Seq((1L, 1.0, 10L, 2)).toDF("g", "score", "item", "k")
+    def err(args: org.apache.spark.sql.Column*): String = intercept[AnalysisException] {
+      df.groupBy($"g").agg(call_function("topk_agg", args: _*))
+    }.getMessage
+    val arity = err($"score", $"item")
+    assert(arity.contains("topk_agg(score, id, k) takes 3 arguments, got 2"), arity)
+    val column = err($"score", $"item", $"k")
+    assert(column.contains("topk_agg: k must be an INT literal"), column)
+    val zero = err($"score", $"item", lit(0))
+    assert(zero.contains("topk_agg: k must be in [1,"), zero)
   }
 
   test("topk_agg with k larger than the group returns the whole group ranked") {
