@@ -20,9 +20,25 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * All three share one build path: each build is timed and its
   * exclusive seconds go to one ledger (`drainBuildLog`), so the entry
   * that triggered a build is charged for it, whichever lifetime the
-  * artifact has. `memo` caches and materializes the built frame before
-  * `cleanup` runs, so executor storage holds the artifact, not every
-  * intermediate that produced it.
+  * artifact has.
+  *
+  * Build intermediates have one owner too, a `Scope`. A build or a
+  * kernel caches a frame it reads more than once with `scope.keep`,
+  * and the scope unpersists everything it kept when it closes:
+  *
+  *  - `memo(key, dir) { scope => ... }` closes its scope once the
+  *    built frame is cached and counted, so executor storage holds the
+  *    artifact, not every intermediate that produced it;
+  *  - `scoped { scope => ... }` closes when its body returns, for
+  *    kernels outside a memo. Put the block's end where the
+  *    intermediates are last read: a lazy result that still reads a
+  *    kept frame recomputes it uncached once the block has closed.
+  *
+  * Both close on failure as well: a body that throws releases what it
+  * kept, and the exception is rethrown with any release failures
+  * attached as suppressed. A scope is passed explicitly (never found
+  * through a thread-local), and `keep` is thread-safe, so builds that
+  * fan out over a thread pool share one scope.
   */
 object Caches {
 
@@ -101,24 +117,59 @@ object Caches {
     v
   }
 
-  /** Memoized cached frame for (op key, dataset dir), sweep lifetime.
-    * `build` runs at most once per key; its result is cached and
-    * materialized before `cleanup` runs (safe point to unpersist
-    * intermediates); a build that throws runs `cleanup` before
-    * rethrowing. */
-  def memo(key: String, dir: String)(build: => DataFrame)(
-      cleanup: => Unit = ()): DataFrame =
-    sweep.getOrElseUpdate((key, dir), timed(key) {
-      val df = try {
-        val d = build.cache()
-        d.count() // materialize so cleanup can't force a recompute
-        d
-      } catch { case e: Throwable =>
-        try cleanup catch { case c: Throwable => e.addSuppressed(c) }
-        throw e
+  /** The cached intermediates of one build or kernel; see the scope
+    * contract above. */
+  final class Scope private[Caches] () {
+    private var kept = List.empty[DataFrame]
+
+    /** Cache `df`, record it for release when the scope closes, and
+      * return it. */
+    def keep(df: DataFrame): DataFrame = {
+      val c = df.cache()
+      synchronized { kept = c :: kept }
+      c
+    }
+
+    /** True while nothing is kept (nothing was, or the scope closed). */
+    private[graft] def isEmpty: Boolean = synchronized(kept.isEmpty)
+
+    /** Unpersist every kept frame in the order kept, trying each one;
+      * the first failure is rethrown with the later ones suppressed. */
+    private[Caches] def close(): Unit = {
+      val frames = synchronized { val k = kept.reverse; kept = Nil; k }
+      var first: Throwable = null
+      frames.foreach { df =>
+        try df.unpersist() catch { case e: Throwable =>
+          if (first == null) first = e else first.addSuppressed(e)
+        }
       }
-      cleanup
-      df
+      if (first != null) throw first
+    }
+  }
+
+  /** Run `body` with a fresh `Scope` and release what it kept when the
+    * body returns or throws. */
+  def scoped[T](body: Scope => T): T = {
+    val scope = new Scope
+    val v = try body(scope) catch { case e: Throwable =>
+      try scope.close() catch { case c: Throwable => e.addSuppressed(c) }
+      throw e
+    }
+    scope.close()
+    v
+  }
+
+  /** Memoized cached frame for (op key, dataset dir), sweep lifetime.
+    * `build` runs at most once per key; its scope closes after the
+    * result is cached and materialized, so no kept intermediate is
+    * recomputed by a later read of the artifact. */
+  def memo(key: String, dir: String)(build: Scope => DataFrame): DataFrame =
+    sweep.getOrElseUpdate((key, dir), timed(key) {
+      scoped { scope =>
+        val d = build(scope).cache()
+        d.count() // materialize before the scope releases what it read
+        d
+      }
     }).asInstanceOf[DataFrame]
 
   /** Memoized DRIVER-SIDE object for (op key, dataset dir), sweep

@@ -85,7 +85,7 @@ object LinearProbe {
     * prediction (ties → min label). Rows-only: the solve is float;
     * the spec pins exact parity with a local replay. */
   def m16LinearProbe(s: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("m16_probe", dir) {
+    graft.Caches.memo("m16_probe", dir) { _ =>
       import s.implicits._
       val ws = probeWeights(s, dir)
       val emb = Tables.embeddings(s, dir)
@@ -103,7 +103,7 @@ object LinearProbe {
       emb.select($"vec_id", $"label",
           (-best.getField("neg")).cast("int").as("pred"))
         .orderBy($"vec_id")
-    }()
+    }
 
   /** M17: the probe's confusion matrix — (label, pred, n) over the
     * training set, the C×C rollup of m16 (shares its memoized

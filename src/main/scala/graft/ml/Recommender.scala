@@ -63,9 +63,9 @@ object Recommender {
     * materialized at ALS's final storage level, so the cache is
     * released once the fit returns or throws). `implicitPrefs` swaps
     * the loss for Hu/Koren/Volinsky confidence weighting (α = 8). */
-  private def trainAls(s: SparkSession, dir: String, implicitPrefs: Boolean): ALSModel = {
-    val r = ratings(s, dir).cache()
-    try {
+  private def trainAls(s: SparkSession, dir: String, implicitPrefs: Boolean): ALSModel =
+    graft.Caches.scoped { sc =>
+      val r = sc.keep(ratings(s, dir))
       val als = new ALS()
         .setRank(Rank).setMaxIter(Iters).setSeed(Seed)
         .setRegParam(0.1)
@@ -73,8 +73,7 @@ object Recommender {
         .setUserCol("user").setItemCol("item").setRatingCol("rating")
         .setColdStartStrategy("drop")
       (if (implicitPrefs) als.setImplicitPrefs(true).setAlpha(8.0) else als).fit(r)
-    } finally r.unpersist()
-  }
+    }
 
   /** Fit, or reload a previously-persisted factorization if `store`
     * is set and holds one for this dataset — the cross-SESSION half of
@@ -118,15 +117,14 @@ object Recommender {
     * gets its own index. */
   def itemIvf(s: SparkSession, dir: String,
       variant: String = "explicit"): (DataFrame, Array[Array[Double]]) =
-    graft.Caches.artifact(s"item_ivf:$variant", dir) {
+    graft.Caches.artifact(s"item_ivf:$variant", dir)(graft.Caches.scoped { sc =>
       import s.implicits._
       import graft.functions.VectorFunctions.dot
       val model = if (variant == "implicit") fitImplicit(s, dir) else fit(s, dir)
-      val factors = model.itemFactors
+      val factors = sc.keep(model.itemFactors
         .select($"id", transform($"features", _.cast("double")).as("v"))
         .withColumn("nrm", sqrt(dot($"v", $"v")))
-        .withColumn("features", org.apache.spark.ml.functions.array_to_vector($"v"))
-        .cache()
+        .withColumn("features", org.apache.spark.ml.functions.array_to_vector($"v")))
       // a coarse quantizer only needs a reasonable partition of the
       // factor space, not convergence: every probe re-ranks with the
       // exact ALS dot product, and the recall-vs-exact spec guards the
@@ -144,9 +142,8 @@ object Recommender {
       // the index is the only cached copy kept: once it is
       // materialized the factor frame has no reader left
       assigned.count()
-      factors.unpersist()
       (assigned, km.clusterCenters.map(_.toArray))
-    }
+    })
 
   /** Packed inverted lists: each cluster's candidate vectors laid out
     * as ONE flat double array (ids ordered ascending) — the IVF-Flat
@@ -193,9 +190,7 @@ object Recommender {
     * Bench attribution: the build logs to the Caches ledger, so the
     * triggering entry's self time stays honest. */
   private[graft] def m1Slate(s: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("m1_slate", dir) {
-      topkOf(s, scoredCandidates(s, dir))
-    }()
+    graft.Caches.memo("m1_slate", dir)(_ => topkOf(s, scoredCandidates(s, dir)))
 
   /** The shared approximate-serving core of m1/m5: every user's
     * IVF-probed, exactly-re-scored candidate set, one row per
@@ -715,41 +710,48 @@ object Recommender {
     // exact (mod 1), big ones cap at 1/16 of the user square
     val nUsers = intRatings(s, dir).select($"user").distinct().count()
     val SampleMod = math.max(1L, math.min(16L, nUsers / 500L))
-    val sample = m11Contribs(s, dir)
-      .filter(pmod(xxhash64(lit(7), $"user"), lit(SampleMod)) === 0L)
-      .select($"nn").cache()
-    try {
-      val (nnMin, nnMax, nSamp, invSum) = sample
-        .agg(min($"nn"), max($"nn"), count(lit(1)), sum(lit(1.0) / $"nn"))
-        .as[(Double, Double, Long, Double)].head()
-      if (nSamp == 0L) return 1.0 // degenerate corpus: no pairs at all
-      val lo = math.max(nnMin, 1e-12)
-      val hi = math.max(nnMax, lo * (1 + 1e-9))
-      // below nn_min every pair is sampled (p = γ/nn < 1 uniformly), so
-      // E(γ) = γ·Σ(1/nn) exactly — solve that regime in closed form
-      // instead of pinning γ to the smallest norm product (the first
-      // build did, and a budget of total/8 landed 3.7× over)
-      val sEst = invSum * SampleMod
-      val target0 = budgetContribs.toDouble
-      if (target0 <= lo * sEst) return target0 / sEst
-      val K = 33
-      val grid = (0 until K).map(i =>
-        lo * math.pow(hi / lo, i.toDouble / (K - 1)))
-      // one pass: E_hat(γ_k) on the sample for every grid point
-      val sums = grid.map(g =>
-        sum(least(lit(1.0), lit(g) / $"nn")).as(s"e$g"))
-      val row = sample.agg(sums.head, sums.tail: _*).head()
-      val e = (0 until K).map(i => row.getDouble(i) * SampleMod)
-      // (E extrapolates by the sampling mod: user sampling subsamples
-      // the contribution stream unbiasedly — pairs are user-local)
-      val target = budgetContribs.toDouble
-      if (e.head > target) return grid.head // budget below even γ=nnMin
-      if (e.last <= target) return grid.last // budget covers exact m10
-      val k = e.indexWhere(_ > target) // bracket: e(k-1) <= target < e(k)
-      // E is piecewise-linear in γ: interpolate inside the bracket
-      val (g0, g1, e0, e1) = (grid(k - 1), grid(k), e(k - 1), e(k))
-      g0 + (g1 - g0) * ((target - e0) / math.max(e1 - e0, 1e-12))
-    } finally { sample.unpersist(); () }
+    graft.Caches.scoped { sc =>
+      gammaFromSample(sc.keep(m11Contribs(s, dir)
+        .filter(pmod(xxhash64(lit(7), $"user"), lit(SampleMod)) === 0L)
+        .select($"nn")), SampleMod, budgetContribs)
+    }
+  }
+
+  /** m11GammaForBudget's solver over the sampled `nn` stream (one row
+    * per sampled contribution, drawn 1 in `sampleMod` users). */
+  private def gammaFromSample(sample: DataFrame, sampleMod: Long,
+      budgetContribs: Long): Double = {
+    import sample.sparkSession.implicits._
+    val (nnMin, nnMax, nSamp, invSum) = sample
+      .agg(min($"nn"), max($"nn"), count(lit(1)), sum(lit(1.0) / $"nn"))
+      .as[(Double, Double, Long, Double)].head()
+    if (nSamp == 0L) return 1.0 // degenerate corpus: no pairs at all
+    val lo = math.max(nnMin, 1e-12)
+    val hi = math.max(nnMax, lo * (1 + 1e-9))
+    // below nn_min every pair is sampled (p = γ/nn < 1 uniformly), so
+    // E(γ) = γ·Σ(1/nn) exactly — solve that regime in closed form
+    // instead of pinning γ to the smallest norm product (the first
+    // build did, and a budget of total/8 landed 3.7× over)
+    val sEst = invSum * sampleMod
+    val target0 = budgetContribs.toDouble
+    if (target0 <= lo * sEst) return target0 / sEst
+    val K = 33
+    val grid = (0 until K).map(i =>
+      lo * math.pow(hi / lo, i.toDouble / (K - 1)))
+    // one pass: E_hat(γ_k) on the sample for every grid point
+    val sums = grid.map(g =>
+      sum(least(lit(1.0), lit(g) / $"nn")).as(s"e$g"))
+    val row = sample.agg(sums.head, sums.tail: _*).head()
+    val e = (0 until K).map(i => row.getDouble(i) * sampleMod)
+    // (E extrapolates by the sampling mod: user sampling subsamples
+    // the contribution stream unbiasedly — pairs are user-local)
+    val target = budgetContribs.toDouble
+    if (e.head > target) return grid.head // budget below even γ=nnMin
+    if (e.last <= target) return grid.last // budget covers exact m10
+    val k = e.indexWhere(_ > target) // bracket: e(k-1) <= target < e(k)
+    // E is piecewise-linear in γ: interpolate inside the bracket
+    val (g0, g1, e0, e1) = (grid(k - 1), grid(k), e(k - 1), e(k))
+    g0 + (g1 - g0) * ((target - e0) / math.max(e1 - e0, 1e-12))
   }
 
   /** The evaluation heads' rating matrix served off the memoized
@@ -772,7 +774,7 @@ object Recommender {
     * and its norm aggregate — without it the orders⋈lineitem scan-agg
     * plans twice (no static ReuseExchange across the self-join). */
   private[graft] def intRatings(s: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("m10_ratings", dir) {
+    graft.Caches.memo("m10_ratings", dir) { _ =>
       import s.implicits._
       Tables.orders(s, dir).select($"o_orderkey", $"o_custkey")
         .join(Tables.lineitem(s, dir)
@@ -792,5 +794,5 @@ object Recommender {
         // any clustering that contains user).
         .repartition($"user")
         .sortWithinPartitions($"user")
-    }()
+    }
 }

@@ -68,8 +68,8 @@ object Sentiment {
   private def trainStagewise(train: DataFrame): PipelineModel = {
     val Array(tok, sw, tf, idf, lr) = pipeline.getStages
     val featurize = new Pipeline().setStages(Array(tok, sw, tf)).fit(train)
-    val tfFrame = featurize.transform(train).select(col("tf"), col("label")).cache()
-    try {
+    graft.Caches.scoped { sc =>
+      val tfFrame = sc.keep(featurize.transform(train).select(col("tf"), col("label")))
       val idfModel = idf.asInstanceOf[IDF].fit(tfFrame)
       // the summary would pin the session inside every serve closure —
       // see ModelHygiene (a d6-then-m2 session order would crash)
@@ -78,7 +78,7 @@ object Sentiment {
       new Pipeline()
         .setStages(featurize.stages ++ Array(idfModel, lrModel))
         .fit(train.limit(0))
-    } finally tfFrame.unpersist()
+    }
   }
 
   /** Fit the pipeline on the labeled TRAIN fold only (the test fold

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.Caches.Scope
 
 /** Analytic-SQL surface beyond the relational core: explicit grouping
   * sets, the ranking-distribution window family, value-range frames,
@@ -147,7 +148,7 @@ object Analytics {
     * family standardizes on the shape that wins where it matters. */
   private[graft] def copurchasePairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.Caches.memo("copurchase_pairs", dir) {
+    graft.Caches.memo("copurchase_pairs", dir) { _ =>
       val pp = Tables.lineitem(s, dir)
         .select($"l_orderkey", $"l_partkey").distinct()
       pp.as("a").join(pp.as("b"),
@@ -155,7 +156,7 @@ object Analytics {
             $"a.l_partkey" < $"b.l_partkey")
         .groupBy($"a.l_partkey".as("pa"), $"b.l_partkey".as("pb"))
         .agg(count(lit(1)).as("n_orders"))
-    }()
+    }
   }
 
   /** Q43: market-basket co-occurrence — the top co-purchased part
@@ -308,47 +309,8 @@ object Analytics {
       .orderBy($"r_name", $"n_name")
   }
 
-  /** Exact DISTRIBUTED global rank — a partitionBy-less `row_number`
-    * window would plan Exchange SinglePartition over the whole frame
-    * (the trap p5/d2 exist to avoid). Instead: range-partition on the
-    * sort key (ascending pids = ascending ranges), rank within each
-    * partition, and add per-partition exclusive offsets — a
-    * ≤ numShufflePartitions bounded artifact (the q45 broadcast-total
-    * pattern). Returns the ranked frame and the total row count (free
-    * from the same counts). */
-  /** The ranked frame is CACHED (caller unpersists via `scaffolding`
-    * after materializing downstream): the offsets branch and the main
-    * branch must observe the SAME physical partitioning — uncached,
-    * each read re-executes the range shuffle and AQE may coalesce the
-    * two executions differently, silently skewing every offset (found
-    * by the q49 oracle: 28 of 1500 tiles off by one). */
-  private[graft] def withGlobalRank(df: DataFrame, out: String,
-      scaffolding: scala.collection.mutable.ListBuffer[DataFrame],
-      sort: org.apache.spark.sql.Column*): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    val n = s.sessionState.conf.numShufflePartitions
-    val local = df.repartitionByRange(n, sort: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__lr",
-        row_number().over(Window.partitionBy($"__pid").orderBy(sort: _*)))
-      .cache()
-    scaffolding += local
-    // exclusive per-partition offsets, in-plan: ≤ numShufflePartitions
-    // rows through one bounded single-partition window (the q45
-    // bounded-artifact pattern), broadcast back onto the ranked rows
-    val offs = local.groupBy($"__pid").agg(count(lit(1)).as("__c"))
-      .withColumn("__off", coalesce(sum($"__c").over(
-        Window.orderBy($"__pid").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select($"__pid", $"__off")
-    local.join(broadcast(offs), "__pid")
-      .withColumn(out, $"__off" + $"__lr")
-      .drop("__pid", "__lr", "__off")
-  }
-
   /** Exact PER-GROUP rank under a total `sort` order within each
-    * group — withGlobalRank's partitioned sibling, for "rank within
+    * group — withGlobalRunningSum's partitioned sibling, for "rank within
     * source" shapes where a plain
     * `row_number().over(partitionBy(group))` funnels each group's
     * ENTIRE population through one task (the p16/p18 100 TB killer:
@@ -370,18 +332,16 @@ object Analytics {
     * NOT funnel the data through one task; this helper exists for the
     * OPPOSITE regime (few groups, data-sized populations). */
   private[graft] def withGroupRank(df: DataFrame, group: String,
-      out: String,
-      scaffolding: scala.collection.mutable.ListBuffer[DataFrame],
+      out: String, scope: Scope,
       sort: org.apache.spark.sql.Column*): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
     val n = s.sessionState.conf.numShufflePartitions
-    val local = df.repartitionByRange(n, (col(group) +: sort): _*)
+    // kept for the withGlobalRunningSum reason: one shuffle, both branches
+    val local = scope.keep(df.repartitionByRange(n, (col(group) +: sort): _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__lr", row_number().over(
-        Window.partitionBy($"__pid", col(group)).orderBy(sort: _*)))
-      .cache()
-    scaffolding += local
+        Window.partitionBy($"__pid", col(group)).orderBy(sort: _*))))
     val offs = local.groupBy($"__pid", col(group))
       .agg(count(lit(1)).as("__c"))
       .withColumn("__off", coalesce(sum($"__c").over(
@@ -393,26 +353,33 @@ object Analytics {
       .drop("__pid", "__lr", "__off")
   }
 
-  /** Exact global RUNNING SUM of `value` under a total `sort` order —
-    * withGlobalRank's additive sibling (rank = running sum of 1):
-    * range-partition on the sort key, per-partition prefix sums, then
-    * one bounded window over ≤ numShufflePartitions partition TOTALS
-    * broadcast back as exclusive offsets. The global-order primitive
-    * behind sweep-line analytics (q59) that a naive
-    * `Window.orderBy(...)` would funnel through one task. */
+  /** Exact global RUNNING SUM of `value` under a total `sort` order,
+    * as a long column `out`; the exact global rank is the running sum
+    * of `lit(1L)` (p9, q68). A partitionBy-less `Window.orderBy(...)`
+    * would plan Exchange SinglePartition over the whole frame (the
+    * trap p5/d2 exist to avoid). Instead: range-partition on the sort
+    * key (ascending pids = ascending ranges), per-partition prefix
+    * sums, then one bounded window over ≤ numShufflePartitions
+    * partition TOTALS broadcast back as exclusive offsets (the q45
+    * broadcast-total pattern). The global-order primitive behind
+    * sweep-line analytics (q59).
+    *
+    * The range-partitioned frame is kept in `scope`: the offsets
+    * branch and the main branch must observe the SAME physical
+    * partitioning — uncached, each read re-executes the range shuffle
+    * and AQE may coalesce the two executions differently, silently
+    * skewing every offset (found by the q49 oracle: 28 of 1500 tiles
+    * off by one). */
   private[graft] def withGlobalRunningSum(df: DataFrame,
-      value: org.apache.spark.sql.Column, out: String,
-      scaffolding: scala.collection.mutable.ListBuffer[DataFrame],
+      value: org.apache.spark.sql.Column, out: String, scope: Scope,
       sort: org.apache.spark.sql.Column*): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
     val n = s.sessionState.conf.numShufflePartitions
-    val local = df.repartitionByRange(n, sort: _*)
+    val local = scope.keep(df.repartitionByRange(n, sort: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__lrs", sum(value).over(Window.partitionBy($"__pid")
-        .orderBy(sort: _*).rowsBetween(Window.unboundedPreceding, 0)))
-      .cache() // same caveat as withGlobalRank: both branches must see ONE shuffle
-    scaffolding += local
+        .orderBy(sort: _*).rowsBetween(Window.unboundedPreceding, 0))))
     val offs = local.groupBy($"__pid").agg(sum(value).as("__c"))
       .withColumn("__off", coalesce(sum($"__c").over(
         Window.orderBy($"__pid").rowsBetween(Window.unboundedPreceding, -1)),
@@ -430,7 +397,7 @@ object Analytics {
     * broadcast join-backs for q49) overpays by the data size. Here
     * only the NARROW sort projection range-shuffles once; the
     * per-partition counts are the same ≤ numShufflePartitions bounded
-    * artifact withGlobalRank uses, each boundary rank resolves to a
+    * artifact withGlobalRunningSum uses, each boundary rank resolves to a
     * (partition, local index) driver-side, and ONE partition-local
     * row_number over just the target partitions extracts the rows.
     * Tile assignment downstream is a broadcast comparison against the
@@ -439,8 +406,7 @@ object Analytics {
     * c_j = j·floor(N/k) + min(j, N mod k); duplicates when N < k keep
     * their multiplicity). Returns the boundary rows in `ranks` order,
     * with the columns of `df`; k = 1 has no boundaries. */
-  private[graft] def ntileBoundaries(df: DataFrame, k: Int,
-      scaffolding: scala.collection.mutable.ListBuffer[DataFrame],
+  private[graft] def ntileBoundaries(df: DataFrame, k: Int, scope: Scope,
       sort: org.apache.spark.sql.Column*): Seq[org.apache.spark.sql.Row] = {
     require(k >= 1, s"ntileBoundaries: k must be >= 1, got $k")
     if (k == 1) return Seq.empty
@@ -449,12 +415,10 @@ object Analytics {
     val outCols = df.columns
     val n = s.sessionState.conf.numShufflePartitions
     // counts and extraction must observe ONE physical partitioning —
-    // the withGlobalRank cache caveat
-    val local = df.repartitionByRange(n, sort: _*)
-      .withColumn("__pid", spark_partition_id())
-      .cache()
-    // callers may run several axes' selections concurrently (q49)
-    scaffolding.synchronized { scaffolding += local }
+    // the withGlobalRunningSum cache caveat; callers may run several
+    // axes' selections concurrently on one scope (q49)
+    val local = scope.keep(df.repartitionByRange(n, sort: _*)
+      .withColumn("__pid", spark_partition_id()))
     val cnts = local.groupBy($"__pid").agg(count(lit(1)).as("__c"))
       .orderBy($"__pid").as[(Int, Long)].collect()
     val total = cnts.map(_._2).sum
@@ -524,19 +488,16 @@ object Analytics {
     * ntile (tile = 1 + #boundaries strictly before the row). */
   def q49Rfm(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("q49_rfm", dir) {
+    graft.Caches.memo("q49_rfm", dir) { sc =>
       val per = Tables.orders(s, dir)
         .groupBy($"o_custkey")
         .agg(max($"o_orderdate").as("last_dt"),
           count(lit(1)).as("frequency"),
           round(sum($"o_totalprice"), 2).as("monetary"))
       val maxDt = Tables.orders(s, dir).agg(max($"o_orderdate").as("corpus_max"))
-      val rfm = per.join(broadcast(maxDt))
+      val rfm = sc.keep(per.join(broadcast(maxDt))
         .select($"o_custkey", $"frequency", $"monetary",
-          datediff($"corpus_max", $"last_dt").as("recency_days"))
-        .cache()
-      scaffolding += rfm
+          datediff($"corpus_max", $"last_dt").as("recency_days")))
       rfm.count() // warm the cache once before the concurrent scans
       // the three axis selections are independent — submit them from
       // three threads (guide §2.6: job submission is thread-local) so
@@ -549,18 +510,18 @@ object Analytics {
           scala.concurrent.Future.sequence(Seq(
             scala.concurrent.Future(ntileBoundaries(
               rfm.select($"recency_days", $"o_custkey"), 4,
-              scaffolding, $"recency_days", $"o_custkey")),
+              sc, $"recency_days", $"o_custkey")),
             scala.concurrent.Future(ntileBoundaries(
               rfm.select($"frequency", $"o_custkey"), 4,
-              scaffolding, $"frequency".desc, $"o_custkey")),
+              sc, $"frequency".desc, $"o_custkey")),
             scala.concurrent.Future(ntileBoundaries(
               rfm.select($"monetary", $"o_custkey"), 4,
-              scaffolding, $"monetary".desc, $"o_custkey")))),
+              sc, $"monetary".desc, $"o_custkey")))),
           scala.concurrent.duration.Duration.Inf)
         finally {
-          // stop and wait out every axis before the scaffolding
-          // unpersist: after one axis fails, another still running
-          // would cache its range-partitioned frame after the cleanup
+          // stop and wait out every axis before the scope releases:
+          // after one axis fails, another still running would keep its
+          // range-partitioned frame after the release
           pool.shutdownNow()
           pool.awaitTermination(Long.MaxValue,
             java.util.concurrent.TimeUnit.NANOSECONDS)
@@ -579,7 +540,7 @@ object Analytics {
           tile($"frequency", desc = true, fB),
           tile($"monetary", desc = true, mB)).as("rfm_segment"))
         .orderBy($"o_custkey")
-    } { scaffolding.foreach(_.unpersist()) }
+    }
   }
 
   /** Q42: cohort retention — users bucketed by first-seen epoch-week,
@@ -637,16 +598,13 @@ object Analytics {
       minSupport: Long = 3L): DataFrame = {
     import s.implicits._
     import graft.functions.VectorFunctions.q4
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("q87_seq_rules", dir) {
-      val cp = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
+    graft.Caches.memo("q87_seq_rules", dir) { sc =>
+      val cp = sc.keep(Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
         .join(Tables.orders(s, dir)
           .select($"o_orderkey", $"o_custkey", $"o_orderdate"),
           $"l_orderkey" === $"o_orderkey")
         .groupBy($"o_custkey".as("c"), $"l_partkey".as("p"))
-        .agg(min($"o_orderdate").as("d"))
-        .cache()
-      scaffolding += cp
+        .agg(min($"o_orderdate").as("d")))
       // the self-join must SHUFFLE on the customer key: cp is
       // customer×part-scale (billions of rows at 100 TB) and the
       // cache's tiny estimated stats otherwise flip the planner to
@@ -677,7 +635,7 @@ object Analytics {
             ($"n_ante" * $"n_cons")).as("slift"))
         .orderBy($"n_seq".desc, $"confidence".desc, $"ante", $"cons")
         .limit(25)
-    } { scaffolding.foreach(_.unpersist()) }
+    }
   }
 
   def q50AssocRules(s: SparkSession, dir: String): DataFrame = {
@@ -888,8 +846,7 @@ object Analytics {
     * sweep-line contract. */
   def q59Concurrency(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("q59_concurrency", dir) {
+    graft.Caches.memo("q59_concurrency", dir) { sc =>
       val byUser = Window.partitionBy($"user_id").orderBy($"ms", $"event_id")
       val sessions = Tables.eventsWithMs(s, dir)
         .select($"user_id", $"event_id", $"ms")
@@ -906,12 +863,12 @@ object Analytics {
         .unionAll(sessions.select($"end_ms".as("ms"), lit(0L).as("st"), lit(1L).as("en")))
         .groupBy($"ms")
         .agg(sum($"st").as("n_start"), sum($"en").as("n_end"))
-      withGlobalRunningSum(endpoints, $"n_start" - $"n_end", "net", scaffolding, $"ms")
+      withGlobalRunningSum(endpoints, $"n_start" - $"n_end", "net", sc, $"ms")
         .groupBy(expr("ms div 86400000L").as("day"))
         .agg(max($"net" + $"n_end").as("peak_concurrency"),
              sum($"n_start").as("n_sessions_started"))
         .orderBy($"day")
-    } { scaffolding.foreach(_.unpersist()) }
+    }
   }
 
   /** Q60: autocorrelation of the daily-revenue series at lags 1–7 —
@@ -1409,7 +1366,7 @@ object Analytics {
     * integer expression, no area approximation.
     *
     * Exactness: spend is integer cents; the global rank is the
-    * DISTRIBUTED `withGlobalRank` (never a single-partition window —
+    * DISTRIBUTED `withGlobalRunningSum` of 1 (never a single-partition window —
     * the q49 pattern, OOM-proof at a billion customers); decile
     * boundaries are `tileOf` (bit-exact SQL ntile); and every ratio is
     * a decimal(38,0) integer floor-division — Σ r·x reaches ~10²⁵ at
@@ -1419,12 +1376,11 @@ object Analytics {
     * orders, one rank exchange, one 10-row artifact. */
   def q68SpendConcentration(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("q68_gini", dir) {
+    graft.Caches.memo("q68_gini", dir) { sc =>
       val spend = Tables.orders(s, dir)
         .groupBy($"o_custkey")
         .agg(sum(expr("cast(floor(o_totalprice * 100) as bigint)")).as("cents"))
-      val ranked = withGlobalRank(spend, "r", scaffolding, $"cents", $"o_custkey")
+      val ranked = withGlobalRunningSum(spend, lit(1L), "r", sc, $"cents", $"o_custkey")
       val tot = ranked.agg(
         count(lit(1)).as("__n"),
         sum($"cents").cast("decimal(38,0)").as("__t"),
@@ -1444,7 +1400,7 @@ object Analytics {
           (expr("((2 * __s - (__n + 1) * __t) * 10000) div " +
             "(cast(__n as decimal(38,0)) * __t)") / 10000.0).as("gini"))
         .orderBy($"decile")
-    } { scaffolding.foreach(_.unpersist()) }
+    }
   }
 
   // ----------------------------------------------------------------

@@ -79,7 +79,7 @@ object Dedup {
     * ledger-attributed like every artifact. */
   private[graft] def repMembers(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.Caches.memo("dedup_members", dir) {
+    graft.Caches.memo("dedup_members", dir) { _ =>
       // duplicate compression (same move as d3/d4): byte-identical RAW
       // text ⟹ identical shingle sets, so the pair joins run over one
       // representative per identical-text group; intra-group pairs
@@ -93,7 +93,7 @@ object Dedup {
         .withColumn("rep_id",
           min($"doc_id").over(org.apache.spark.sql.expressions.Window.partitionBy($"raw_fp")))
         .select($"doc_id", $"rep_id", $"n_tok")
-    }()
+    }
   }
 
   /** The representatives' sorted shingle-id arrays (doc_id, sh, n_sh),
@@ -101,20 +101,17 @@ object Dedup {
     * Jaccard, d8's asymmetric containment) verify against. */
   private[graft] def repArrays(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("dedup_reparrays", dir) {
+    graft.Caches.memo("dedup_reparrays", dir) { sc =>
       val members = repMembers(s, dir)
       val reps = Tables.documents(s, dir)
         .join(members.filter($"doc_id" === $"rep_id").select($"doc_id"), "doc_id")
-      val (docs, scaffold) = shingleArraysOf(reps)
-      scaffolding ++= scaffold
-      docs
-    } { scaffolding.foreach(_.unpersist()) }
+      shingleArraysOf(reps, sc)
+    }
   }
 
   private[graft] def d2PairTable(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.Caches.memo("d2_pairs", dir) {
+    graft.Caches.memo("d2_pairs", dir) { _ =>
       // docs with no shingles (<3 tokens) never pair, so they are
       // excluded from the intra expansion too. Output identical (the
       // oracle checks it); candidate cost follows distinct content.
@@ -131,7 +128,7 @@ object Dedup {
         .select(least($"da", $"db").as("id_a"),
           greatest($"da", $"db").as("id_b"), $"jaccard")
       intra.unionAll(inter)
-    }()
+    }
   }
 
   val ContainmentThreshold = 0.8 // as n_both*10 >= n_sh(a)*8, exact ints
@@ -173,7 +170,7 @@ object Dedup {
     * are C=1.0 with n_both = the group's shingle count). */
   private[graft] def d8PairTable(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.Caches.memo("d8_pairs", dir) {
+    graft.Caches.memo("d8_pairs", dir) { _ =>
       // round 15: members + rep arrays come from the shared memos d2
       // also serves from (identical derivations — see repMembers)
       val members = repMembers(s, dir)
@@ -191,7 +188,7 @@ object Dedup {
         .join(members.select($"doc_id".as("db"), $"rep_id".as("rb")), $"id_b" === $"rb")
         .select($"da".as("id_a"), $"db".as("id_b"), $"n_both", $"na")
       intra.unionAll(inter)
-    }()
+    }
   }
 
   /** The containment prefix join + verify over a pre-built
@@ -229,36 +226,32 @@ object Dedup {
   }
 
   /** The shared shingle-array scaffold: per-doc SORTED dictionary-id
-    * arrays over a (doc_id, text, …) frame — the build d2 and d8 both
-    * verify against. Returns (docs arrays — cached, NOT in the
-    * scaffolding list, the caller owns its lifetime; upstream
-    * scaffolding caches). */
-  private[graft] def shingleArraysOf(docsDf: DataFrame)
-      : (DataFrame, Seq[DataFrame]) = {
+    * arrays (doc_id, sh, n_sh) over a (doc_id, text, …) frame — the
+    * build d2 and d8 both verify against. The shingle index and the
+    * dictionary are kept in `scope`; the returned arrays frame is
+    * lazy, and the caller caches it. */
+  private[graft] def shingleArraysOf(docsDf: DataFrame,
+      scope: graft.Caches.Scope): DataFrame = {
     val s = docsDf.sparkSession
     import s.implicits._
-    val sh = shingleIndexOf(docsDf).cache()
+    val sh = scope.keep(shingleIndexOf(docsDf))
     val freq = sh.groupBy($"shingle").agg(count(lit(1)).as("df"))
-    val dict = freq
+    val dict = scope.keep(freq
       .repartitionByRange(s.sessionState.conf.numShufflePartitions, $"df", $"shingle")
       .sortWithinPartitions($"df", $"shingle")
-      .select($"shingle", monotonically_increasing_id().as("sid"))
-      .cache()
-    val docs = sh.join(dict, "shingle")
+      .select($"shingle", monotonically_increasing_id().as("sid")))
+    sh.join(dict, "shingle")
       .groupBy($"doc_id")
       .agg(array_sort(collect_list($"sid")).as("sh"))
       .select($"doc_id", $"sh", size($"sh").as("n_sh"))
-      .cache()
-    (docs, Seq(sh, dict))
   }
 
-  /** The PPJoin core over an arbitrary (doc_id, text, …) frame.
-    * Returns (pairs, scaffolding caches for the caller to unpersist
-    * once the result is materialized). */
-  private[graft] def ngramJaccardPairs(docsDf: DataFrame): (DataFrame, Seq[DataFrame]) = {
-    val (docs, scaffold) = shingleArraysOf(docsDf)
-    (jaccardFromArrays(docs), scaffold :+ docs)
-  }
+  /** The PPJoin core over an arbitrary (doc_id, text, …) frame. Its
+    * cached intermediates are kept in `scope`; close it once the
+    * result is materialized. */
+  private[graft] def ngramJaccardPairs(docsDf: DataFrame,
+      scope: graft.Caches.Scope): DataFrame =
+    jaccardFromArrays(scope.keep(shingleArraysOf(docsDf, scope)))
 
   /** The PPJoin prefix join + verify over a pre-built (doc_id, sh,
     * n_sh) arrays frame.
@@ -331,7 +324,7 @@ object Dedup {
     // round 15: the survivor table is an artifact — p18/p20's curation
     // chains re-ran the whole quality+dedup composition per sweep on
     // top of the entry's own run. One build, ledger-attributed.
-    graft.Caches.memo("p1_clean", dir) {
+    graft.Caches.memo("p1_clean", dir) { _ =>
       val scored = TextAnalysis.t2QualityScore(s, dir)
       val dupLosers = d1ExactDedup(s, dir)
         .filter($"n_copies" > 1)
@@ -346,8 +339,7 @@ object Dedup {
         .join(dupLosers, Seq("doc_id"), "left_anti")
         .join(nearDupLosers, Seq("doc_id"), "left_anti")
         .select($"doc_id", $"n_tokens", $"quality")
-    }()
-      .orderBy($"doc_id")
+    }.orderBy($"doc_id")
   }
 
   /** P3: benchmark decontamination — flag training docs sharing any
@@ -373,11 +365,11 @@ object Dedup {
     * dying shingles at the scan, and its spec audits that shape. */
   private[graft] def sh8Of(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.Caches.memo("dedup_sh8", dir) {
+    graft.Caches.memo("dedup_sh8", dir) { _ =>
       Tables.documents(s, dir)
         .select($"doc_id", tokens($"text").as("w"))
         .select($"doc_id", explode(shinglesFromTokens($"w", 8)).as("sh8"))
-    }()
+    }
   }
 
   def p3Decontaminate(s: SparkSession, dir: String): DataFrame = {
@@ -477,25 +469,22 @@ object Dedup {
     * shingle: the filter is one binary blob (~1 MB at 1% fpp for 1M
     * items), a broadcast artifact like a dimension table. */
   def d9BloomDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
     // memoized like the other dedup artifacts, with the bench-side
-    // cache routed through the cleanup hook (it used to leak: repeated
+    // cache kept in the build's scope (it used to leak: repeated
     // bench sweeps accumulated cached partitions Caches.clear never saw)
-    graft.Caches.memo("d9_decontaminate", dir)(d9Build(s, dir, scaffolding))(
-      scaffolding.foreach(_.unpersist()))
+    graft.Caches.memo("d9_decontaminate", dir)(d9Build(s, dir, _))
   }
 
   /** The uncached d9 plan (the spec audits the filter-below-join shape
     * here — the memoized public entry serves an InMemoryRelation). */
   private[graft] def d9Build(s: SparkSession, dir: String,
-      scaffolding: scala.collection.mutable.ListBuffer[DataFrame]): DataFrame = {
+      scope: graft.Caches.Scope): DataFrame = {
     import s.implicits._
     val sh = Tables.documents(s, dir)
       .select($"doc_id", tokens($"text").as("w"))
       .select($"doc_id", explode(shinglesFromTokens($"w", 8)).as("sh8"))
-    val bench = sh.filter($"doc_id" % DecontamMod === 0).select($"sh8").distinct()
-      .cache()
-    scaffolding += bench
+    val bench = scope.keep(
+      sh.filter($"doc_id" % DecontamMod === 0).select($"sh8").distinct())
     // capacity must TRACK the benchmark (an undersized filter's fpp
     // explodes and it prunes nothing — measured at the 20× probe with
     // a fixed 100k: slower than no filter); 10 bits/item ≈ 1% fpp.
@@ -537,17 +526,13 @@ object Dedup {
     * same checkpointed frame — no extra join or job per round. */
   def d6DupGroups(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("d6_labels", dir) {
+    graft.Caches.memo("d6_labels", dir) { sc =>
       // the pair table comes memoized+cached from d2 (the union's two
       // branches would otherwise each recompute the candidate join)
       val pairs = d2PairTable(s, dir).select($"id_a", $"id_b")
-      val edges = pairs.union(pairs.select($"id_b", $"id_a"))
-        .toDF("src", "dst").cache()
-      scaffolding += edges
-      connectedComponents(s, edges)
-    } { scaffolding.foreach(_.unpersist()) }
-      .orderBy($"doc_id")
+      connectedComponents(s,
+        sc.keep(pairs.union(pairs.select($"id_b", $"id_a")).toDF("src", "dst")))
+    }.orderBy($"doc_id")
   }
 
   /** Pointer-jumping connected components over a BIDIRECTIONAL edge
@@ -592,7 +577,7 @@ object Dedup {
       var changed = 1L
       var iter = 0
       val maxIters = 50
-      while (changed > 0 && iter < maxIters) {
+      while (changed > 0 && iter < maxIters) graft.Caches.scoped { sc =>
         val fromNbr = edges
           .join(labels.select($"doc_id".as("dst"), $"group_id"), "dst")
           .select($"src".as("doc_id"), lit(null).cast("long").as("old_gid"),
@@ -600,12 +585,12 @@ object Dedup {
         // neighbor-min round, carrying each node's previous label
         // (every doc_id has exactly one `labels` row, so max(old_gid)
         // recovers it through the union's nulls)
-        val prop = labels
+        // kept: referenced twice by the compression self-join
+        val prop = sc.keep(labels
           .select($"doc_id", $"group_id".as("old_gid"), $"group_id")
           .union(fromNbr)
           .groupBy($"doc_id")
-          .agg(max($"old_gid").as("old_gid"), min($"group_id").as("group_id"))
-          .cache() // referenced twice by the compression self-join
+          .agg(max($"old_gid").as("old_gid"), min($"group_id").as("group_id")))
         // pointer jumping: a node's label is itself a node in the same
         // component (labels only ever hold reachable ids), so adopting
         // label[label[u]] is sound and halves the remaining depth.
@@ -623,7 +608,6 @@ object Dedup {
           .observe(obs, sum(when($"group_id" =!= $"old_gid", 1L).otherwise(0L)).as("changed"))
           .localCheckpoint(true)
         changed = Option(obs.get("changed")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        prop.unpersist()
         labels = next.select($"doc_id", $"group_id")
         iter += 1
       }
@@ -653,19 +637,16 @@ object Dedup {
     * no new exchange grain. */
   def p10NearDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("p10_keep", dir) {
+    graft.Caches.memo("p10_keep", dir) { sc =>
       val pairs = d3MinhashLsh(s, dir).select($"id_a", $"id_b")
-      val edges = pairs.union(pairs.select($"id_b", $"id_a"))
-        .toDF("src", "dst").cache()
-      scaffolding += edges
+      val edges = sc.keep(pairs.union(pairs.select($"id_b", $"id_a"))
+        .toDF("src", "dst"))
       val labels = connectedComponents(s, edges)
       Tables.documents(s, dir)
         .join(labels.filter($"doc_id" =!= $"group_id").select($"doc_id"),
           Seq("doc_id"), "left_anti")
         .select($"doc_id", $"lang", $"n_chars")
-    } { scaffolding.foreach(_.unpersist()) }
-      .orderBy($"doc_id")
+    }.orderBy($"doc_id")
   }
 
   /** P10-EXACT: the SAME keep-one-representative stage driven by the
@@ -826,18 +807,15 @@ object Dedup {
     * distinct content, not corpus size. */
   def d3MinhashLsh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("d3_pairs", dir) {
-      // cached: the joins below would recompute the signature
+    graft.Caches.memo("d3_pairs", dir) { sc =>
+      // kept: the joins below would recompute the signature
       // aggregation (the expensive part) for every use
-      val sigs = minhashSignatures(s, dir).cache()
-      scaffolding += sigs
+      val sigs = sc.keep(minhashSignatures(s, dir))
       val intra = sigs.as("x").join(sigs.as("y"),
           $"x.sig" === $"y.sig" && $"x.doc_id" < $"y.doc_id")
         .select($"x.doc_id".as("id_a"), $"y.doc_id".as("id_b"),
           lit(1.0).as("est_jaccard"))
-      val distinctSigs = sigs.select($"sig").distinct().cache()
-      scaffolding += distinctSigs
+      val distinctSigs = sc.keep(sigs.select($"sig").distinct())
       // shared band-explode with d11 (bandsOf) — one place owns the
       // NumBands/band-hash recipe so the two keys can't drift apart
       val bands = bandsOf(distinctSigs, "sig")
@@ -855,8 +833,7 @@ object Dedup {
         .select(least($"da", $"db").as("id_a"),
           greatest($"da", $"db").as("id_b"), $"est_jaccard")
       intra.unionAll(inter)
-    } { scaffolding.foreach(_.unpersist()) }
-      .orderBy($"id_a", $"id_b")
+    }.orderBy($"id_a", $"id_b")
   }
 
   // ---- incremental dedup against a prebuilt index ---------------------
@@ -960,15 +937,12 @@ object Dedup {
     * data volume prices in at zero per increment. */
   def d11IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("d11_pairs", dir) {
+    graft.Caches.memo("d11_pairs", dir) { sc =>
       val (docIdx, bandIdx) = d11Index(s, dir)
-      val newIdx = incSigFrame(
-        Tables.documents(s, dir).filter($"doc_id" % 2 === 1)).cache()
-      scaffolding += newIdx
+      val newIdx = sc.keep(incSigFrame(
+        Tables.documents(s, dir).filter($"doc_id" % 2 === 1)))
       d11Match(newIdx, docIdx, bandIdx)
-    } { scaffolding.foreach(_.unpersist()) }
-      .orderBy($"new_id", $"old_id")
+    }.orderBy($"new_id", $"old_id")
   }
 
   /** The d11 query path over an arbitrary batch of NEW signatures —
@@ -1040,18 +1014,15 @@ object Dedup {
     * when 100 TB is one-third exact copies. */
   def d4Simhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("d4_pairs", dir) {
-      val sh = simhashes(s, dir).cache()
-      scaffolding += sh
+    graft.Caches.memo("d4_pairs", dir) { sc =>
+      val sh = sc.keep(simhashes(s, dir))
       // (a) doc pairs sharing a hash: hamming 0 by definition
       val intra = sh.as("x").join(sh.as("y"),
           $"x.simhash" === $"y.simhash" && $"x.doc_id" < $"y.doc_id")
         .select($"x.doc_id".as("id_a"), $"y.doc_id".as("id_b"),
           lit(0).as("hamming"))
       // (b) pigeonhole over DISTINCT hashes, then expand to doc pairs
-      val distinctH = sh.select($"simhash").distinct().cache()
-      scaffolding += distinctH
+      val distinctH = sc.keep(sh.select($"simhash").distinct())
       val chunks = distinctH.select($"simhash",
         explode(array((0 until 4).map { c =>
           struct(lit(c).as("c"),
@@ -1070,8 +1041,7 @@ object Dedup {
         .select(least($"da", $"db").as("id_a"),
           greatest($"da", $"db").as("id_b"), $"hamming")
       intra.unionAll(inter)
-    } { scaffolding.foreach(_.unpersist()) }
-      .orderBy($"id_a", $"id_b")
+    }.orderBy($"id_a", $"id_b")
   }
 
   /** Span shingle width for `d7SubstringSpans` — 16 tokens, in the
@@ -1118,12 +1088,12 @@ object Dedup {
     * pair-table pattern: a span table is a dataset artifact, not a
     * per-query computation — p7 applies it right after d7 reports it). */
   private def d7SpanTable(s: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("d7_spans", dir) {
+    graft.Caches.memo("d7_spans", dir) { _ =>
       import s.implicits._
       val sh = positionalShingles(s, dir)
       mergeSpans(s, sh.join(repeatedShingles(s, dir)
         .select($"h1", $"h2"), Seq("h1", "h2")))
-    }()
+    }
 
   /** Position-packing factor: (doc_id, pos) rides aggregations as the
     * single long `doc_id * PosPack + pos`, whose min IS the
@@ -1141,7 +1111,7 @@ object Dedup {
     * (which need the repeat set) and p7_keep_first (which also reads
     * the first occurrence). */
   private def repeatedShingles(s: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("d7_rep_shingles", dir) {
+    graft.Caches.memo("d7_rep_shingles", dir) { _ =>
       import s.implicits._
       positionalShingles(s, dir)
         .groupBy($"h1", $"h2")
@@ -1149,7 +1119,7 @@ object Dedup {
           min($"doc_id" * PosPack + $"pos").as("first_packed"))
         .filter($"c" >= 2)
         .select($"h1", $"h2", $"first_packed")
-    }()
+    }
 
   /** (doc_id, pos, h1, h2) for every `SpanShingle`-gram occurrence —
     * the shared front end of the d7/p7 span family (hash-pair keyed
@@ -1159,7 +1129,7 @@ object Dedup {
     * side — three passes over the corpus' heaviest derived frame; the
     * cached form is 4 fixed-width columns (32 B/row). */
   private def positionalShingles(s: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("d7_pos_shingles", dir)(positionalShinglesUncached(s, dir))()
+    graft.Caches.memo("d7_pos_shingles", dir)(_ => positionalShinglesUncached(s, dir))
 
   private def positionalShinglesUncached(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

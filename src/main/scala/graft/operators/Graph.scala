@@ -88,11 +88,11 @@ object Graph {
     * billion-edge graph runs the same plan wider. Dangling nodes cannot
     * exist (edges are symmetric, so every node has out-degree ≥ 1). */
   private[graft] def pagerank(weighted: DataFrame, iters: Int,
-      seed: Option[Long]): DataFrame = {
+      seed: Option[Long]): DataFrame = graft.Caches.scoped { sc =>
     val s = weighted.sparkSession
     import s.implicits._
-    val edges = weighted.select($"src", $"dst", $"w").cache()
-    val wdeg = edges.groupBy($"src").agg(sum($"w").as("wd")).cache()
+    val edges = sc.keep(weighted.select($"src", $"dst", $"w"))
+    val wdeg = sc.keep(edges.groupBy($"src").agg(sum($"w").as("wd")))
     def pinned(node: Column, mass: Long): Column =
       seed.fold(lit(mass))(sd => when(node === sd, lit(mass)).otherwise(lit(0L)))
     var ranks = wdeg.select($"src".as("node"), pinned($"src", Scale).as("rank"))
@@ -110,7 +110,6 @@ object Graph {
         .localCheckpoint(true)
     }
     }
-    edges.unpersist(); wdeg.unpersist()
     ranks
   }
 
@@ -225,18 +224,15 @@ object Graph {
     * candidate-complete run is bit-identical to the exact path. */
   def q62LinkLsh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("q62_lsh_top", dir) {
+    graft.Caches.memo("q62_lsh_top", dir) { sc =>
       val e = copurchaseHalf(s, dir).select($"pa", $"pb")
       val sym = copurchaseEdges(s, dir).select($"src".as("v"), $"dst".as("nb"))
       // per-node neighbor-set signature + sorted adjacency array; both
       // artifacts are node-count-sized and feed several joins below
-      val sigs = sym
+      val sigs = sc.keep(sym
         .select($"v", pmod(xxhash64($"nb"), lit(2147483647L)).as("x"))
         .groupBy($"v")
-        .agg(call_function("minhash_agg", $"x").as("sig"))
-        .cache()
-      scaffolding += sigs
+        .agg(call_function("minhash_agg", $"x").as("sig")))
       // banding SOLVED, not hand-tuned (Dedup.lshConfig): target
       // J = 0.5 (the measured top-50 regime floor at every SF),
       // recall floor 0.95 on the S-curve, background J estimated
@@ -245,10 +241,8 @@ object Graph {
       // the similarity regime moves
       val (bandsN, rpb) = Dedup.lshConfig(Dedup.NumHashes, 0.5, 0.95,
         Dedup.estimateBackgroundJaccard(sigs))
-      val adj = sym.groupBy($"v")
-        .agg(array_sort(collect_list($"nb")).as("nbrs"))
-        .cache()
-      scaffolding += adj
+      val adj = sc.keep(sym.groupBy($"v")
+        .agg(array_sort(collect_list($"nb")).as("nbrs")))
       val distinctSigs = sigs.select($"sig").distinct()
       val bands = distinctSigs.select($"sig",
         explode(array((0 until bandsN).map { j =>
@@ -282,7 +276,7 @@ object Graph {
             .as("jaccard"))
         .orderBy($"jaccard".desc, $"a", $"b")
         .limit(50)
-    } { scaffolding.foreach(_.unpersist()) }
+    }
   }
 
   def q54Triangles(s: SparkSession, dir: String): DataFrame = {
@@ -393,18 +387,15 @@ object Graph {
     * over the basket pair graph. */
   def q73PartFamilies(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("q73_families", dir) {
-      val edges = copurchaseEdges(s, dir).cache()
-      scaffolding += edges
+    graft.Caches.memo("q73_families", dir) { sc =>
+      val edges = sc.keep(copurchaseEdges(s, dir))
       val labels = Dedup.connectedComponents(s, edges)
         .select($"doc_id".as("l_partkey"), $"group_id".as("family_id"))
       val sizes = labels.groupBy($"family_id")
         .agg(count(lit(1)).as("family_size"))
       labels.join(sizes, "family_id")
         .select($"l_partkey", $"family_id", $"family_size")
-    } { scaffolding.foreach(_.unpersist()) }
-      .orderBy($"l_partkey")
+    }.orderBy($"l_partkey")
   }
 
   /** Peel rounds for q66 — fixed (not until-convergence) so the
@@ -536,7 +527,7 @@ object Graph {
   def q76CoreNumbers(s: SparkSession, dir: String, kMax: Int = CoreKMax,
       rounds: Int = CoreRounds): DataFrame =
     if (kMax == CoreKMax && rounds == CoreRounds)
-      graft.Caches.memo("q76_core", dir)(q76Compute(s, dir, kMax, rounds))()
+      graft.Caches.memo("q76_core", dir)(_ => q76Compute(s, dir, kMax, rounds))
     else q76Compute(s, dir, kMax, rounds)
 
   private def q76Compute(s: SparkSession, dir: String, kMax: Int,
@@ -726,11 +717,11 @@ object Graph {
     * q76's peel budget clamps. Returns (l_partkey, core_number),
     * unordered (callers sort). */
   private[graft] def hIndexCoreNumbers(edges0: DataFrame,
-      rounds: Int): DataFrame = {
+      rounds: Int): DataFrame = graft.Caches.scoped { sc =>
     val s = edges0.sparkSession
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val edges = edges0.cache()
+    val edges = sc.keep(edges0)
     var c = edges.groupBy($"src").agg(count(lit(1)).as("c"))
       .select($"src".as("node"), $"c")
       .localCheckpoint(true)
@@ -757,7 +748,6 @@ object Graph {
       tot = t2; r += 1
     }
     }
-    edges.unpersist()
     c.select($"node".as("l_partkey"), $"c".cast("int").as("core_number"))
   }
 
@@ -869,24 +859,26 @@ object Graph {
       case Some(half) => return GraphLocal.labelPropTable(s, half, rounds)
       case None =>
     }
-    val edges = copurchaseEdges(s, dir).cache()
-    var lbls = edges.select($"src".as("node")).distinct()
-      .select($"node", $"node".as("lbl"))
-      .localCheckpoint(true)
-    withLoopWidth(s, edges.count()) {
-    for (_ <- 1 to rounds) {
-      val votes = edges
-        .join(lbls.select($"node".as("dst"), $"lbl"), "dst")
-        .groupBy($"src", $"lbl").agg(count(lit(1)).as("cnt"))
-      lbls = votes.groupBy($"src")
-        .agg(max(struct($"cnt", (-$"lbl").as("nl"))).as("m"))
-        .select($"src".as("node"), (-$"m.nl").as("lbl"))
+    val labels = graft.Caches.scoped { sc =>
+      val edges = sc.keep(copurchaseEdges(s, dir))
+      var lbls = edges.select($"src".as("node")).distinct()
+        .select($"node", $"node".as("lbl"))
         .localCheckpoint(true)
+      withLoopWidth(s, edges.count()) {
+      for (_ <- 1 to rounds) {
+        val votes = edges
+          .join(lbls.select($"node".as("dst"), $"lbl"), "dst")
+          .groupBy($"src", $"lbl").agg(count(lit(1)).as("cnt"))
+        lbls = votes.groupBy($"src")
+          .agg(max(struct($"cnt", (-$"lbl").as("nl"))).as("m"))
+          .select($"src".as("node"), (-$"m.nl").as("lbl"))
+          .localCheckpoint(true)
+      }
+      }
+      lbls
     }
-    }
-    edges.unpersist()
-    val sizes = lbls.groupBy($"lbl").agg(count(lit(1)).as("community_size"))
-    lbls.join(sizes, "lbl")
+    val sizes = labels.groupBy($"lbl").agg(count(lit(1)).as("community_size"))
+    labels.join(sizes, "lbl")
       .select($"node".as("l_partkey"), $"lbl".as("community"),
         $"community_size")
       .orderBy($"l_partkey")
@@ -1011,9 +1003,10 @@ object Graph {
       case Some(half) => return GraphLocal.seedReachTable(s, half, radius)
       case None =>
     }
-    val edges = copurchaseEdges(s, dir).cache()
-    val dist = bfsHops(edges, topByDegree(edges, 1), radius)
-    edges.unpersist()
+    val dist = graft.Caches.scoped { sc =>
+      val edges = sc.keep(copurchaseEdges(s, dir))
+      bfsHops(edges, topByDegree(edges, 1), radius)
+    }
     dist.select($"node".as("l_partkey"), $"hops")
       .orderBy($"l_partkey")
   }
@@ -1046,9 +1039,12 @@ object Graph {
       case Some(half) => return GraphLocal.harmonicTable(s, half, nSeeds, radius)
       case None =>
     }
-    val edges = copurchaseEdges(s, dir).cache()
-    val dist = bfsHops(edges, topByDegree(edges, nSeeds), radius)
-    edges.unpersist()
+    // cached for the BFS only: the zero-fill below reads them uncached
+    val edges = copurchaseEdges(s, dir)
+    val dist = graft.Caches.scoped { sc =>
+      sc.keep(edges)
+      bfsHops(edges, topByDegree(edges, nSeeds), radius)
+    }
     val contrib = dist.filter($"hops" > 0)
       .groupBy($"node")
       .agg(count(lit(1)).cast("long").as("n_seeds"),
@@ -1325,8 +1321,8 @@ object Graph {
       coloringRounds: Int = SemiColoringRounds,
       rounds: Int = SemiLpaRounds): DataFrame =
     if (coloringRounds == SemiColoringRounds && rounds == SemiLpaRounds)
-      graft.Caches.memo("q84_semi", dir)(
-        q84Summarize(s, semiLabeled(s, dir).select(col("node"), col("lbl"))))()
+      graft.Caches.memo("q84_semi", dir)(_ =>
+        q84Summarize(s, semiLabeled(s, dir).select(col("node"), col("lbl"))))
     else q84Compute(s, dir, coloringRounds, rounds)
 
   /** The memoized proper-coloring artifact — ONE trial-coloring run
@@ -1335,8 +1331,7 @@ object Graph {
     * once, every downstream schedule reads it). */
   private[graft] def semiColoredMemo(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    var edges: DataFrame = null
-    graft.Caches.memo("q84_coloring", dir) {
+    graft.Caches.memo("q84_coloring", dir) { sc =>
       // LOCAL ENDGAME (round 14 — the q102 discipline moved to the
       // BASE labeling chain): the thresholded co-purchase graph is
       // metadata-scale at every test SF, and the distributed trial
@@ -1350,18 +1345,16 @@ object Graph {
         val ce = GraphLocal.symmetrize(halfOpt.get).map(t => (t._1, t._2))
         LouvainLocal.coloring(ce).toSeq.toDF("node", "color")
       } else {
-        edges = copurchaseEdges(s, dir).cache()
-        trialColoring(edges, SemiColoringRounds)._1
+        trialColoring(sc.keep(copurchaseEdges(s, dir)), SemiColoringRounds)._1
       }
-    }(if (edges != null) edges.unpersist())
+    }
   }
 
   /** The memoized (node, color, lbl) labeling artifact — built over
     * the shared coloring; serves q84 (labels) and q100 (score). */
   private[graft] def semiLabeled(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    var edges: DataFrame = null
-    graft.Caches.memo("q84_semi_labeled", dir) {
+    graft.Caches.memo("q84_semi_labeled", dir) { sc =>
       // local endgame under the gate (see semiColoredMemo): the LPA
       // sweeps replay over the SHARED coloring artifact — one
       // collect of the memoized (node, color) frame, then
@@ -1378,10 +1371,10 @@ object Graph {
           .map(n => (n, colMap(n), lbl(n)))
           .toDF("node", "color", "lbl")
       } else {
-        edges = copurchaseEdges(s, dir).cache()
+        val edges = sc.keep(copurchaseEdges(s, dir))
         semiSweeps(edges, semiColoredMemo(s, dir), SemiColors)
       }
-    }(if (edges != null) edges.unpersist())
+    }
   }
 
   private def q84Summarize(s: SparkSession, colored: DataFrame): DataFrame = {
@@ -1394,12 +1387,9 @@ object Graph {
   }
 
   private def q84Compute(s: SparkSession, dir: String,
-      coloringRounds: Int, rounds: Int): DataFrame = {
-    val edges = copurchaseEdges(s, dir).cache()
-    val colored = semiSyncLabels(edges, coloringRounds, rounds)
-    val out = q84Summarize(s, colored)
-    edges.unpersist()
-    out
+      coloringRounds: Int, rounds: Int): DataFrame = graft.Caches.scoped { sc =>
+    val edges = sc.keep(copurchaseEdges(s, dir))
+    q84Summarize(s, semiSyncLabels(edges, coloringRounds, rounds))
   }
 
   /** The windowed pick's free palette, HUB-SAFE: the pick only ever
@@ -1487,14 +1477,14 @@ object Graph {
       .filter(lit(false)).checkpointFresh
     var r = 0
     val ceiling = math.max(coloringRounds, 4096)
-    while (r < ceiling && uncCnt > 0) {
+    while (r < ceiling && uncCnt > 0) graft.Caches.scoped { sc =>
       // round-r priorities (re-randomized each round; the same prio
       // drives the windowed pick index — a pairwise-independent
       // permutation, so adjacent nodes' picks decorrelate)
       val prio = ($"node" * semiPrioA(r)) % SemiPrioM
       // free palette (ascending) over the carried colored-neighbor
       // colors, and the windowed pick
-      val picks = unc
+      val picks = sc.keep(unc
         .join(usedSt, Seq("node"), "left")
         .withColumn("prio", prio)
         .withColumn("free", freePalette($"deg",
@@ -1502,8 +1492,7 @@ object Graph {
         .withColumn("pick", element_at($"free",
           (($"prio" % least(size($"free"), lit(SemiPickWindow))) + 1)
             .cast("int")))
-        .select($"node", $"prio", $"pick")
-        .cache()
+        .select($"node", $"prio", $"pick"))
       // keep a pick unless a same-pick uncolored neighbor outranks it
       val conflictMax = edges
         .join(picks.select($"node".as("dst"), $"pick".as("dp"),
@@ -1515,12 +1504,11 @@ object Graph {
       // the two per-round checkpoints don't each recompute the whole
       // round's join chain, and its count gives the uncolored-residue
       // bookkeeping for free (per-round JOB COUNT is the wall-clock)
-      val newly = picks
+      val newly = sc.keep(picks
         .join(conflictMax.withColumnRenamed("src", "node"), Seq("node"), "left")
         .filter($"mx".isNull ||
           $"mx" < struct($"prio".as("p"), $"node".as("n")))
-        .select($"node", $"pick".cast("int").as("color"))
-        .cache()
+        .select($"node", $"pick".cast("int").as("color")))
       val nNew = newly.count()
       // the max-priority uncolored node always keeps its pick (strict
       // total order on (prio, id)), so an empty round with uncolored
@@ -1548,8 +1536,6 @@ object Graph {
               coalesce($"du", array().cast("array<long>")))).as("used"))
           .checkpointFresh
       }
-      picks.unpersist()
-      newly.unpersist()
       uncCnt -= nNew
       r += 1
     }
@@ -1953,17 +1939,16 @@ object Graph {
     * metric (the d6 convergence-count discipline) — zero extra
     * jobs. */
   private[graft] def louvainMoves(edges: DataFrame, labeled: DataFrame,
-      colorBudget: Int, rounds: Int = LouvainRounds): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val deg = edges.groupBy($"src".as("node"))
-      .agg(count(lit(1)).as("s")).cache()
-    val m2 = edges.count() // |e| = 2m: one scalar, the only driver value
-    val out = louvainMovesW(edges.withColumn("w", lit(1L)), deg, m2,
-      labeled, rounds, colorBudget)
-    deg.unpersist()
-    out
-  }
+      colorBudget: Int, rounds: Int = LouvainRounds): DataFrame =
+    graft.Caches.scoped { sc =>
+      val s = edges.sparkSession
+      import s.implicits._
+      val deg = sc.keep(edges.groupBy($"src".as("node"))
+        .agg(count(lit(1)).as("s")))
+      val m2 = edges.count() // |e| = 2m: one scalar, the only driver value
+      louvainMovesW(edges.withColumn("w", lit(1L)), deg, m2,
+        labeled, rounds, colorBudget)
+    }
 
   /** Executed (non-skipped) Louvain class steps across all
     * louvainMovesW runs — observability for the zero-move early exit
@@ -2073,12 +2058,11 @@ object Graph {
     var fixedPoint = false
     while (round < rounds && !fixedPoint) {
       var movedInRound = 0L
-      for (c <- 1 to nColors) {
+      for (c <- 1 to nColors) graft.Caches.scoped { sc =>
         louvainMoveSteps.incrementAndGet()
         // community volumes from the CURRENT labeling (per class step)
-        val tot = lbl.join(strength, "node")
-          .groupBy($"lbl".as("c_lbl")).agg(sum($"s").as("tot"))
-          .cache()
+        val tot = sc.keep(lbl.join(strength, "node")
+          .groupBy($"lbl".as("c_lbl")).agg(sum($"s").as("tot")))
         val cls = lbl.filter($"color" === c)
           .select($"node".as("src"), $"lbl".as("cur"))
         val kv = edges
@@ -2115,7 +2099,6 @@ object Graph {
         val stepMoved =
           Option(obs.get("moved")).map(_.asInstanceOf[Long]).getOrElse(0L)
         movedInRound += stepMoved
-        tot.unpersist()
       }
       round += 1
       // zero-move round ⟹ fixed point ⟹ absorbing (volumes are a
@@ -2147,8 +2130,7 @@ object Graph {
     * AND q102's coarsening (the semiLabeled pattern). */
   private[graft] def louvainLabels(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    var edges: DataFrame = null
-    graft.Caches.memo("q101_labels", dir) {
+    graft.Caches.memo("q101_labels", dir) { sc =>
       // local endgame under the gate (see semiColoredMemo): phase 1 is
       // louvainMovesW with w = 1, strength = degree, m2w = |e| — the
       // exact machinery LouvainLocal.movesW already replays for the
@@ -2165,11 +2147,11 @@ object Graph {
         LouvainLocal.movesW(ceW, strength, ceW.length.toLong, colMap,
           LouvainRounds).toSeq.toDF("node", "lbl")
       } else {
-        edges = copurchaseEdges(s, dir).cache()
+        val edges = sc.keep(copurchaseEdges(s, dir))
         louvainMoves(edges, semiColoredMemo(s, dir)
           .select($"node", $"color", $"node".as("lbl")), SemiColors)
       }
-    }(if (edges != null) edges.unpersist())
+    }
   }
 
   /** Phase-2 move passes over the coarsened supergraph — its own
@@ -2200,21 +2182,21 @@ object Graph {
     * phase 1 at 20× shrinks with the contraction ratio (the published
     * reason multi-level Louvain scales). Isolated supernodes (no
     * cross edges) can't move and are projected through unchanged. */
-  def q102LouvainCoarse(s: SparkSession, dir: String): DataFrame = {
+  def q102LouvainCoarse(s: SparkSession, dir: String): DataFrame =
+    graft.Caches.scoped { sc =>
     import s.implicits._
-    val edges = copurchaseEdges(s, dir).cache()
+    val edges = sc.keep(copurchaseEdges(s, dir))
     val l1 = louvainLabels(s, dir)
-    val le = edges
+    val le = sc.keep(edges
       .join(l1.select($"node".as("src"), $"lbl".as("la")), "src")
       .join(l1.select($"node".as("dst"), $"lbl".as("lb")), "dst")
-      .groupBy($"la", $"lb").agg(count(lit(1)).as("w"))
-      .cache()
+      .groupBy($"la", $"lb").agg(count(lit(1)).as("w")))
     val cross = le.filter($"la" =!= $"lb")
       .select($"la".as("src"), $"lb".as("dst"), $"w")
     // strength(c) = Σ_b w(c,b) over ALL b (self term included) =
     // Σ member degrees; Σ strength = |e| = the invariant 2m
-    val strength = le.groupBy($"la".as("node"))
-      .agg(sum($"w").as("s")).cache()
+    val strength = sc.keep(le.groupBy($"la".as("node"))
+      .agg(sum($"w").as("s")))
     val m2w = edges.count()
     // LOCAL ENDGAME (round 14 — see LouvainLocal): the coarse level
     // is metadata-scale by construction (community count ≪ node
@@ -2256,10 +2238,8 @@ object Graph {
     val projected = l1
       .join(l2.select($"node".as("lbl"), $"lbl".as("lbl2")), Seq("lbl"), "left")
       .select($"node", coalesce($"lbl2", $"lbl").as("lbl"))
-    val out = q84Summarize(s, projected)
-    le.unpersist(); strength.unpersist(); edges.unpersist()
-    out
-  }
+    q84Summarize(s, projected)
+    }
 
   /** The Louvain move-round CTEs over arbitrary table names — ONE
     * recipe for both phases: phase 1 reads (e, dg.deg, k = count(*));
@@ -2418,14 +2398,13 @@ object Graph {
     * map-side partials — linear in edges, output ≤ |communities|. */
   def q103Conductance(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val edges = copurchaseEdges(s, dir).cache()
-    // materialize BEFORE unpersisting: the kernel's result is lazy,
-    // and unpersisting first would make every downstream action
-    // recompute the co-purchase join uncached (round-12 ADVICE)
-    val out = conductanceOf(edges, louvainLabels(s, dir))
-      .orderBy($"community").checkpointFresh
-    edges.unpersist()
-    out
+    // materialize BEFORE the scope releases the edges: the kernel's
+    // result is lazy, and releasing first would make every downstream
+    // action recompute the co-purchase join uncached (round-12 ADVICE)
+    graft.Caches.scoped { sc =>
+      conductanceOf(sc.keep(copurchaseEdges(s, dir)), louvainLabels(s, dir))
+        .orderBy($"community").checkpointFresh
+    }
   }
 
   /** The q103 kernel over an arbitrary symmetric edge list and a
@@ -2527,8 +2506,8 @@ object Graph {
       rounds: Int = SsspRounds): DataFrame = {
     import s.implicits._
     val out =
-      if (rounds == SsspRounds) graft.Caches.memo("q85_sssp", dir)(
-        q85Compute(s, dir, rounds))()
+      if (rounds == SsspRounds) graft.Caches.memo("q85_sssp", dir)(_ =>
+        q85Compute(s, dir, rounds))
       else q85Compute(s, dir, rounds)
     out.orderBy($"l_partkey")
   }
@@ -2547,16 +2526,15 @@ object Graph {
           .select($"node".as("l_partkey"), $"dist")
       case None =>
     }
-    val edges = copurchaseEdges(s, dir)
-      .select($"src", $"dst", greatest(lit(1L), expr("1000 div n_orders")).as("w"))
-      .cache()
-    val res = egoSeed(edges) match {
-      case None => Seq.empty[(Long, Long)].toDF("l_partkey", "dist")
-      case Some(seed) => ssspFrom(edges, seed, rounds)
-        .select($"node".as("l_partkey"), $"dist")
+    graft.Caches.scoped { sc =>
+      val edges = sc.keep(copurchaseEdges(s, dir)
+        .select($"src", $"dst", greatest(lit(1L), expr("1000 div n_orders")).as("w")))
+      egoSeed(edges) match {
+        case None => Seq.empty[(Long, Long)].toDF("l_partkey", "dist")
+        case Some(seed) => ssspFrom(edges, seed, rounds)
+          .select($"node".as("l_partkey"), $"dist")
+      }
     }
-    edges.unpersist()
-    res
   }
 
   /** q85's engine over a weighted symmetric edge list (src, dst, w):
@@ -2660,7 +2638,7 @@ object Graph {
   def q86Betweenness(s: SparkSession, dir: String,
       nSeeds: Int = BetweennessSeeds, radius: Int = ReachRadius): DataFrame = {
     import s.implicits._
-    graft.Caches.memo("q86_betweenness", dir) {
+    graft.Caches.memo("q86_betweenness", dir) { _ =>
       // LOCAL ENDGAME (round 15, VERDICT item 3): below the 2²² gate
       // the R-level forward/backward loop replays driver-side with
       // the SAME integer algebra and the SAME overflow guards
@@ -2670,17 +2648,15 @@ object Graph {
       val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
       if (halfOpt.isDefined)
         GraphLocal.betweennessTable(s, halfOpt.get, nSeeds, radius)
-      else {
-      val edges = copurchaseEdges(s, dir).cache()
-      val bet = betweennessFrom(edges, topByDegree(edges, nSeeds), radius)
-      val out = edges.select($"src".as("node")).distinct()
-        .join(bet, Seq("node"), "left")
-        .select($"node".as("l_partkey"),
-          coalesce($"bet_1e6", lit(0L)).as("bet_1e6"))
-      edges.unpersist()
-      out
+      else graft.Caches.scoped { sc =>
+        val edges = sc.keep(copurchaseEdges(s, dir))
+        val bet = betweennessFrom(edges, topByDegree(edges, nSeeds), radius)
+        edges.select($"src".as("node")).distinct()
+          .join(bet, Seq("node"), "left")
+          .select($"node".as("l_partkey"),
+            coalesce($"bet_1e6", lit(0L)).as("bet_1e6"))
       }
-    }().orderBy($"l_partkey")
+    }.orderBy($"l_partkey")
   }
 
   /** σ ceiling for the backward pass (§8b.4): with σ ≤ 1e15 the
@@ -2840,9 +2816,9 @@ object Graph {
       val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
       if (halfOpt.isDefined)
         GraphLocal.diameterTable(s, halfOpt.get, rounds)
-      else {
-      val edges = copurchaseEdges(s, dir).cache()
-      val out = egoSeed(edges) match {
+      else graft.Caches.scoped { sc =>
+      val edges = sc.keep(copurchaseEdges(s, dir))
+      egoSeed(edges) match {
         case Some(seed) =>
           val d1 = bfsHops(edges, Seq(seed).toDF("seed"), rounds)
           val (eccSeed, far) = d1
@@ -2855,12 +2831,10 @@ object Graph {
           Seq[(Option[Long], Option[Int], Option[Long], Option[Int])](
             (None, None, None, None)).toDF(diameterCols: _*)
       }
-      edges.unpersist()
-      out
       }
     }
     if (rounds == DiameterRounds)
-      graft.Caches.memo("q88_diameter", dir)(compute)()
+      graft.Caches.memo("q88_diameter", dir)(_ => compute)
     else compute
   }
 
@@ -2918,7 +2892,7 @@ object Graph {
         .select($"pa", $"pb", coalesce($"support", lit(0L)).as("support"))
     }
     (if (k == TrussK && rounds == TrussRounds)
-      graft.Caches.memo("q98_ktruss", dir)(compute)()
+      graft.Caches.memo("q98_ktruss", dir)(_ => compute)
     else compute).orderBy($"pa", $"pb")
   }
 
@@ -3032,7 +3006,7 @@ object Graph {
         .select($"pa", $"pb", coalesce($"support", lit(0L)).as("support"))
     }
     (if (k == TrussK && p1000 == TrussThinP1000)
-      graft.Caches.memo("q98_truss_thinned", dir)(compute)()
+      graft.Caches.memo("q98_truss_thinned", dir)(_ => compute)
     else compute).orderBy($"pa", $"pb")
   }
 
@@ -3154,7 +3128,7 @@ object Graph {
     * scalars). */
   def q97Anf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.Caches.memo("q97_anf", dir) {
+    graft.Caches.memo("q97_anf", dir) { _ =>
       // NOT locally gated (round 15, recorded negative result): a
       // DataSketches HLL union's estimate is FOLD-STRUCTURE- and
       // ORDER-sensitive (GraphLocalSpec: flat=592, two-level=585,
@@ -3163,11 +3137,10 @@ object Graph {
       // the q86/q88/q94 local-endgame bar is unattainable here. The
       // loop instead sheds one job per round (the observe-metric
       // total, see anfLoop).
-      val edges = copurchaseEdges(s, dir).cache()
-      val out = anfFrom(edges, AnfRounds, AnfLgK)
-      edges.unpersist()
-      out
-    }().orderBy($"hop")
+      graft.Caches.scoped { sc =>
+        anfFrom(sc.keep(copurchaseEdges(s, dir)), AnfRounds, AnfLgK)
+      }
+    }.orderBy($"hop")
   }
 
   /** q97's engine over a symmetric edge list: per-hop estimated
@@ -3368,24 +3341,22 @@ object Graph {
       val halfOpt = GraphLocal.halfPairsUnderGate(s, dir)
       if (halfOpt.isDefined)
         GraphLocal.robustnessTable(s, halfOpt.get, RobustnessHubs)
-      else {
-      val edges = copurchaseEdges(s, dir).cache()
+      else graft.Caches.scoped { sc =>
+      val edges = sc.keep(copurchaseEdges(s, dir))
       val nEdges = edges.count() / 2
       val hubs = topByDegree(edges, RobustnessHubs).as[Long].collect()
       val lab1 = Dedup.connectedComponents(s, edges)
       val (n1, lcc1) = sizesOf(lab1)
-      val edges2 = edges
-        .filter(!$"src".isInCollection(hubs) && !$"dst".isInCollection(hubs))
-        .cache()
+      val edges2 = sc.keep(edges
+        .filter(!$"src".isInCollection(hubs) && !$"dst".isInCollection(hubs)))
       val (n2, lcc2) =
         if (edges2.isEmpty) (0L, 0L) else sizesOf(Dedup.connectedComponents(s, edges2))
-      edges.unpersist(); edges2.unpersist()
       Seq((n1, nEdges, lcc1, n2, lcc2, lcc2 * 10000 / lcc1))
         .toDF("n_nodes", "n_edges", "lcc_before", "n_nodes_after",
           "lcc_after", "retained_1e4")
       }
     }
-    graft.Caches.memo("q94_robustness", dir)(compute)()
+    graft.Caches.memo("q94_robustness", dir)(_ => compute)
   }
 
   private def sizesOf(labels: DataFrame): (Long, Long) = {
@@ -3642,10 +3613,11 @@ object Graph {
   /** The q99 kernel over an arbitrary bipartite (cust, part) edge
     * list — iters exposed for the rounds+1 spec, edges for the
     * constructed-graph replay spec. */
-  private[graft] def hitsTop(edges: DataFrame, iters: Int): DataFrame = {
+  private[graft] def hitsTop(edges: DataFrame, iters: Int): DataFrame =
+    graft.Caches.scoped { sc =>
     val s = edges.sparkSession
     import s.implicits._
-    val e = edges.cache()
+    val e = sc.keep(edges)
     // LOCAL endgame (round 14, the q102/Louvain fits-on-one-node
     // discipline): a graph under `gates.hitsLocal` is a ≤64 MB pair
     // collect at the default, and the max-normalized rounds over it
@@ -3655,11 +3627,8 @@ object Graph {
     // or shuffle regime below.
     val g = GraphLocal.gates
     val nEdges = e.count()
-    if (nEdges > 0 && nEdges <= g.hitsLocal) {
-      val out = hitsLocalTop(e, iters)
-      e.unpersist()
-      return out
-    }
+    if (nEdges > 0 && nEdges <= g.hitsLocal) hitsLocalTop(e, iters)
+    else {
     val normA = "cast((cast(a as decimal(38,0)) * 1000000) div amax as bigint)"
     val normH = "cast((cast(h as decimal(38,0)) * 1000000) div hmax as bigint)"
     var hub = e.select($"cust").distinct()
@@ -3696,7 +3665,7 @@ object Graph {
       else Long.MaxValue
     val bcast = nCust <= g.hitsBroadcast && nPart <= g.hitsBroadcast
     val (eByCust, eByPart) =
-      if (bcast) (e.repartition($"cust").cache(), e.repartition($"part").cache())
+      if (bcast) (sc.keep(e.repartition($"cust")), sc.keep(e.repartition($"part")))
       else (e, e)
     for (_ <- 1 to iters) {
       if (bcast) {
@@ -3717,17 +3686,15 @@ object Graph {
           .select($"cust", expr(normH).as("hub")).checkpointFresh
       }
     }
-    val out = auth.orderBy($"auth".desc, $"part").limit(20)
+    auth.orderBy($"auth".desc, $"part").limit(20)
       .select(lit("auth").as("role"), $"part".cast("long").as("node"),
         $"auth".as("score"))
       .unionAll(hub.orderBy($"hub".desc, $"cust").limit(20)
         .select(lit("hub").as("role"), $"cust".cast("long").as("node"),
           $"hub".as("score")))
       .orderBy($"role", $"score".desc, $"node")
-    e.unpersist()
-    if (bcast) { eByCust.unpersist(); eByPart.unpersist() }
-    out
-  }
+    }
+    }
 
   /** q99's oracle: the 5 max-normalized rounds unrolled (generated —
     * the q76 discipline for iteration-family oracles), every round

@@ -70,7 +70,7 @@ object Layout {
     *
     * The exact construction: one cheap pass collects per-input-
     * partition row counts (a bounded ≤#input-files driver artifact —
-    * the q45/withGlobalRank offsets pattern), turning them into
+    * the q45/withGlobalRunningSum offsets pattern), turning them into
     * exclusive prefix offsets; the data pass then knows each row's
     * exact global rank r without any sort, assigns bucket
     * b = r·parts/n (balanced contiguous ranges), and an identity
@@ -122,7 +122,7 @@ object Layout {
     * physical partitioning, and any exchange above (a z-order sort's
     * RangePartitioner re-SAMPLES per job, seeded by the rdd id) would
     * hand pass 2 different partition offsets than pass 1 computed —
-    * the q49/withGlobalRank both-branches-one-shuffle lesson applied
+    * the q49/withGlobalRunningSum both-branches-one-shuffle lesson applied
     * at the RDD layer. A plain parquet read is stable without the
     * persist; the persist makes the contract hold for ANY input. */
   def compactFrame(df: org.apache.spark.sql.DataFrame, dst: String,

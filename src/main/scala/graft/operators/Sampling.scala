@@ -111,20 +111,18 @@ object Sampling {
     * discipline. */
   def p18Curate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // memoized + scaffolding unpersisted after materialization: the
+    // memoized, its scope released after materialization: the
     // un-memoized form leaked one cached `kept` frame per invocation
     // (repeated bench sweeps accumulate partitions
     // Caches.clear never saw — the d9 leak class)
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("p18_curate", dir) {
+    graft.Caches.memo("p18_curate", dir) { sc =>
       val clean = Dedup.p1CleanCorpus(s, dir).select($"doc_id")
       val contaminated = Dedup.p3Decontaminate(s, dir).select($"doc_id")
       val train = clean
         .filter($"doc_id" % Dedup.DecontamMod =!= 0)
         .join(contaminated, Seq("doc_id"), "left_anti")
       val docs = Tables.documents(s, dir).select($"doc_id", $"lang", $"source")
-      val kept = train.join(docs, "doc_id").cache()
-      scaffolding += kept
+      val kept = sc.keep(train.join(docs, "doc_id"))
       val cap = kept.count() * SourceCapPct / 100
       // per-source keep-first rank via the distributed group rank —
       // p16's discipline (a bare partitionBy(source) window puts each
@@ -136,11 +134,10 @@ object Sampling {
       // at the pipeline-composition layer; p20 already checkpointed on
       // its side for exactly this reason)
       graft.Caches.checkpointFresh(
-        Analytics.withGroupRank(kept, "source", "rnk", scaffolding, $"doc_id")
+        Analytics.withGroupRank(kept, "source", "rnk", sc, $"doc_id")
           .filter($"rnk" <= cap)
           .select($"doc_id", $"lang", $"source"))
-    } { scaffolding.foreach(_.unpersist()) }
-      .orderBy($"doc_id")
+    }.orderBy($"doc_id")
   }
 
   /** P20: p18's curation chain EXTENDED WITH THE SEMANTIC STAGE — the
@@ -168,8 +165,7 @@ object Sampling {
     * d10 duplicate-compressed plan on a smaller frame. */
   def p20CurateSemantic(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("p20_curate_semantic", dir) {
+    graft.Caches.memo("p20_curate_semantic", dir) { sc =>
       // checkpointFresh, not just the memo cache: p18's frame carries
       // a ~536-node logical plan, and this stage references it in
       // SEVERAL actions and self-joining subtrees — caching cuts
@@ -182,12 +178,11 @@ object Sampling {
       val surviving = assigned
         .join(kept.select($"doc_id".as("vec_id")), "vec_id")
       val verdicts = Similarity.semDedupCore(surviving, centers,
-        Similarity.SemDedupTau, Similarity.SemDedupClusterCap, scaffolding)
+        Similarity.SemDedupTau, sc)
       kept.join(verdicts.filter(!$"dropped")
           .select($"vec_id".as("doc_id")), "doc_id")
         .select($"doc_id", $"lang", $"source")
-    } { scaffolding.foreach(_.unpersist()) }
-      .orderBy($"doc_id")
+    }.orderBy($"doc_id")
   }
 
   /** P21: INCREMENTAL curation — the ARRIVAL shape of the pipeline
@@ -222,8 +217,7 @@ object Sampling {
     * Round12Spec pins the stage-survival set algebra and determinism. */
   def p21CurateIncremental(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("p21_curate_incremental", dir) {
+    graft.Caches.memo("p21_curate_incremental", dir) { sc =>
       val docs = Tables.documents(s, dir)
       val newQuality = TextAnalysis.t2QualityScore(s, dir)
         .filter($"doc_id" % 2 === 1)
@@ -231,11 +225,9 @@ object Sampling {
         .select($"doc_id")
       // within-batch exact dedup: keep the min doc_id per fingerprint
       // among the batch's quality survivors
-      val fp = newQuality.join(docs, "doc_id")
+      val fp = sc.keep(newQuality.join(docs, "doc_id")
         .select($"doc_id",
-          graft.functions.TextFunctions.fingerprint($"text").as("fp"))
-        .cache()
-      scaffolding += fp
+          graft.functions.TextFunctions.fingerprint($"text").as("fp")))
       val keepFirst = fp.groupBy($"fp").agg(min($"doc_id").as("doc_id"))
         .select($"doc_id")
       // cross-corpus near-dup: any verified d11 pair drops the arrival
@@ -247,8 +239,7 @@ object Sampling {
         .join(nearIndex, Seq("doc_id"), "left_anti")
         .join(contaminated, Seq("doc_id"), "left_anti")
         .join(docs.select($"doc_id", $"lang", $"source"), "doc_id")
-    } { scaffolding.foreach(_.unpersist()) }
-      .orderBy($"doc_id")
+    }.orderBy($"doc_id")
   }
 
   /** P17: the GENERAL-τ temperature knob (§8b.2, closed) — p15 pins
@@ -482,12 +473,11 @@ object Sampling {
     * aggregation buffer. */
   def p16SourceCap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("p16_source_cap", dir) {
+    graft.Caches.memo("p16_source_cap", dir) { sc =>
       val docs = Tables.documents(s, dir).select($"doc_id", $"source")
       val cap = docs.count() * SourceCapPct / 100
       val h = fpMix($"doc_id")
-      Analytics.withGroupRank(docs, "source", "rnk", scaffolding, $"doc_id")
+      Analytics.withGroupRank(docs, "source", "rnk", sc, $"doc_id")
         .groupBy($"source")
         .agg(count(lit(1)).as("n_total"),
           sum(when($"rnk" <= cap, 1L).otherwise(0L)).as("n_kept"),
@@ -496,7 +486,7 @@ object Sampling {
           coalesce(sum(when($"rnk" <= cap, pmod(h * h, lit(FpPrime)))),
             lit(0L)).as("kept_fp2"))
         .orderBy($"source")
-    } { scaffolding.foreach(_.unpersist()) }
+    }
   }
 
   private[graft] def sourceCapOracleSql: String =
@@ -521,8 +511,8 @@ object Sampling {
     * and deal it into 4 curriculum phases (quartiles: phase 1 = best),
     * the "quality-ordered training schedule" stage between cleaning
     * and packing. The quality ranking is q49's exact DISTRIBUTED
-    * global rank (range-partition + per-partition row_number + bounded
-    * offset join — never a single-partition ntile window over a
+    * global rank (range-partition + per-partition running count +
+    * bounded offset join — never a single-partition ntile window over a
     * billion-doc corpus), with total-order (quality desc, doc_id)
     * tie-breaks so phase boundaries are engine-reproducible, and the
     * phase formula is q49's SQL-exact `tileOf` integer arithmetic —
@@ -531,17 +521,17 @@ object Sampling {
     * 4-dp floor-quantized, so rank order carries across engines. */
   def p9Curriculum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("p9_curriculum", dir) {
+    graft.Caches.memo("p9_curriculum", dir) { sc =>
       val q = TextAnalysis.t2QualityScore(s, dir)
         .select($"doc_id", $"n_tokens".cast("long").as("n_tokens"), $"quality")
       val tot = q.agg(count(lit(1)).as("__n"))
-      Analytics.withGlobalRank(q, "q_rank", scaffolding, $"quality".desc, $"doc_id")
+      Analytics.withGlobalRunningSum(q, lit(1L), "q_rank", sc,
+          $"quality".desc, $"doc_id")
         .join(broadcast(tot))
         .select($"doc_id", $"n_tokens", $"quality",
           Analytics.tileOf($"q_rank", $"__n", 4).as("phase"))
         .orderBy($"doc_id")
-    } { scaffolding.foreach(_.unpersist()) }
+    }
   }
 
   /** Per-language epoch targets for `p11RepeatEpochs`, in exact
@@ -657,22 +647,20 @@ object Sampling {
     * materialization is wanted). */
   def p13WeightedSample(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("p13_weighted", dir) {
+    graft.Caches.memo("p13_weighted", dir) { sc =>
       val docs = Tables.documents(s, dir)
         .select($"doc_id", $"lang", greatest(lit(1L), $"n_chars").as("w"))
-      p13Kernel(docs, P13Stride, scaffolding)
-    } { scaffolding.foreach(_.unpersist()) }
-      .orderBy($"doc_id")
+      p13Kernel(docs, P13Stride, sc)
+    }.orderBy($"doc_id")
   }
 
   /** p13's engine over (doc_id, lang, w ≥ 1): separated so specs can
     * drive constructed weight patterns against a local replay. */
   private[graft] def p13Kernel(docs: DataFrame, stride: Long,
-      scaffolding: scala.collection.mutable.ListBuffer[DataFrame]): DataFrame = {
+      scope: graft.Caches.Scope): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    Analytics.withGlobalRunningSum(docs, $"w", "cum", scaffolding, $"doc_id")
+    Analytics.withGlobalRunningSum(docs, $"w", "cum", scope, $"doc_id")
       .withColumn("copies",
         expr(s"(cum + $stride - 2) div $stride") -
           expr(s"(cum - w + $stride - 2) div $stride"))

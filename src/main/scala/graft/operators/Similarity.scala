@@ -172,10 +172,8 @@ object Similarity {
     * (K-bounded size check, one tiny job) naming the escalation
     * instead of letting a single partition go quadratic. */
   private[graft] def semDedupCore(assigned: DataFrame,
-      centers: Array[Array[Double]], tau: Double,
-      cap: Int = SemDedupClusterCap,
-      scaffolding: scala.collection.mutable.ListBuffer[DataFrame] =
-        scala.collection.mutable.ListBuffer.empty): DataFrame = {
+      centers: Array[Array[Double]], tau: Double, scope: graft.Caches.Scope,
+      cap: Int = SemDedupClusterCap): DataFrame = {
     val s = assigned.sparkSession
     import s.implicits._
     // identical-compression needs cos(identical nonzero pair) ≥ τ;
@@ -185,19 +183,15 @@ object Similarity {
       s"semDedupCore: tau=$tau too close to 1 for duplicate compression")
     val centDf = centers.zipWithIndex.toSeq
       .map { case (c, i) => (i, c.toSeq) }.toDF("cluster", "cv")
-    val base = assigned
+    val base = scope.keep(assigned
       .join(broadcast(centDf), "cluster")
       .withColumn("simc_q", floor(cosine($"v", $"cv") * 1e6).cast("long"))
-      .select($"cluster", $"vec_id", $"v", $"simc_q")
-      .cache()
-    scaffolding += base
+      .select($"cluster", $"vec_id", $"v", $"simc_q"))
     // one representative per (cluster, vector value): min id — the
     // earliest twin in the (simc, id) order (simc is a function of
     // (cluster, v), constant within the group)
-    val rep = base.groupBy($"cluster", $"v")
-      .agg(min($"vec_id").as("vec_id"), min($"simc_q").as("simc_q"))
-      .cache()
-    scaffolding += rep
+    val rep = scope.keep(base.groupBy($"cluster", $"v")
+      .agg(min($"vec_id").as("vec_id"), min($"simc_q").as("simc_q")))
     val sizes = rep.groupBy($"cluster").agg(count(lit(1)).as("n"))
       .agg(max($"n")).as[Long].head()
     if (sizes > cap)
@@ -241,12 +235,10 @@ object Similarity {
     * within-cluster completeness: no surviving intra-cluster pair).
     * Seeded k-means fit → rows-only by design. */
   def d10SemDedup(s: SparkSession, dir: String): DataFrame = {
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("d10_semdedup", dir) {
+    graft.Caches.memo("d10_semdedup", dir) { sc =>
       val (assigned, centers) = ivfIndex(s, dir)
-      semDedupCore(assigned, centers, SemDedupTau,
-        SemDedupClusterCap, scaffolding)
-    } { scaffolding.foreach(_.unpersist()) }
+      semDedupCore(assigned, centers, SemDedupTau, sc)
+    }
   }
 
   /** Each cluster's unit-space pivot (elementwise mean of the unit
@@ -919,33 +911,31 @@ object Similarity {
     (r, pqTrain(sample.map(rotate), m, k, pqIters))
   }
 
-  /** (resid, unit-cached): unit-normalized vectors joined with their
-    * cluster's unit-space pivot (`clusterPivots`, the d5 pattern) and
-    * the residual `r = û − pivot`. Caller unpersists `unit` once its
-    * derived frame materializes. */
-  private def residualFrame(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  /** Unit-normalized vectors joined with their cluster's unit-space
+    * pivot (`clusterPivots`, the d5 pattern) and the residual
+    * `r = û − pivot`. The unit frame is kept in `scope` (the pivot pass
+    * and the residual pass share it); close the scope once the
+    * residual's derived frame materializes. */
+  private def residualFrame(s: SparkSession, dir: String,
+      scope: graft.Caches.Scope): DataFrame = {
     import s.implicits._
     val (assigned, _) = ivfIndex(s, dir)
-    val unit = assigned
+    val unit = scope.keep(assigned
       .withColumn("nrm", sqrt(dot($"v", $"v")))
-      .withColumn("u", unitScaled($"v", $"nrm"))
-      .cache() // pivot pass + residual pass share it
+      .withColumn("u", unitScaled($"v", $"nrm")))
     val (_, pivotLit) = clusterPivots(unit)
-    val resid = unit.withColumn("r",
+    unit.withColumn("r",
       zip_with($"u", element_at(pivotLit, $"cluster"), (a, b) => a - b))
-    (resid, unit)
   }
 
   /** The bounded residual sample the PQ/OPQ codebooks train on —
     * exposed for the recall/MSE probe and specs. */
-  private[graft] def pqTrainingSample(s: SparkSession, dir: String): Array[Array[Double]] = {
-    import s.implicits._
-    val (resid, unit) = residualFrame(s, dir)
-    val out = resid.orderBy($"vec_id").limit(PqSample)
-      .select($"r").as[Seq[Double]].collect().map(_.toArray)
-    unit.unpersist()
-    out
-  }
+  private[graft] def pqTrainingSample(s: SparkSession, dir: String): Array[Array[Double]] =
+    graft.Caches.scoped { sc =>
+      import s.implicits._
+      residualFrame(s, dir, sc).orderBy($"vec_id").limit(PqSample)
+        .select($"r").as[Seq[Double]].collect().map(_.toArray)
+    }
 
   /** Build (or serve) the IVF-PQ index: every vector unit-normalized,
     * reduced to its RESIDUAL from the cluster's unit-space pivot
@@ -978,9 +968,9 @@ object Similarity {
     * plain) deterministically; SimilaritySpec also pins full-probe
     * recall ≥ 0.6. */
   def pqIndex(s: SparkSession, dir: String): (DataFrame, Array[Double], Seq[Seq[Double]]) =
-    graft.Caches.artifact("pq_index", dir) {
+    graft.Caches.artifact("pq_index", dir)(graft.Caches.scoped { sc =>
       import s.implicits._
-      val (resid, unit) = residualFrame(s, dir)
+      val resid = residualFrame(s, dir, sc)
       val sample = resid.orderBy($"vec_id").limit(PqSample)
         .select($"r").as[Seq[Double]].collect().map(_.toArray)
       val (rot, cb) = opqTrain(sample, PqM, PqK, PqIters, OpqIters)
@@ -1000,10 +990,9 @@ object Similarity {
           transform($"ics", _.getField("vec_id")).as("ids"),
           flatten(transform($"ics", _.getField("codes"))).as("codes"))
         .cache()
-      packed.count() // materialize before dropping the build scaffold
-      unit.unpersist()
+      packed.count() // materialize before the scope drops the unit frame
       (packed, cb, rotRows)
-    }
+    })
 
   /** S4: IVF-PQ approximate top-k — the compressed-index serving path.
     * Per query: probe the nearest clusters by centroid cosine (as s2),
@@ -1313,23 +1302,23 @@ object Similarity {
     val emb = withNorm(Tables.embeddings(s, dir))
     val q = emb.filter($"vec_id" === 0)
       .select($"v".as("qv"), $"nrm".as("qn"))
-    val pool = emb.filter($"vec_id" =!= 0).crossJoin(broadcast(q))
-      .select($"vec_id", $"v", $"nrm",
-        floor(dot($"qv", $"v") / ($"qn" * $"nrm") * 10000)
-          .cast("long").as("rel4"))
-      .orderBy($"rel4".desc, $"vec_id").limit(MmrPool)
-      .cache()
-    val a = pool.select($"vec_id".as("a"), $"v".as("va"), $"nrm".as("na"))
-    val b = pool.select($"vec_id".as("b"), $"v".as("vb"), $"nrm".as("nb"))
-    // pool × pool — C² artifact-sized rows, broadcast nested loop
-    val sims = a.join(broadcast(b), $"a" =!= $"b")
-      .select($"a", $"b",
-        floor(dot($"va", $"vb") / ($"na" * $"nb") * 10000)
-          .cast("long").as("sim4"))
-      .as[(Long, Long, Long)].collect()
-      .map { case (x, y, v) => (x, y) -> v }.toMap
-    val rel = pool.select($"vec_id", $"rel4").as[(Long, Long)].collect().toMap
-    pool.unpersist()
+    val (sims, rel) = graft.Caches.scoped { sc =>
+      val pool = sc.keep(emb.filter($"vec_id" =!= 0).crossJoin(broadcast(q))
+        .select($"vec_id", $"v", $"nrm",
+          floor(dot($"qv", $"v") / ($"qn" * $"nrm") * 10000)
+            .cast("long").as("rel4"))
+        .orderBy($"rel4".desc, $"vec_id").limit(MmrPool))
+      val a = pool.select($"vec_id".as("a"), $"v".as("va"), $"nrm".as("na"))
+      val b = pool.select($"vec_id".as("b"), $"v".as("vb"), $"nrm".as("nb"))
+      // pool × pool — C² artifact-sized rows, broadcast nested loop
+      (a.join(broadcast(b), $"a" =!= $"b")
+        .select($"a", $"b",
+          floor(dot($"va", $"vb") / ($"na" * $"nb") * 10000)
+            .cast("long").as("sim4"))
+        .as[(Long, Long, Long)].collect()
+        .map { case (x, y, v) => (x, y) -> v }.toMap,
+        pool.select($"vec_id", $"rel4").as[(Long, Long)].collect().toMap)
+    }
     mmrGreedy(rel, sims, MmrK, MmrLambda10).toDF("rnk", "vec_id", "rel4", "mmr")
       .orderBy($"rnk")
   }

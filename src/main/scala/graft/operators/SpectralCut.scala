@@ -73,32 +73,32 @@ object SpectralCut {
   private[graft] def spectralCutArtifact(s: SparkSession, dir: String):
       (Map[Long, Int], Long, Long, Long) = graft.Caches.artifact("spectral_cut", dir) {
     import s.implicits._
-    val edges = Graph.copurchaseEdges(s, dir).cache()
-    val l1 = Graph.louvainLabels(s, dir)
-    val le = edges
-      .join(l1.select($"node".as("src"), $"lbl".as("la")), "src")
-      .join(l1.select($"node".as("dst"), $"lbl".as("lb")), "dst")
-      .groupBy($"la", $"lb").agg(count(lit(1)).as("w"))
-      .cache()
-    val cross = le.filter($"la" =!= $"lb")
-      .select($"la".as("src"), $"lb".as("dst"), $"w")
-    val nCross = cross.count()
-    require(nCross > 0,
-      "q104_spectral_cut: the labeling has no cross-community edges — " +
-        "nothing to bisect")
-    // the shared 2²² bar; the power iteration costs PowerIters·|E|
-    // double ops — ~1.3G at the gate, seconds on a driver core
-    require(nCross <= GraphLocal.MaxEdges,
-      s"q104_spectral_cut: $nCross cross edges exceed the " +
-        s"${GraphLocal.MaxEdges} driver gate — run another coarsening " +
-        "level (q102) before the spectral solve, the multilevel remedy")
-    val ce = cross.as[(Long, Long, Long)].collect()
-    // FULL strengths (self term included, the q102 invariant): the
-    // sweep's volume bookkeeping must count intra-community mass so
-    // its conductance IS the base graph's — Σ strength = base |e|
-    val st = le.groupBy($"la".as("node")).agg(sum($"w").as("s"))
-      .as[(Long, Long)].collect().toMap
-    le.unpersist(); edges.unpersist()
+    val (ce, st) = graft.Caches.scoped { sc =>
+      val edges = sc.keep(Graph.copurchaseEdges(s, dir))
+      val l1 = Graph.louvainLabels(s, dir)
+      val le = sc.keep(edges
+        .join(l1.select($"node".as("src"), $"lbl".as("la")), "src")
+        .join(l1.select($"node".as("dst"), $"lbl".as("lb")), "dst")
+        .groupBy($"la", $"lb").agg(count(lit(1)).as("w")))
+      val cross = le.filter($"la" =!= $"lb")
+        .select($"la".as("src"), $"lb".as("dst"), $"w")
+      val nCross = cross.count()
+      require(nCross > 0,
+        "q104_spectral_cut: the labeling has no cross-community edges — " +
+          "nothing to bisect")
+      // the shared 2²² bar; the power iteration costs PowerIters·|E|
+      // double ops — ~1.3G at the gate, seconds on a driver core
+      require(nCross <= GraphLocal.MaxEdges,
+        s"q104_spectral_cut: $nCross cross edges exceed the " +
+          s"${GraphLocal.MaxEdges} driver gate — run another coarsening " +
+          "level (q102) before the spectral solve, the multilevel remedy")
+      // FULL strengths (self term included, the q102 invariant): the
+      // sweep's volume bookkeeping must count intra-community mass so
+      // its conductance IS the base graph's — Σ strength = base |e|
+      (cross.as[(Long, Long, Long)].collect(),
+        le.groupBy($"la".as("node")).agg(sum($"w").as("s"))
+          .as[(Long, Long)].collect().toMap)
+    }
     val (side, cutW, volS, volT) = sweepCut(ce, st)
     (side, cutW, volS, volT)
   }
@@ -196,7 +196,7 @@ object SpectralCut {
   /** Q104 registry surface: every base node's side (0 = sweep prefix,
     * 1 = complement, −1 = isolated community) + its side's size. */
   def q104SpectralCut(s: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("q104_cut", dir) {
+    graft.Caches.memo("q104_cut", dir) { _ =>
       import s.implicits._
       val (side, _, _, _) = spectralCutArtifact(s, dir)
       val l1 = Graph.louvainLabels(s, dir)
@@ -208,5 +208,5 @@ object SpectralCut {
       labeled.join(broadcast(sizes), "side")
         .select($"l_partkey", $"side", $"side_size")
         .orderBy($"l_partkey")
-    }()
+    }
 }

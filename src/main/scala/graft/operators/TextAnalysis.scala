@@ -515,18 +515,12 @@ object TextAnalysis {
   }
 
   /** Memoized t13 pair table (doc_a, doc_b, cosine ≥ τ). */
-  private[graft] def t13PairTable(s: SparkSession, dir: String): DataFrame = {
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    graft.Caches.memo("t13_pairs", dir) {
-      val (pairs, scaf) = tfidfCosinePairs(Tables.documents(s, dir))
-      scaffolding ++= scaf
-      pairs
-    } { scaffolding.foreach(_.unpersist()) }
-  }
+  private[graft] def t13PairTable(s: SparkSession, dir: String): DataFrame =
+    graft.Caches.memo("t13_pairs", dir)(tfidfCosinePairs(Tables.documents(s, dir), _))
 
   /** The t13 build over an arbitrary (doc_id, text) frame, exposed for
-    * the plan audit. Returns (pairs, scaffolding caches to unpersist
-    * once the result is materialized).
+    * the plan audit. Its cached intermediates are kept in `scope`;
+    * close it once the result is materialized.
     *
     * Measured non-move: d2-style exact-duplicate compression (run the
     * join over one rep per byte-identical-text group, expand after)
@@ -537,39 +531,31 @@ object TextAnalysis {
     * at the 20× probe (220→250 s, corpus ~1.4× byte-dup). Revisit only
     * for corpora where exact-dup rate is high AND the verify join
     * dominates. */
-  private[graft] def tfidfCosinePairs(docs: DataFrame)
-      : (DataFrame, Seq[DataFrame]) = {
+  private[graft] def tfidfCosinePairs(docs: DataFrame,
+      scope: graft.Caches.Scope): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     val tau = CosineThreshold
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val tf = docs
+    val tf = scope.keep(docs
       .select($"doc_id", explode(tokens($"text")).as("token"))
       .filter($"token" =!= "")
-      .groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf"))
-      .cache()
-    scaffolding += tf
+      .groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf")))
     val dfq = tf.groupBy($"token").agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val kept = dfq.join(broadcast(nDocs))
       .filter($"df" * 10 <= $"n_docs")
-    val dict = kept
+    val dict = scope.keep(kept
       .repartitionByRange(s.sessionState.conf.numShufflePartitions,
         $"df", $"token")
       .sortWithinPartitions($"df", $"token")
-      .select($"token", $"df", monotonically_increasing_id().as("tid"))
-      .cache()
-    scaffolding += dict
-    val rows = tf.join(dict, "token").join(broadcast(nDocs))
+      .select($"token", $"df", monotonically_increasing_id().as("tid")))
+    val rows = scope.keep(tf.join(dict, "token").join(broadcast(nDocs))
       .select($"doc_id", $"tid",
         floor($"tf" * log($"n_docs".cast("double") / $"df") * 1000)
           .cast("long").as("wq"))
-      .filter($"wq" > 0)
-      .cache()
-    scaffolding += rows
-    val norms = rows.groupBy($"doc_id").agg(sum($"wq" * $"wq").as("n2"))
-      .cache()
-    scaffolding += norms
+      .filter($"wq" > 0))
+    val norms = scope.keep(
+      rows.groupBy($"doc_id").agg(sum($"wq" * $"wq").as("n2")))
     val maxw = rows.join(norms, "doc_id")
       .select($"tid", ($"wq" / sqrt($"n2".cast("double"))).as("nw"))
       .groupBy($"tid").agg(max($"nw").as("mw"))
@@ -580,14 +566,12 @@ object TextAnalysis {
     val scored = rows.join(norms, "doc_id").join(maxw, "tid")
       .withColumn("ceil_mass",
         sum(($"wq" / sqrt($"n2".cast("double"))) * $"mw").over(wSuf))
-    val docsArr = rows
+    val docsArr = scope.keep(rows
       .groupBy($"doc_id")
       .agg(array_sort(collect_list(struct($"tid", $"wq"))).as("kv"))
       .select($"doc_id",
         transform($"kv", x => x.getField("tid")).as("ks"),
-        transform($"kv", x => x.getField("wq")).as("vs"))
-      .cache()
-    scaffolding += docsArr
+        transform($"kv", x => x.getField("wq")).as("vs")))
     val idx = scored.filter($"ceil_mass" >= tau - 1e-9)
       .select($"doc_id", $"tid")
     val full = rows.select($"doc_id", $"tid")
@@ -595,7 +579,7 @@ object TextAnalysis {
         $"x.tid" === $"y.tid" && $"x.doc_id" < $"y.doc_id")
       .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b"))
       .distinct()
-    val pairs = cands
+    cands
       .join(docsArr.select($"doc_id".as("doc_a"), $"ks".as("ka"), $"vs".as("va")), "doc_a")
       .join(docsArr.select($"doc_id".as("doc_b"), $"ks".as("kb"), $"vs".as("vb")), "doc_b")
       .join(norms.select($"doc_id".as("doc_a"), $"n2".as("n2a")), "doc_a")
@@ -607,7 +591,6 @@ object TextAnalysis {
           (sqrt($"n2a".cast("double")) * sqrt($"n2b".cast("double"))) *
           10000) / 10000.0).as("cosine"))
       .filter($"cosine" >= tau)
-    (pairs, scaffolding.toSeq)
   }
 
   // t14 code-detect — the regex subset that compiles identically
@@ -693,11 +676,11 @@ object TextAnalysis {
     // a doc-cardinality join (guide §2.3/§2.4). Values identical:
     // shingles are distinct per doc, so the old per-row sum(when
     // first=doc) counts exactly the min-holder shingles.
-    val sh = graft.Caches.memo("t16_shingles", dir) {
+    val sh = graft.Caches.memo("t16_shingles", dir) { _ =>
       Tables.documents(s, dir)
         .select($"doc_id", tokens($"text").as("w"))
         .select($"doc_id", explode(shinglesFromTokens($"w", 3)).as("shingle"))
-    }()
+    }
     val novel = sh.groupBy($"shingle").agg(min($"doc_id").as("first_doc"))
       .groupBy($"first_doc").agg(count(lit(1)).as("n_novel"))
     sh.groupBy($"doc_id").agg(count(lit(1)).as("n_shingles"))

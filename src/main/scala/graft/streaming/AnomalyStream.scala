@@ -123,32 +123,32 @@ object AnomalyStream {
       checkpoint: String): StreamingQuery =
     hourlyCounts(events).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val stats = readStats(spark, statsDir).cache()
-        val already = stats.agg(coalesce(max($"last_batch"), lit(-1L)))
-          .as[Long].head() >= batchId
-        if (!already) {
-          val (alerts, folded) = scoreBatch(batch, stats)
-          // per-batch directory + overwrite = replay writes identical
-          // bytes; new IDs only ever extend the directory set
-          alerts.coalesce(1).write.mode("overwrite")
-            .parquet(s"$alertDir/batch-$batchId")
-          // versioned promotion: overwrite-write v-<batchId> (replay
-          // rewrites identical bytes — idempotent), whose _SUCCESS
-          // marker IS the atomic promotion; then prune superseded
-          // versions (a crash mid-prune is harmless — readers always
-          // pick the highest complete version)
-          folded.withColumn("last_batch", lit(batchId))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$statsDir/v-$batchId")
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
+        graft.Caches.scoped { sc =>
+          val spark = batch.sparkSession
+          import spark.implicits._
+          val stats = sc.keep(readStats(spark, statsDir))
+          val already = stats.agg(coalesce(max($"last_batch"), lit(-1L)))
+            .as[Long].head() >= batchId
+          if (!already) {
+            val (alerts, folded) = scoreBatch(batch, stats)
+            // per-batch directory + overwrite = replay writes identical
+            // bytes; new IDs only ever extend the directory set
+            alerts.coalesce(1).write.mode("overwrite")
+              .parquet(s"$alertDir/batch-$batchId")
+            // versioned promotion: overwrite-write v-<batchId> (replay
+            // rewrites identical bytes — idempotent), whose _SUCCESS
+            // marker IS the atomic promotion; then prune superseded
+            // versions (a crash mid-prune is harmless — readers always
+            // pick the highest complete version)
+            folded.withColumn("last_batch", lit(batchId))
+              .coalesce(1).write.mode("overwrite")
+              .parquet(s"$statsDir/v-$batchId")
+            def rm(f: java.io.File): Unit = {
+              Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
+            }
+            statsVersions(statsDir).filter(_._1 < batchId).foreach(v => rm(v._2))
           }
-          statsVersions(statsDir).filter(_._1 < batchId).foreach(v => rm(v._2))
         }
-        stats.unpersist()
-        ()
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())

@@ -113,8 +113,8 @@ object CdcStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
-        val delta = batch.withColumn("__bucket", bucketOf(key, nBuckets)).cache()
-        try {
+        graft.Caches.scoped { sc =>
+          val delta = sc.keep(batch.withColumn("__bucket", bucketOf(key, nBuckets)))
           val touched = delta.select($"__bucket").distinct()
             .collect().map(_.getInt(0)).toSeq // ≤ nBuckets ids, a bounded artifact
           if (touched.nonEmpty) {
@@ -125,7 +125,7 @@ object CdcStream {
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("__bucket").parquet(baseDir)
           }
-        } finally delta.unpersist()
+        }
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())

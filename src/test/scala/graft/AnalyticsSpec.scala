@@ -144,7 +144,7 @@ class AnalyticsSpec extends GraftSpecBase {
   test("q49: distributed rfm tiles equal single-window ntile exactly") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    // the whole point of withGlobalRank is replacing the
+    // the whole point of ntileBoundaries is replacing the
     // single-partition ntile window WITHOUT changing one tile
     val got = operators.Analytics.q49Rfm(spark, sf)
       .select($"o_custkey", $"rfm_segment").as[(Long, String)].collect().toMap

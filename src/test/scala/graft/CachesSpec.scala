@@ -14,10 +14,10 @@ class CachesSpec extends GraftSpecBase {
 
   test("an artifact survives clear(); a memo does not") {
     val a = Caches.artifact("cs_keep", "x")(frame(1).cache())
-    val m = Caches.memo("cs_sweep", "x")(frame(2))()
+    val m = Caches.memo("cs_sweep", "x")(_ => frame(2))
     Caches.clear()
     assert(Caches.artifact("cs_keep", "x")(frame(3)) eq a)
-    assert(!(Caches.memo("cs_sweep", "x")(frame(4))() eq m))
+    assert(!(Caches.memo("cs_sweep", "x")(_ => frame(4)) eq m))
     assert(m.storageLevel == StorageLevel.NONE, "clear() must unpersist the memo")
     Caches.clear()
     Caches.evict("cs_keep", "x")
@@ -62,7 +62,7 @@ class CachesSpec extends GraftSpecBase {
   test("a throwing artifact build leaves no entry and no orphaned timing frame") {
     Caches.drainBuildLog()
     val t0 = System.nanoTime()
-    Caches.memo("cs_catches", "x") {
+    Caches.memo("cs_catches", "x") { _ =>
       intercept[RuntimeException] {
         Caches.artifact[Int]("cs_boom", "x") {
           Thread.sleep(100)
@@ -70,7 +70,7 @@ class CachesSpec extends GraftSpecBase {
         }
       }
       frame(1)
-    }()
+    }
     val wall = (System.nanoTime() - t0) / 1e9
     // the failed build logs nothing, and its frame is popped: the
     // outer build's own frame takes the failed child's wall (an
@@ -80,7 +80,7 @@ class CachesSpec extends GraftSpecBase {
     assert(logged.head._2 < wall - 0.09, s"ledger: $logged, wall $wall")
     // no entry: the next call runs its build
     assert(Caches.artifact("cs_boom", "x")(7) == 7)
-    Caches.memo("cs_after", "x")(frame(2))()
+    Caches.memo("cs_after", "x")(_ => frame(2))
     assert(Caches.drainBuildLog().map(_._1) == Seq("cs_boom", "cs_after"))
     Caches.evict("cs_boom", "x")
     Caches.clear()
@@ -89,11 +89,11 @@ class CachesSpec extends GraftSpecBase {
   test("an artifact built inside a memo build: exclusive seconds sum to the outer wall") {
     Caches.drainBuildLog()
     val t0 = System.nanoTime()
-    Caches.memo("cs_outer", "x") {
+    Caches.memo("cs_outer", "x") { _ =>
       Thread.sleep(50)
       Caches.artifact("cs_inner", "x") { Thread.sleep(100); 1 }
       frame(1)
-    }()
+    }
     val wall = (System.nanoTime() - t0) / 1e9
     val logged = Caches.drainBuildLog()
     assert(logged.map(_._1) == Seq("cs_inner", "cs_outer"), s"ledger: $logged")
@@ -105,5 +105,67 @@ class CachesSpec extends GraftSpecBase {
     assert(sum <= wall && sum > wall - 0.05, s"exclusive sum $sum vs wall $wall")
     Caches.evict("cs_inner", "x")
     Caches.clear()
+  }
+
+  test("a memo build releases its kept frames once the result is cached") {
+    var kept: org.apache.spark.sql.DataFrame = null
+    val m = Caches.memo("cs_scope", "x") { scope =>
+      kept = scope.keep(frame(5))
+      kept.select(kept("v") + 1)
+    }
+    assert(kept.storageLevel == StorageLevel.NONE, "the kept frame outlived the build")
+    assert(m.storageLevel != StorageLevel.NONE, "the result must stay cached")
+    assert(m.head().getLong(0) == 6L)
+    Caches.clear()
+    Caches.drainBuildLog()
+  }
+
+  test("a throwing memo or scoped body releases its kept frames and rethrows") {
+    var inMemo: org.apache.spark.sql.DataFrame = null
+    val e1 = intercept[IllegalStateException] {
+      Caches.memo("cs_scope_boom", "x") { scope =>
+        inMemo = scope.keep(frame(1))
+        inMemo.count()
+        throw new IllegalStateException("memo boom")
+      }
+    }
+    assert(e1.getMessage == "memo boom")
+    assert(inMemo.storageLevel == StorageLevel.NONE)
+    var inScoped: org.apache.spark.sql.DataFrame = null
+    val e2 = intercept[IllegalStateException] {
+      Caches.scoped { scope =>
+        inScoped = scope.keep(frame(2))
+        inScoped.count()
+        throw new IllegalStateException("scoped boom")
+      }
+    }
+    assert(e2.getMessage == "scoped boom")
+    assert(inScoped.storageLevel == StorageLevel.NONE)
+    // the failed memo left no entry: the next call builds
+    assert(Caches.memo("cs_scope_boom", "x")(_ => frame(3)).head().getLong(0) == 3L)
+    Caches.clear()
+    Caches.drainBuildLog()
+  }
+
+  test("frames kept from three threads at once are all released") {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    implicit val ec: scala.concurrent.ExecutionContextExecutorService =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(3)
+      val kept = Caches.scoped { scope =>
+        val frames = scala.concurrent.Await.result(
+          scala.concurrent.Future.sequence((1 to 3).map { i =>
+            scala.concurrent.Future {
+              start.countDown(); start.await()
+              (0 until 20).map(j => scope.keep(frame(i * 100L + j)))
+            }
+          }), scala.concurrent.duration.Duration.Inf).flatten
+        frames.foreach(df => assert(df.storageLevel != StorageLevel.NONE))
+        frames
+      }
+      assert(kept.size == 60)
+      kept.foreach(df => assert(df.storageLevel == StorageLevel.NONE))
+    } finally pool.shutdownNow()
   }
 }

@@ -107,4 +107,34 @@ class GlobalSwitchSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
   }
+
+  // a build's intermediates are kept in a `Caches.Scope`, which
+  // releases them on success and on failure; a hand-kept list or a
+  // straight-line unpersist leaks the frames when the kernel throws
+  private val FrameList = """ListBuffer(\.empty)?\[[\w.]*DataFrame\]""".r
+
+  // the `unpersist(` lines a Scope cannot own, each with its reason
+  private val UnpersistAllowed = Map(
+    ("operators/Layout.scala", "} finally rdd.unpersist(false)") ->
+      "compactFrame persists an RDD, not a DataFrame, across its two passes")
+
+  test("cached intermediates are released through a Caches scope") {
+    val lists = for {
+      f <- sources("")
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if FrameList.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(lists.isEmpty, lists.mkString("\n", "\n", ""))
+    val root = Paths.get("src/main/scala/graft")
+    val hits = for {
+      f <- Seq("operators", "ml", "multimodal", "streaming").flatMap(sources)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("unpersist(")
+    } yield (root.relativize(f).toString, line.trim, i + 1)
+    val offending = hits.filterNot(h => UnpersistAllowed.contains((h._1, h._2)))
+    assert(offending.isEmpty,
+      offending.map(h => s"${h._1}:${h._3}: ${h._2}").mkString("\n", "\n", ""))
+    val stale = UnpersistAllowed.keySet -- hits.map(h => (h._1, h._2))
+    assert(stale.isEmpty, s"allow-list entries that match no line: $stale")
+  }
 }

@@ -118,12 +118,11 @@ class PlanAuditSpec extends GraftSpecBase {
     // the shingle-dictionary id assignment must never funnel the
     // vocabulary through one task — a partitionBy-less window would
     // plan an `Exchange SinglePartition` here and OOM at corpus scale
-    val (pairs, scaffolding) = operators.Dedup.ngramJaccardPairs(
-      Tables.documents(spark, sf))
-    try {
-      val p = plan(pairs)
+    Caches.scoped { scope =>
+      val p = plan(operators.Dedup.ngramJaccardPairs(
+        Tables.documents(spark, sf), scope))
       assert(!p.contains("SinglePartition"), p)
-    } finally scaffolding.foreach(_.unpersist())
+    }
   }
 
   test("t7: corpus top-50 plans as TakeOrderedAndProject over a partial agg") {
@@ -396,10 +395,9 @@ class PlanAuditSpec extends GraftSpecBase {
   }
 
   test("t13: prefix-filtered pair build — sorted_dot verify, distributed dict, no data-sized funnel") {
-    val (pairs, scaffolding) = operators.TextAnalysis.tfidfCosinePairs(
-      Tables.documents(spark, sf))
-    try {
-      val p = plan(pairs)
+    Caches.scoped { scope =>
+      val p = plan(operators.TextAnalysis.tfidfCosinePairs(
+        Tables.documents(spark, sf), scope))
       assert(p.contains("sorted_dot"), p) // verify is the codegen merge
       assert(!p.contains("CartesianProduct"), p)
       // dict ids assigned under range partitioning (d2's distributed
@@ -414,7 +412,7 @@ class PlanAuditSpec extends GraftSpecBase {
           assert(lines(i - 1).matches(".*\\[count#\\d+L\\].*"),
             s"non-count SinglePartition exchange:\n${lines.slice(i - 3, i + 1).mkString("\n")}")
       }
-    } finally scaffolding.foreach(_.unpersist())
+    }
   }
 
   test("q87: part-count joins broadcast, top-25 is TakeOrdered, no cartesian") {

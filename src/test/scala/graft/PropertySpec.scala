@@ -129,22 +129,21 @@ class PropertySpec extends GraftSpecBase {
     shapes.foreach { n =>
       val data = (1L to n.toLong).map(k => (rnd.nextInt(7).toLong, k))
       val df = data.toDF("v", "key")
-      val scaff = scala.collection.mutable.ListBuffer
-        .empty[org.apache.spark.sql.DataFrame]
-      val bs = operators.Analytics.ntileBoundaries(df, 4, scaff,
-        $"v", $"key")
-      val got = df.select($"v", $"key",
-        bs.map { b =>
-          when($"v" > lit(b.getLong(0)) ||
-            ($"v" === lit(b.getLong(0)) && $"key" > lit(b.getLong(1))),
-            1L).otherwise(0L)
-        }.foldLeft(lit(1L))(_ + _).as("got"))
-      val mismatch = got
-        .withColumn("want",
-          ntile(4).over(Window.orderBy($"v", $"key")).cast("long"))
-        .filter($"got" =!= $"want")
-      assert(mismatch.count() == 0, s"N=$n")
-      scaff.foreach(_.unpersist())
+      Caches.scoped { scope =>
+        val bs = operators.Analytics.ntileBoundaries(df, 4, scope,
+          $"v", $"key")
+        val got = df.select($"v", $"key",
+          bs.map { b =>
+            when($"v" > lit(b.getLong(0)) ||
+              ($"v" === lit(b.getLong(0)) && $"key" > lit(b.getLong(1))),
+              1L).otherwise(0L)
+          }.foldLeft(lit(1L))(_ + _).as("got"))
+        val mismatch = got
+          .withColumn("want",
+            ntile(4).over(Window.orderBy($"v", $"key")).cast("long"))
+          .filter($"got" =!= $"want")
+        assert(mismatch.count() == 0, s"N=$n")
+      }
     }
   }
 
@@ -158,36 +157,35 @@ class PropertySpec extends GraftSpecBase {
     Seq(3, 4, 9, 120, 400).foreach { n =>
       val df = (1L to n.toLong).map(k => (rnd.nextInt(5).toLong, k))
         .toDF("v", "key")
-      val scaff = scala.collection.mutable.ListBuffer
-        .empty[org.apache.spark.sql.DataFrame]
-      val bs = operators.Analytics.ntileBoundaries(df, 4, scaff,
-        $"v".desc, $"key")
-      val got = bs.map { b =>
-        when($"v" < lit(b.getLong(0)) ||
-          ($"v" === lit(b.getLong(0)) && $"key" > lit(b.getLong(1))),
-          1L).otherwise(0L)
-      }.foldLeft(lit(1L))(_ + _)
-      val mismatch = df
-        .withColumn("got", got)
-        .withColumn("want",
-          ntile(4).over(Window.orderBy($"v".desc, $"key")).cast("long"))
-        .filter($"got" =!= $"want")
-      assert(mismatch.count() == 0, s"N=$n")
-      scaff.foreach(_.unpersist())
+      Caches.scoped { scope =>
+        val bs = operators.Analytics.ntileBoundaries(df, 4, scope,
+          $"v".desc, $"key")
+        val got = bs.map { b =>
+          when($"v" < lit(b.getLong(0)) ||
+            ($"v" === lit(b.getLong(0)) && $"key" > lit(b.getLong(1))),
+            1L).otherwise(0L)
+        }.foldLeft(lit(1L))(_ + _)
+        val mismatch = df
+          .withColumn("got", got)
+          .withColumn("want",
+            ntile(4).over(Window.orderBy($"v".desc, $"key")).cast("long"))
+          .filter($"got" =!= $"want")
+        assert(mismatch.count() == 0, s"N=$n")
+      }
     }
   }
 
   test("ntileBoundaries: k = 1 has no boundaries, k < 1 is rejected") {
     import spark.implicits._
     val df = Seq((1L, 1L), (2L, 2L), (2L, 3L)).toDF("v", "key")
-    val scaff = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.sql.DataFrame]
-    assert(operators.Analytics.ntileBoundaries(df, 1, scaff, $"v", $"key")
-      .isEmpty)
-    intercept[IllegalArgumentException] {
-      operators.Analytics.ntileBoundaries(df, 0, scaff, $"v", $"key")
+    Caches.scoped { scope =>
+      assert(operators.Analytics.ntileBoundaries(df, 1, scope, $"v", $"key")
+        .isEmpty)
+      intercept[IllegalArgumentException] {
+        operators.Analytics.ntileBoundaries(df, 0, scope, $"v", $"key")
+      }
+      assert(scope.isEmpty, "k < 2 must not cache anything")
     }
-    assert(scaff.isEmpty, "k < 2 must not cache anything")
   }
 
   test("tileOf equals window ntile for random sizes and bucket counts") {

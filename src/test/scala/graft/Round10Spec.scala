@@ -23,35 +23,29 @@ class Round10Spec extends GraftSpecBase {
       (1L to 13L).map(i => ("tiny", i))
     )
     val df = scala.util.Random.shuffle(rows).toDF("g", "k")
-    val scaffolding = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.sql.DataFrame]
-    val got = operators.Analytics
-      .withGroupRank(df, "g", "rnk", scaffolding, $"k")
+    val got = Caches.scoped(operators.Analytics
+      .withGroupRank(df, "g", "rnk", _, $"k")
       .select($"g", $"k", $"rnk")
-      .as[(String, Long, Long)].collect().toSet
+      .as[(String, Long, Long)].collect().toSet)
     val want = rows.groupBy(_._1).flatMap { case (g, rs) =>
       rs.map(_._2).sorted.zipWithIndex.map { case (k, i) =>
         (g, k, i + 1L) }
     }.toSet
     assert(got == want,
       s"diff: ${(got -- want).take(3)} / ${(want -- got).take(3)}")
-    scaffolding.foreach(_.unpersist())
   }
 
   test("withGroupRank: descending sort and multi-column tie-break orders") {
     val rows = Seq(("a", 3L, 1L), ("a", 3L, 2L), ("a", 1L, 9L),
       ("b", 5L, 5L), ("b", 5L, 4L))
     val df = rows.toDF("g", "x", "y")
-    val scaffolding = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.sql.DataFrame]
-    val got = operators.Analytics
-      .withGroupRank(df, "g", "rnk", scaffolding, $"x".desc, $"y")
+    val got = Caches.scoped(operators.Analytics
+      .withGroupRank(df, "g", "rnk", _, $"x".desc, $"y")
       .select($"g", $"x", $"y", $"rnk")
-      .as[(String, Long, Long, Long)].collect().toSet
+      .as[(String, Long, Long, Long)].collect().toSet)
     val want = Set(("a", 3L, 1L, 1L), ("a", 3L, 2L, 2L), ("a", 1L, 9L, 3L),
       ("b", 5L, 4L, 1L), ("b", 5L, 5L, 2L))
     assert(got == want, got)
-    scaffolding.foreach(_.unpersist())
   }
 
   // ------------- p16 reshape -------------

@@ -153,8 +153,8 @@ class Round11Spec extends GraftSpecBase {
     assert(cos(vecs(4)._2, vecs(6)._2) < 0.5, "chain must not be a clique")
     val assigned = vecs.toDF("vec_id", "v", "cluster")
     val centers = Array(c0.toArray, c1.toArray)
-    val got = Similarity.semDedupCore(assigned, centers, 0.5)
-      .as[(Long, Int, Long, Boolean)].collect().toSeq
+    val got = Caches.scoped(Similarity.semDedupCore(assigned, centers, 0.5, _)
+      .as[(Long, Int, Long, Boolean)].collect().toSeq)
     // local replay of the published rule
     val simq = vecs.map { case (id, v, c) =>
       id -> math.floor(cos(v, Seq(c0, c1)(c).map(identity)) * 1e6).toLong }.toMap

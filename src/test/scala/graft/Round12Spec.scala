@@ -206,9 +206,9 @@ class Round12Spec extends GraftSpecBase {
     val centers = Array(Array(1.0, 0.4, 0.2), Array(-1.0, 0.3, 0.1))
     val assigned = rows.map { case (id, v, c) => (id, v.toSeq, c) }
       .toDF("vec_id", "v", "cluster")
-    val got = operators.Similarity
-      .semDedupCore(assigned, centers, operators.Similarity.SemDedupTau)
-      .select($"vec_id", $"dropped").as[(Long, Boolean)].collect().toMap
+    val got = Caches.scoped(operators.Similarity
+      .semDedupCore(assigned, centers, operators.Similarity.SemDedupTau, _)
+      .select($"vec_id", $"dropped").as[(Long, Boolean)].collect().toMap)
     val want = localSemDedup(rows, centers, operators.Similarity.SemDedupTau)
     assert(got == want,
       s"diverged at ${got.keys.filter(k => got(k) != want(k)).toSeq.sorted.take(5)}")
@@ -227,9 +227,9 @@ class Round12Spec extends GraftSpecBase {
     val rows = (1L to 20L).map(i => (i, Seq(i.toDouble, 1.0), 0))
     val assigned = rows.toDF("vec_id", "v", "cluster")
     val e = intercept[IllegalStateException] {
-      operators.Similarity.semDedupCore(assigned,
-        Array(Array(1.0, 0.0)), operators.Similarity.SemDedupTau, cap = 10)
-        .collect()
+      Caches.scoped(operators.Similarity.semDedupCore(assigned,
+        Array(Array(1.0, 0.0)), operators.Similarity.SemDedupTau, _, cap = 10)
+        .collect())
     }
     assert(e.getMessage.contains("re-cluster"), s"unhelpful message: ${e.getMessage}")
   }

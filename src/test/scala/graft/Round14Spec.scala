@@ -380,16 +380,19 @@ class Round14Spec extends GraftSpecBase {
 
   test("memo: a throwing build leaves no orphaned timing frame behind") {
     Caches.drainBuildLog()
-    var cleaned = false
+    var kept: org.apache.spark.sql.DataFrame = null
     intercept[RuntimeException] {
-      Caches.memo("r14_boom", "x")(
-        throw new RuntimeException("boom"))({ cleaned = true })
+      Caches.memo("r14_boom", "x") { scope =>
+        kept = scope.keep(Seq(1L).toDF("v"))
+        throw new RuntimeException("boom")
+      }
     }
-    assert(cleaned, "a throwing build must still run its cleanup")
+    assert(kept.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "a throwing build must still release its kept frame")
     // a later successful build on the same thread must log its own
     // wall time normally (the leaked-frame failure mode would feed it
     // into the orphan instead)
-    Caches.memo("r14_ok", "x")(Seq(1L).toDF("v"))()
+    Caches.memo("r14_ok", "x")(_ => Seq(1L).toDF("v"))
     val logged = Caches.drainBuildLog()
     assert(logged.map(_._1) == Seq("r14_ok"), s"ledger: $logged")
     Caches.clear()

@@ -330,10 +330,8 @@ class Round6OpsSpec extends GraftSpecBase {
   }
 
   test("d9: the scan-side might_contain filter sits below the exact join in the plan") {
-    val scaffolding = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
-    val p = try operators.Dedup.d9Build(spark, sf, scaffolding)
-      .queryExecution.executedPlan.toString
-    finally scaffolding.foreach(_.unpersist())
+    val p = Caches.scoped(operators.Dedup.d9Build(spark, sf, _)
+      .queryExecution.executedPlan.toString)
     // the blob rides as a constant literal into the scan-side Filter
     // (might_contain's required form), so survivors are pruned BEFORE
     // any exchange of the corpus shingles

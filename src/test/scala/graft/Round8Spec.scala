@@ -706,11 +706,9 @@ class Round8Spec extends GraftSpecBase {
       val docs = ws.zipWithIndex
         .map { case (w, i) => (i.toLong, "en", w) }
         .toDF("doc_id", "lang", "w")
-      val scaffolding = collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
-      val got = operators.Sampling.p13Kernel(docs, stride, scaffolding)
+      val got = Caches.scoped(operators.Sampling.p13Kernel(docs, stride, _)
         .select($"doc_id", $"copies").as[(Long, Long)]
-        .collect().toSeq.sorted
-      scaffolding.foreach(_.unpersist())
+        .collect().toSeq.sorted)
       assert(got == localP13(ws, stride),
         s"weights $ws stride $stride: got $got want ${localP13(ws, stride)}")
     }
