@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** The one store for derived artifacts, keyed by (artifact key,
   * dataset dir). Each key belongs to one module, which builds it in
@@ -27,8 +28,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * and the scope unpersists everything it kept when it closes:
   *
   *  - `memo(key, dir) { scope => ... }` closes its scope once the
-  *    built frame is cached and counted, so executor storage holds the
-  *    artifact, not every intermediate that produced it;
+  *    built frame is cached and counted (a frame of driver-local rows
+  *    is stored uncached), so executor storage holds the artifact, not
+  *    every intermediate that produced it;
   *  - `scoped { scope => ... }` closes when its body returns, for
   *    kernels outside a memo. Put the block's end where the
   *    intermediates are last read: a lazy result that still reads a
@@ -159,18 +161,34 @@ object Caches {
     v
   }
 
-  /** Memoized cached frame for (op key, dataset dir), sweep lifetime.
+  /** Memoized frame for (op key, dataset dir), sweep lifetime.
     * `build` runs at most once per key; its scope closes after the
     * result is cached and materialized, so no kept intermediate is
-    * recomputed by a later read of the artifact. */
+    * recomputed by a later read of the artifact. A result that plans
+    * to rows already on the driver (a `LocalRelation`, e.g. a local
+    * endgame's `toDF(...).orderBy(...)`) reads none of them and is
+    * stored as it is: caching and counting it would only add jobs. */
   def memo(key: String, dir: String)(build: Scope => DataFrame): DataFrame =
     sweep.getOrElseUpdate((key, dir), timed(key) {
       scoped { scope =>
-        val d = build(scope).cache()
-        d.count() // materialize before the scope releases what it read
+        val d = build(scope)
+        if (!isLocal(d)) {
+          d.cache()
+          d.count() // materialize before the scope releases what it read
+        }
         d
       }
     }).asInstanceOf[DataFrame]
+
+  /** True when `df` optimizes to a `LocalRelation`. Only a plan whose
+    * leaves are all local can, and it is optimized on a fresh
+    * `QueryExecution`: optimizing `df`'s own would fix its plan before
+    * `cache()` could substitute the cached relation into it. */
+  private def isLocal(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.analyzed
+    plan.collectLeaves().forall(_.isInstanceOf[LocalRelation]) &&
+      df.sparkSession.sessionState.executePlan(plan).optimizedPlan.isInstanceOf[LocalRelation]
+  }
 
   /** Memoized DRIVER-SIDE object for (op key, dataset dir), sweep
     * lifetime — e.g. the local-endgame family's collected pair list

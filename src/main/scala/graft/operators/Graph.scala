@@ -1859,7 +1859,9 @@ object Graph {
       labels: DataFrame): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val e = edges.cache()
+    // materialized once for the count and both aggregates; unlike a
+    // cache, the checkpoint is freed once the lazy result is dropped
+    val e = edges.localCheckpoint(eager = true)
     val m2 = e.count() // |e| = 2m: one scalar, the only driver value
     val lab = labels.select($"node", $"lbl")
     val degc = e.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))

@@ -84,6 +84,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     })
     register("max_run_length", classOf[MaxRunLength], c => MaxRunLength(c.head))
     ext.injectOptimizerRule(_ => FuseArrayDot)
+    ext.injectOptimizerRule(_ => SortLocalRelation)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }
 }

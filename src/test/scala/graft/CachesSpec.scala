@@ -14,7 +14,9 @@ class CachesSpec extends GraftSpecBase {
 
   test("an artifact survives clear(); a memo does not") {
     val a = Caches.artifact("cs_keep", "x")(frame(1).cache())
-    val m = Caches.memo("cs_sweep", "x")(_ => frame(2))
+    // a distributed frame: a local one is memoized uncached
+    val m = Caches.memo("cs_sweep", "x")(_ => spark.range(2).toDF("v"))
+    assert(m.storageLevel != StorageLevel.NONE, "the memo must be cached")
     Caches.clear()
     assert(Caches.artifact("cs_keep", "x")(frame(3)) eq a)
     assert(!(Caches.memo("cs_sweep", "x")(_ => frame(4)) eq m))
@@ -116,6 +118,19 @@ class CachesSpec extends GraftSpecBase {
     assert(kept.storageLevel == StorageLevel.NONE, "the kept frame outlived the build")
     assert(m.storageLevel != StorageLevel.NONE, "the result must stay cached")
     assert(m.head().getLong(0) == 6L)
+    Caches.clear()
+    Caches.drainBuildLog()
+  }
+
+  test("a memo of driver-local rows launches no job, is not cached, and returns the same rows") {
+    import spark.implicits._
+    def rows = Seq((3L, "c"), (1L, "a"), (2L, "b")).toDF("v", "s").orderBy($"v".desc)
+    var m: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { m = Caches.memo("cs_local", "x")(_ => rows) } == 0)
+    assert(m.storageLevel == StorageLevel.NONE, "a local memo was cached")
+    assert(Caches.memo("cs_local", "x")(_ => frame(9)) eq m, "the memo was not kept")
+    assert(m.collect().toSeq == rows.collect().toSeq)
+    assert(m.as[(Long, String)].collect().toSeq == Seq((3L, "c"), (2L, "b"), (1L, "a")))
     Caches.clear()
     Caches.drainBuildLog()
   }

@@ -137,4 +137,47 @@ class GlobalSwitchSpec extends AnyFunSuite {
     val stale = UnpersistAllowed.keySet -- hits.map(h => (h._1, h._2))
     assert(stale.isEmpty, s"allow-list entries that match no line: $stale")
   }
+
+  // a raw `.cache()` has no owner that releases it: a build's
+  // intermediates go through `Scope.keep`, a loop state through
+  // `localCheckpoint`. What is left are the frames a session artifact
+  // returns, which `Caches.evict` unpersists; each may match one line.
+  private val CacheAllowed = Map(
+    ("operators/Similarity.scala",
+      "val base = assigned.withColumn(\"nrm\", sqrt(dot($\"v\", $\"v\"))).cache()") ->
+      "d5_index artifact: the normed IVF assignment it returns",
+    ("operators/Similarity.scala",
+      "val assigned = model.transform(emb).select($\"vec_id\", $\"v\", $\"cluster\").cache()") ->
+      "ivf artifact: the IVF cluster assignment",
+    ("operators/Similarity.scala", ".parquet(new java.io.File(root, \"edges\").getPath).cache()") ->
+      "knn_graph artifact: s15's adjacency read back from its on-disk index",
+    ("operators/Similarity.scala", ".cache()") ->
+      "pq_index artifact: the packed PQ code blocks",
+    ("operators/Dedup.scala",
+      "val docIdx = s.read.parquet(new java.io.File(root, \"sigs\").getPath).cache()") ->
+      "d11 index artifact: the signature table read back from disk",
+    ("operators/Dedup.scala", ".select($\"old_id\", $\"band\", $\"bh\").cache()") ->
+      "d11 index artifact: the band postings read back from disk",
+    ("ml/Recommender.scala",
+      "val assigned = km.transform(factors).select($\"id\", $\"v\", $\"nrm\", $\"cluster\").cache()") ->
+      "item_ivf artifact: the ALS factors' cluster assignment",
+    ("ml/Recommender.scala", ".cache()") ->
+      "item_packed artifact: the packed inverted lists dot_topk scans")
+
+  test("raw caches are session artifacts on the allow-list") {
+    val root = Paths.get("src/main/scala/graft")
+    val hits = for {
+      f <- Seq("operators", "ml", "multimodal", "streaming").flatMap(sources)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains(".cache()")
+    } yield (root.relativize(f).toString, line.trim, i + 1)
+    val byKey = hits.groupBy(h => (h._1, h._2))
+    val offending = byKey.collect {
+      case (k, hs) if !CacheAllowed.contains(k) || hs.size > 1 => hs
+    }.flatten.toSeq.sortBy(h => (h._1, h._3))
+    assert(offending.isEmpty,
+      offending.map(h => s"${h._1}:${h._3}: ${h._2}").mkString("\n", "\n", ""))
+    val stale = CacheAllowed.keySet -- byKey.keySet
+    assert(stale.isEmpty, s"allow-list entries that match no line: $stale")
+  }
 }

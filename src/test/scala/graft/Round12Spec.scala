@@ -344,6 +344,39 @@ class Round12Spec extends GraftSpecBase {
       (20L, 3L, 6L, 6L, 12L, 36L)), s"got $rows")
   }
 
+  test("q100: the kernel's materialized edges are freed once its result is dropped") {
+    val sc = spark.sparkContext
+    // clear the sweep memos, collect garbage and read the persisted
+    // RDDs until two reads agree (other specs' checkpoints may still be
+    // waiting for a GC)
+    def settled(): Int = {
+      var last = -1
+      var now = sc.getPersistentRDDs.size
+      var tries = 0
+      while (now != last && tries < 20) {
+        Caches.clear(); System.gc(); Thread.sleep(200)
+        last = now; now = sc.getPersistentRDDs.size; tries += 1
+      }
+      now
+    }
+    val base = settled()
+    // the two-triangle handcheck above (Q = 1/2) on other node ids, so
+    // no plan an earlier case cached can serve it, built in a method so
+    // no frame of the kernel outlives it
+    def run(): Seq[(Long, Long, Long, Long, Long, Long)] = {
+      val edges = symmetric(Seq((101L, 102L), (102L, 103L), (101L, 103L),
+        (104L, 105L), (105L, 106L), (104L, 106L)))
+      val labels = Seq((101L, 10L), (102L, 10L), (103L, 10L),
+        (104L, 20L), (105L, 20L), (106L, 20L)).toDF("node", "lbl")
+      val q = operators.Graph.modularityOf(edges, labels).orderBy($"community")
+      assert(sc.getPersistentRDDs.size > base, "the kernel materialized nothing")
+      q.as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
+    }
+    assert(run() == Seq((10L, 3L, 6L, 6L, 12L, 36L), (20L, 3L, 6L, 6L, 12L, 36L)))
+    val after = settled()
+    assert(after <= base, s"$after persisted RDDs after the kernel, $base before")
+  }
+
   test("q100: a community with zero internal edges keeps a row (negative q_num)") {
     // 4-cycle with ANTI-communities (each label holds the two opposite,
     // non-adjacent nodes): intra_deg = 0 for both, q_num = −16 each —

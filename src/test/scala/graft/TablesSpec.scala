@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,31 +24,6 @@ class TablesSpec extends GraftSpecBase {
       sum(xxhash64(df.columns.map(c => col(s"`$c`")): _*).cast("decimal(38,0)")))
       .head()
     (r.getLong(0), r.getDecimal(1))
-  }
-
-  /** Jobs launched by `body`. Listener events arrive asynchronously, so a
-    * tagged sentinel job runs after `body`: once the listener has seen
-    * it, every job `body` launched has been counted. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(p =>
-            p.getProperty("spark.job.description") == "tables-spec-sentinel"))
-          sentinelSeen.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription("tables-spec-sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener never saw the sentinel job")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   private def canonical(path: String): String = {
